@@ -1089,19 +1089,28 @@ def _banded_embedding_near_dups(
 
     # The group-verify exchange is AQE-coalescible, and AQE's
     # parallelism-first coalescing floors partitions at
-    # minPartitionSize (1 MB): a banded shuffle of a few MB gets
-    # bytes/1MB tasks — fewer than the machine has slots — for a
-    # GEMM-bound stage (r17: shipping float32 instead of float64
-    # halved the shuffle and thereby halved the stage's tasks).  Pin
-    # the exchange to the slot count exactly in that regime: above
-    # slots x 1 MB the condition is false and AQE keeps managing the
-    # exchange (at real volumes it provisions >= slots tasks itself);
-    # below the unit-test stats floor tiny plans stay untouched.
-    slots = df.sparkSession.sparkContext.defaultParallelism
+    # minPartitionSize (1 MB by default): a banded shuffle of a few MB
+    # gets bytes/minPartitionSize tasks — fewer than the machine has
+    # slots — for a GEMM-bound stage (shipping float32 instead of
+    # float64 halved the shuffle and thereby halved the stage's
+    # tasks).  Pin the exchange to the slot count exactly in that
+    # regime: above slots x minPartitionSize the condition is false
+    # and AQE keeps managing the exchange (at real volumes it
+    # provisions >= slots tasks itself); below the unit-test stats
+    # floor tiny plans stay untouched.  Both bounds compare Catalyst's
+    # plan stats, which underestimate the shuffled bytes (see
+    # rebalance_for_cpu), so the pin also fires somewhat above the
+    # real slots x minPartitionSize volume.
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    min_partition_bytes = java_utils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
     if (
         _REBALANCE_MIN_STATS_BYTES
         < _plan_size_bytes(grouped)
-        < slots * (1 << 20)
+        < slots * min_partition_bytes
     ):
         grouped = grouped.repartition(slots, "bucket", "__gi", "__gj")
     pairs = grouped.groupBy("bucket", "__gi", "__gj").applyInPandas(

@@ -10,6 +10,8 @@ regardless of table width, which is what survives a 100 TB scan.
 Returns the reference's results-dict shape:
   {"date": ..., "overall_passed": bool,
    "checks": [{"check": name, "passed": bool, "failures": [...]}, ...]}
+plus "record_counts" ({"total", "fda", "clinical_trials"}) from the
+same aggregation pass.
 """
 
 from __future__ import annotations
@@ -290,10 +292,19 @@ def run_quality_checks(
         {"check": "date_consistency", "passed": not failures, "failures": failures}
     )
 
+    # the aggregation pass's row counts, so a caller that needs them
+    # (pipeline.run) runs no count() of its own; per-source counts need
+    # the data_source column
+    record_counts = {"total": total}
+    if has_source:
+        record_counts["fda"] = m["n_fda"] or 0
+        record_counts["clinical_trials"] = m["n_ct"] or 0
+
     return {
         "date": date or _dt.date.today().isoformat(),
         "overall_passed": all(c["passed"] for c in checks),
         "checks": checks,
+        "record_counts": record_counts,
     }
 
 

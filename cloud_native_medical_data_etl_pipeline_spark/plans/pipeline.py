@@ -16,7 +16,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators import enrich, quality, transforms
 from ..sources import lake
@@ -74,11 +75,12 @@ def run(
         else None
     )
 
-    # transforms feed the enrichment, their own counts, AND the quality
-    # union; the enriched frame feeds two writes and a count — without
-    # the persists each consumer would replay the transform lineage
-    # (and the containment theta-join, the most expensive stage) from
-    # scratch, ~3x the work per run
+    # transforms feed the enrichment AND the quality union; the
+    # enriched frame feeds two writes — without the persists each
+    # consumer would replay the transform lineage (and the containment
+    # theta-join, the most expensive stage) from scratch. The record
+    # counts ride passes that run anyway: an Observation on the
+    # processed write and the quality suite's aggregation pass.
     cached = [df for df in (fda_t, ct_t) if df is not None]
     for df in cached:
         df.persist()
@@ -86,28 +88,39 @@ def run(
         enriched = enrich.enrich(fda_t, ct_t).persist()
         cached.append(enriched)
 
-        lake.write_partitioned(enriched, f"{output_base}/processed", date)
+        written = Observation("enriched_records")
+        lake.write_partitioned(
+            enriched.observe(written, F.count(F.lit(1)).alias("rows")),
+            f"{output_base}/processed",
+            date,
+        )
         lake.write_csv_head(
             enriched, f"{lake.partition_path(output_base + '/summary', date)}"
         )
 
-        result = RunResult(date=date)
-        result.fda_records = fda_t.count() if fda_t is not None else 0
-        result.ct_records = ct_t.count() if ct_t is not None else 0
-        result.enriched_records = enriched.count()
-
+        result = RunResult(date=date, enriched_records=written.get["rows"])
+        # the union of transformed inputs: the shape the reference
+        # quality checker expects (data_quality.py:100-296)
+        parts = [df for df in (fda_t, ct_t) if df is not None]
+        combined = parts[0]
+        for p in parts[1:]:
+            combined = combined.unionByName(p, allowMissingColumns=True)
         if validate:
-            # Quality gate runs on the union of transformed inputs (the
-            # shape the reference checker expects, data_quality.py:100-296).
-            parts = [df for df in (fda_t, ct_t) if df is not None]
-            combined = parts[0]
-            for p in parts[1:]:
-                combined = combined.unionByName(p, allowMissingColumns=True)
             result.quality = quality.run_quality_checks(
                 combined, date, config=quality_config
             )
+            counts = result.quality["record_counts"]
             if not result.quality["overall_passed"]:
                 result.status = "quality_failed"
+        else:
+            counts = combined.agg(
+                F.count_if(F.col("data_source") == "FDA_OpenFDA").alias("fda"),
+                F.count_if(F.col("data_source") == "ClinicalTrials_gov").alias(
+                    "clinical_trials"
+                ),
+            ).first()
+        result.fda_records = counts["fda"]
+        result.ct_records = counts["clinical_trials"]
         return result
     finally:
         for df in cached:

@@ -59,6 +59,16 @@ def get_spark(
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/spark-warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        # Generated-class cache. One pipeline day compiles ~98 distinct
+        # classes, and the query registry needs more; at the default of
+        # 100 entries the LRU evicts a day's classes before the next
+        # day asks for the same source again, so every warm day
+        # recompiled dozens of them with Janino (and the JIT then
+        # compiled the new bytecode). At 1000 a warm day compiles only
+        # the classes whose source inlines the day's
+        # current_timestamp() literal. Static conf: it takes effect in
+        # the first session of a JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

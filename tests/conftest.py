@@ -31,7 +31,9 @@ def spark():
 # so full coverage still runs on every round; the default `pytest
 # tests/` run keeps the correctness core only.  Entries are
 # (file basename, test function name); names that disappear are
-# ignored (the gate can only ever skip, never hide a failure).
+# ignored (the gate can only ever skip, never hide a failure).  A test
+# selected by node id on the command line (``file::test``) is never
+# skipped: the gate trims the default run, not an explicit request.
 _SLOW_TESTS = {
     ("test_assoc_fusion.py", "test_cooccurrence_counts_and_lift"),
     ("test_assoc_fusion.py", "test_cooccurrence_hot_basket_cap"),
@@ -158,6 +160,21 @@ _SLOW_TESTS = {
 }
 
 
+def _selected_by_node_id(item, args, cwd) -> bool:
+    """True when a command-line argument names ``item`` by node id
+    (``path::name``, ``path::name[param]`` or ``path::Class``): a test
+    someone asked for by name runs even when it is slow-gated."""
+    path = os.path.realpath(str(item.fspath))
+    rest = item.nodeid.split("::", 1)[1]
+    for arg in args:
+        arg_path, sep, sel = arg.partition("::")
+        if not sep or os.path.realpath(os.path.join(cwd, arg_path)) != path:
+            continue
+        if rest == sel or rest.startswith((sel + "[", sel + "::")):
+            return True
+    return False
+
+
 def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
@@ -170,5 +187,7 @@ def pytest_collection_modifyitems(config, items):
         name = getattr(item, "originalname", None) or item.name
         if (item.fspath.basename, name) in _SLOW_TESTS:
             item.add_marker(_pytest.mark.slow)
-            if not run_slow:
+            if not run_slow and not _selected_by_node_id(
+                item, config.args, config.invocation_params.dir
+            ):
                 item.add_marker(skip)

@@ -12,6 +12,18 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+# bench scale for the pins whose gates fire only above the unit-test
+# stats floor; defaults to the sf0.1 set next to SF_DIR
+SCALE_SF_DIR = os.environ.get(
+    "PLANS_SCALE_SF_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+)
+
+
+@pytest.fixture
+def scale_sf_dir():
+    if not os.path.isdir(SCALE_SF_DIR):
+        pytest.skip(f"bench-scale test data not found at {SCALE_SF_DIR}")
+    return SCALE_SF_DIR
 
 
 def _executed_plan(df) -> str:
@@ -566,6 +578,36 @@ def test_q20_banded_group_path_ships_stored_vector_type(spark):
     assert "as double" not in plan.split("ArrowEvalPython")[0].lower(), plan
 
 
+def test_q20_group_verify_pin_reads_min_partition_size(spark, scale_sf_dir):
+    """The group-verify exchange is pinned to the slot count only while
+    the banded frame's plan stats stay under slots x AQE's
+    minPartitionSize, read from the session conf: at sf0.1 (~0.9 MB of
+    stats) the default 1 MB floor pins it on any slot count, and a 1 KB
+    floor puts the bound under the unit-test stats floor, so nothing is
+    pinned. Plan-only apart from q20's build-time probes."""
+    import re
+
+    from cloud_native_medical_data_etl_pipeline_spark.operators.dedup import (
+        release,
+    )
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+    def pinned() -> bool:
+        df = entry_mod.queries()["q20_embedding_near_dups"](spark, scale_sf_dir)
+        plan = _final_plan(df)
+        release(df)
+        pin = r"hashpartitioning\(bucket#\d+, .*REPARTITION_BY_NUM"
+        return re.search(pin, plan) is not None
+
+    assert pinned()
+    spark.conf.set(key, "1k")
+    try:
+        assert not pinned()
+    finally:
+        spark.conf.unset(key)
+
+
 def test_q29_fused_asof_is_single_scan(spark):
     """r16 optimization pin: the attribution asof reads events ONCE
     (asof_join_same_source's single conditional projection) — the old
@@ -598,7 +640,7 @@ def test_q37_followups_no_join_no_pair_rows(spark):
     assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
-def test_q37_followups_pins_window_parallelism_at_scale(spark):
+def test_q37_followups_pins_window_parallelism_at_scale(spark, scale_sf_dir):
     """r17 optimization pin: at bench scale (sf0.1, a single-file
     scan) the follow-up windows ride an EXPLICIT repartition(slots,
     user_id) instead of the window's own ENSURE_REQUIREMENTS exchange
@@ -610,14 +652,14 @@ def test_q37_followups_pins_window_parallelism_at_scale(spark):
     no-ops and the plan keeps the plain exchange
     (test_q37_followups_no_join_no_pair_rows covers that shape).
     Plan-only: nothing is executed."""
-    df = entry_mod.queries()["q37_event_followups"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q37_event_followups"](spark, scale_sf_dir)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "Join" not in plan and "Generate" not in plan, plan
 
 
-def test_q30_sessionize_pins_window_parallelism_at_scale(spark):
+def test_q30_sessionize_pins_window_parallelism_at_scale(spark, scale_sf_dir):
     """r17 optimization pin (same lever as q37's): at bench scale the
     sessionization windows + per-session aggregate ride an EXPLICIT
     repartition(slots, user_id) instead of the AQE-coalescible
@@ -625,13 +667,13 @@ def test_q30_sessionize_pins_window_parallelism_at_scale(spark):
     0.53-0.64 s). hash(user_id) satisfies both window specs and the
     (user_id, session_id) aggregate, so the exchange count stays 1 on
     the session path. Plan-only: nothing is executed."""
-    df = entry_mod.queries()["q30_session_stats"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q30_session_stats"](spark, scale_sf_dir)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_q15_rebalances_kernels_at_scale(spark):
+def test_q15_rebalances_kernels_at_scale(spark, scale_sf_dir):
     """r16 optimization pin: at bench scale (sf0.1, a single-file /
     single-row-group scan) q15 spreads the text across all slots
     before the HOF kernels run — a round-robin exchange plus a cache
@@ -644,7 +686,7 @@ def test_q15_rebalances_kernels_at_scale(spark):
         release,
     )
 
-    df = entry_mod.queries()["q15_text_stats"](spark, "/root/testdata/sf0.1")
+    df = entry_mod.queries()["q15_text_stats"](spark, scale_sf_dir)
     plan = _executed_plan(df)
     assert "RoundRobinPartitioning" in plan, plan
     assert "InMemoryRelation" in plan, plan
