@@ -56,9 +56,9 @@ def md5_uniform_py(key: object, salt: str = "") -> float:
 
 _MAGIC = 6755399441055744.0  # 1.5 * 2^52
 
-# Largest training/selection pool any driver-side engine in this family
-# will gather without the caller explicitly opting in (a sample cap for
-# the trainers, a hard refusal for selection — see each call site).
+# Largest training pool `quantize.pq_train`'s driver-side engine will
+# gather without the caller explicitly opting into a sample cap (see
+# the call site).
 DRIVER_TRAIN_CAP = 100_000
 
 
@@ -319,84 +319,6 @@ def kcenter_np(
             np.isnan(nd), dmin, np.where(np.isnan(dmin), nd, np.minimum(dmin, nd))
         )
     return selected
-
-
-def _cosine_matrix(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(n, k) cosines with `functions.vectors.cosine`'s EXACT
-    arithmetic: dot and both squared norms are left-to-right in-order
-    folds (0 + t₀ + t₁ + …, the F.aggregate association), then
-    cos = dot / (sqrt(nv) · sqrt(nc)) — multiply norms first, divide
-    second, every op IEEE-double in both engines.  Zero denominators
-    (Spark's non-ANSI divide-by-zero → NULL) come back as NaN lanes
-    for the caller to exclude, mirroring array_max's null-skipping."""
-    n, k, dim = X.shape[0], C.shape[0], X.shape[1]
-    dot = np.zeros((n, k))
-    nv = np.zeros(n)
-    nc = np.zeros(k)
-    t = np.empty((n, k))
-    for d in range(dim):
-        np.multiply(X[:, d, None], C[None, :, d], out=t)
-        dot += t
-        nv += X[:, d] * X[:, d]
-        nc += C[:, d] * C[:, d]
-    denom = np.sqrt(nv)[:, None] * np.sqrt(nc)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = dot / denom
-    cos[np.broadcast_to(denom == 0, cos.shape)] = np.nan
-    return cos
-
-
-def ivf_train_np(
-    keys: list,
-    X: np.ndarray,
-    num_cells: int,
-    iters: int,
-    round_dp: int,
-) -> list[list[float]]:
-    """Driver-side replica of `similarity.train_ivf_centroids`'s
-    in-engine loop, same contract as `pq_train_np`: key-sort (Spark's
-    orderBy), init = the ``num_cells`` smallest-key vectors, each
-    Lloyd iteration assigns by max-cosine (first-occurrence argmax ==
-    the expression path's array_position lowest-index tiebreak; rows
-    or centroids with zero norm are excluded exactly like the NULL
-    cosines Spark's divide-by-zero produces) and takes per-(cell,
-    dim) means rounded to ``round_dp`` with Spark's exact F.round
-    semantics.  Cells that lose all members keep their previous
-    centroid.  The summation ORDER under the mean round is the same
-    tolerance-level channel the module doc calls out for pq_train_np;
-    NaN-element vectors are likewise tolerance-level (Spark ranks NaN
-    greatest, numpy's argmax picks the first NaN lane).  Input is the
-    gathered (keys, float64 matrix) pool, the `kcenter_np`
-    convention."""
-    n = len(keys)
-    if n == 0:
-        return []
-    order = sorted(range(n), key=keys.__getitem__)
-    X = np.asarray(X, dtype=np.float64)[order]
-    cents = [[float(x) for x in X[i]] for i in range(min(num_cells, X.shape[0]))]
-    for _ in range(iters):
-        C = np.asarray(cents, dtype=np.float64)
-        cos = _cosine_matrix(X, C)
-        valid = ~np.isnan(cos)
-        masked = np.where(valid, cos, -np.inf)
-        has_cell = valid.any(axis=1)
-        codes = np.argmax(masked, axis=1)
-        new: list[list[float]] = []
-        for c in range(len(cents)):
-            members = has_cell & (codes == c)
-            if members.any():
-                new.append(
-                    [
-                        float(x)
-                        for x in round_spark(
-                            X[members].mean(axis=0), round_dp
-                        )
-                    ]
-                )
-            else:
-                new.append(list(cents[c]))
-        cents = new
-    return cents
 
 
 def pq_train_np(

@@ -244,7 +244,7 @@ def _bpe_encode_udf(merges: list[tuple[str, str]]):
     the scale path for realistic merge counts (30k-50k rules).
 
     The merge-RANK table ships once per worker inside the UDF closure
-    (broadcast-the-model, the `quantize._pq_code_udf` pattern) and
+    (broadcast-the-model: the closure is pickled with the UDF) and
     each word encodes by the standard greedy-minimum-rank loop: find
     the lowest-ranked adjacent pair present, rewrite ALL its
     occurrences left-to-right non-overlapping (exactly `_merge_fold`'s

@@ -117,84 +117,18 @@ def train_logreg(
     iterations: int = 32,
     sigma_dp: int = 10,
     grad_dp: int = 8,
-    engine: str = "sql",
-    max_train_rows: int = 1_000_000,
 ) -> list[float]:
-    """Full-batch gradient descent; returns ``[bias, w1, ..., wd]``.
+    """Full-batch gradient descent; returns ``[bias, w1, ..., wd]`` —
+    the in-engine loop the q135 oracle replays.
 
     Each step is one aggregate producing d+1 doubles (map-side
     combine, constant shuffle bytes in corpus size) — grad_j =
     round(mean((sigma_i - y_i) * x_ij), grad_dp).  The feature frame
     should be cached/localCheckpoint-ed by the caller when iterating
     over a derived plan (`quality_classifier_scores` does).
-
-    ``engine="numpy"`` collapses the ``iterations`` driver
-    round-trips: gather the (capped) feature frame once and run GD
-    driver-side with the same fold order, exact F.round semantics,
-    and exact power-of-two update.  UNLIKE the codebook/centroid
-    trainers this is NOT promised bit-equal — two channels are
-    tolerance-level at the rounding grain (numpy's vectorized exp vs
-    JVM exp can differ by ulps before the sigma_dp round; np.mean's
-    pairwise sum vs F.avg's partition fold before the grad_dp round)
-    — so the DEFAULT stays "sql", the spec the q135 oracle replays,
-    and numpy is the opt-in lever for many-step training at cluster
-    job latencies (unit-pinned equal on the driver corpus).  Pools
-    larger than ``max_train_rows`` refuse under numpy ("auto" is not
-    offered here precisely because equality is tolerance-level — the
-    caller must choose eyes-open).
     """
     if lr <= 0 or (math.log2(lr) != int(math.log2(lr))):
         raise ValueError(f"lr must be a positive power of two, got {lr}")
-    if engine not in ("sql", "numpy"):
-        raise ValueError(
-            f"engine must be 'sql' or 'numpy', got {engine!r}"
-        )
-    if engine == "numpy":
-        import numpy as np
-
-        from ._kmeans_np import round_spark
-
-        # bounded over-cap gate (the pq_train ADVICE r11 pattern): the
-        # refusal must fire BEFORE collecting, but only needs "more
-        # than the cap?" — read at most max_train_rows+1 rows instead
-        # of a full count; the exact n comes free from the Arrow table
-        if feat.limit(max_train_rows + 1).count() > max_train_rows:
-            raise ValueError(
-                f"train_logreg(engine='numpy') refuses a feature frame "
-                f"over max_train_rows={max_train_rows} rows: hash-sample "
-                "the feature frame (train_sample_mod) or use engine='sql'"
-            )
-        tbl = feat.select(
-            *[F.col(c).cast("double") for c in features],
-            F.col(label).cast("double").alias("__y"),
-        ).toArrow()
-        n = tbl.num_rows
-        cols = [
-            tbl.column(i).to_numpy(zero_copy_only=False)
-            for i in range(len(features))
-        ]
-        yv = tbl.column(len(features)).to_numpy(zero_copy_only=False)
-        w = [0.0] * (len(features) + 1)
-        if n == 0:
-            return w
-        for _ in range(iterations):
-            z = np.full(n, w[0])
-            for j, c in enumerate(cols):
-                z = z + w[j + 1] * c
-            with np.errstate(over="ignore"):
-                sig = round_spark(1.0 / (1.0 + np.exp(-z)), sigma_dp)
-            err = sig - yv
-            g = [float(round_spark(np.array([err.mean()]), grad_dp)[0])]
-            for c in cols:
-                g.append(
-                    float(
-                        round_spark(
-                            np.array([(err * c).mean()]), grad_dp
-                        )[0]
-                    )
-                )
-            w = [wi - lr * gi for wi, gi in zip(w, g)]
-        return w
     from ._iterate import iterate_fixed
 
     def step(w: list[float]):
@@ -248,14 +182,9 @@ def quality_classifier_scores(
     lr: float = 2.0,
     iterations: int = 32,
     train_sample_mod: int | None = None,
-    engine: str = "sql",
 ) -> DataFrame:
     """End-to-end: featurize -> train (GD, driver sees only d+1
     scalars per step) -> score every document with the learned model.
-    ``engine`` is `train_logreg`'s executor switch ("numpy" collapses
-    the per-step round-trips; "sql" — the default and the q135 oracle
-    spec — keeps training in-engine; see train_logreg for the
-    tolerance contract).
 
     The feature frame is localCheckpoint-ed once so the `iterations`
     gradient aggregates and the final scoring pass all reuse the same
@@ -278,5 +207,5 @@ def quality_classifier_scores(
         from ._sampling import hash_sample
 
         train = hash_sample(feat, "key", train_sample_mod)
-    w = train_logreg(train, lr=lr, iterations=iterations, engine=engine)
+    w = train_logreg(train, lr=lr, iterations=iterations)
     return score_logreg(feat, w)

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -330,8 +330,6 @@ def pii_report(
     regexp_replace chain per pattern, all codegen) + one group_col
     aggregate — the q113 Gopher-flags scale shape.
     """
-    from pyspark.sql import functions as F
-
     from ..functions.text import PII_PATTERNS
     from ._common import col_ref
 

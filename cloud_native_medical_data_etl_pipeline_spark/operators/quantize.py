@@ -518,45 +518,16 @@ def _refill_empty_cells(
     return books
 
 
-def _pq_code_udf(codebooks: list[list[list[float]]]):
-    """Arrow-vectorized codeword assignment: per batch and subspace,
-    distances to all k codewords accumulate DIM BY DIM (vectorized
-    over rows×codewords), so each element's sum is the same
-    left-to-right fold as `_fold_sq` — then round 9dp and
-    first-occurrence argmin.  EXACTLY the expression path's codes
-    (`_kmeans_np._d2_matrix`'s arithmetic, unit-pinned), at BLAS speed
-    instead of m·k·dsub interpreted HOF ops per row — the per-row cost
-    that makes the expression path an ingest bottleneck at k=256."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import round_spark
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+def _pq_code_expr(
+    books: list[list[list[float]]], code_col: str
+) -> Column:
+    """The m-codeword-id array expression over ``code_col``: one
+    literal distance battery and argmin per subspace."""
     m = len(books)
-    dsub = books[0].shape[1]
-
-    def _codes_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.array(list(vs), dtype=np.float64)
-        codes = np.empty((len(M), m), dtype=np.int32)
-        for s, B in enumerate(books):
-            X = M[:, s * dsub : (s + 1) * dsub]
-            acc = np.zeros((len(M), B.shape[0]))
-            for d in range(dsub):
-                t = X[:, d, None] - B[None, :, d]
-                acc = acc + t * t
-            # round_spark, not np.round: F.round is HALF_UP over the
-            # decimal repr and the expr path's argmin must not flip on
-            # decimal-midpoint distances (dyadic inputs reach them)
-            codes[:, s] = np.argmin(round_spark(acc, 9), axis=1)
-        return pd.Series([row.tolist() for row in codes])
-
-    # real-class annotations: `from __future__ import annotations`
-    # stringifies inline ones, which pandas_udf rejects
-    _codes_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_codes_fn, "array<int>")
+    subs = _sub_slices(code_col, m, len(books[0][0]))
+    return F.array(
+        *[_assign_code(subs[s], books[s]) for s in range(m)]
+    )
 
 
 def pq_encode(
@@ -564,37 +535,15 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    impl: str = "expr",
 ) -> DataFrame:
     """``(key, pq_code array<int>)`` — m codeword ids per vector, one
     map pass, codebooks inlined as literals.  At dim=64, m=8, k<=256
-    the stored code is 8 bytes vs 256 for float32: 32x smaller.
-
-    ``impl="arrow"`` swaps the per-row expression batteries for the
-    vectorized `_pq_code_udf` kernel — identical codes by construction
-    (same fold order, same roundings, same argmin tiebreak;
-    unit-pinned), ~two orders less per-row cost at k=256 — the encode
-    lever for the one full-corpus pass a PQ build cannot avoid.
-    ``"expr"`` stays the default: zero Python in the plan, and the
-    byte-stable form the DuckDB oracles replay."""
-    if impl not in ("expr", "arrow"):
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    clean = df.where(F.col(vec_col).isNotNull())
-    if impl == "arrow":
-        return clean.select(
-            F.col(key_col).alias("key"),
-            _pq_code_udf(codebooks)(
-                _as_double(vec_col)
-            ).alias("pq_code"),
-        )
-    subs = _sub_slices(vec_col, m, dsub)
-    return clean.select(
+    the stored code is 8 bytes vs 256 for float32: 32x smaller.  Zero
+    Python in the plan, and the byte-stable form the DuckDB oracles
+    replay."""
+    return df.where(F.col(vec_col).isNotNull()).select(
         F.col(key_col).alias("key"),
-        F.array(
-            *[_assign_code(subs[s], codebooks[s]) for s in range(m)]
-        ).alias("pq_code"),
+        _pq_code_expr(codebooks, vec_col).alias("pq_code"),
     )
 
 
@@ -696,39 +645,10 @@ def _assign_cell_l2(
     return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 
 
-def _cell_l2_udf(centroids: list[list[float]]):
-    """Arrow-vectorized `_assign_cell_l2`: `_kmeans_np._d2_matrix`'s
-    dim-by-dim accumulation reproduces the expression path's
-    left-to-right fold and 9dp rounding EXACTLY, and numpy's
-    first-occurrence argmin is the same lowest-index tiebreak — so
-    cell ids are identical by construction (unit-pinned), at BLAS
-    speed instead of num_cells·dim interpreted ops per row."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import _d2_matrix
-
-    cents = [list(map(float, c)) for c in centroids]
-
-    def _cell_fn(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype="int32")
-        M = np.array(list(vs), dtype=np.float64)
-        return pd.Series(
-            np.argmin(_d2_matrix(M, cents), axis=1).astype("int32")
-        )
-
-    # real-class annotations: `from __future__ import annotations`
-    # stringifies inline ones, which pandas_udf rejects
-    _cell_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_cell_fn, "int")
-
-
 def _ivfpq_code_source(
     clean: DataFrame,
     centroids: list[list[float]],
     residual: bool,
-    encode_impl: str,
     vec_col: str,
     key_col: str,
 ) -> tuple[DataFrame, str]:
@@ -737,10 +657,7 @@ def _ivfpq_code_source(
     centroid(cell) for residual indexes.  Shared by the index build
     and the incremental append so membership/residual semantics cannot
     drift between them."""
-    if encode_impl == "arrow":
-        cell = _cell_l2_udf(centroids)(_as_double(vec_col))
-    else:
-        cell = _assign_cell_l2(vec_col, centroids)
+    cell = _assign_cell_l2(vec_col, centroids)
     if residual:
         cent_arr = F.array(*[_lit_subvec(c) for c in centroids])
         rvec = F.zip_with(
@@ -766,21 +683,6 @@ def _ivfpq_code_source(
     )
 
 
-def _ivfpq_code_expr(
-    books: list[list[list[float]]], code_col: str, encode_impl: str
-) -> Column:
-    """The m-codeword-id array expression over ``code_col`` — the
-    literal-battery form or the vectorized Arrow kernel (identical
-    codes; see `pq_encode`)."""
-    if encode_impl == "arrow":
-        return _pq_code_udf(books)(_as_double(code_col))
-    m = len(books)
-    subs = _sub_slices(code_col, m, len(books[0][0]))
-    return F.array(
-        *[_assign_code(subs[s], books[s]) for s in range(m)]
-    )
-
-
 def build_ivfpq_index(
     df: DataFrame,
     path: str,
@@ -794,7 +696,6 @@ def build_ivfpq_index(
     train_sample_mod: int | None = None,
     residual: bool = False,
     engine: str = "auto",
-    encode_impl: str = "expr",
 ) -> None:
     """Materialize the IVF-PQ index: the 100 TB ANN layout.
 
@@ -869,16 +770,8 @@ def build_ivfpq_index(
     )
     if not centroids:
         raise ValueError("cannot build an IVF-PQ index over an empty corpus")
-    if encode_impl not in ("expr", "arrow"):
-        raise ValueError(
-            f"encode_impl must be 'expr' or 'arrow', got {encode_impl!r}"
-        )
-    # encode_impl governs BOTH per-row stages of the one unavoidable
-    # full-corpus pass: cell membership (num_cells·dim ops/row) and
-    # codeword assignment (m·k·dsub ops/row) — identical outputs
-    # either way (unit-pinned; see _cell_l2_udf / _pq_code_udf)
     code_src, code_col = _ivfpq_code_source(
-        clean, centroids, residual, encode_impl, vec_col, key_col
+        clean, centroids, residual, vec_col, key_col
     )
     books = pq_train(
         code_src,
@@ -892,7 +785,7 @@ def build_ivfpq_index(
     )
     code_src.select(
         "key",
-        _ivfpq_code_expr(books, code_col, encode_impl).alias("pq_code"),
+        _pq_code_expr(books, code_col).alias("pq_code"),
         "cell_id",
     ).write.mode("overwrite").partitionBy("cell_id").parquet(path)
     spark = df.sparkSession
@@ -943,7 +836,6 @@ def append_to_ivfpq_index(
     path: str,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    encode_impl: str = "expr",
 ) -> None:
     """Incremental IVF-PQ maintenance: encode a delta batch against the
     index's STORED centroids and codebooks and append it to its cell
@@ -963,21 +855,17 @@ def append_to_ivfpq_index(
     batch appends duplicate rows — callers needing exactly-once wrap
     this with the key anti-join guard the streaming-ingest module
     uses."""
-    if encode_impl not in ("expr", "arrow"):
-        raise ValueError(
-            f"encode_impl must be 'expr' or 'arrow', got {encode_impl!r}"
-        )
     cents, books, residual = _load_ivfpq_sidecars(spark, path)
     centroids = [cents[i] for i in sorted(cents)]
     clean = batch.where(
         F.col(vec_col).isNotNull() & F.col(key_col).isNotNull()
     )
     code_src, code_col = _ivfpq_code_source(
-        clean, centroids, residual, encode_impl, vec_col, key_col
+        clean, centroids, residual, vec_col, key_col
     )
     code_src.select(
         "key",
-        _ivfpq_code_expr(books, code_col, encode_impl).alias("pq_code"),
+        _pq_code_expr(books, code_col).alias("pq_code"),
         "cell_id",
     ).write.mode("append").partitionBy("cell_id").parquet(path)
 

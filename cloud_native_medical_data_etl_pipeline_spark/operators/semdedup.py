@@ -45,7 +45,6 @@ def semantic_dedup_keep(
     num_cells: int = 16,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    assign_impl: str = "expr",
 ) -> DataFrame:
     """Keep-list after in-cell semantic near-dup removal: one row per
     surviving ``key_col``. Deterministic: centroid set, argmax ties,
@@ -66,7 +65,7 @@ def semantic_dedup_keep(
     ]
     if not centroids:
         return df.select(key_col)  # no usable vectors: keep everything
-    assigned = assign_cells(df, centroids, vec_col, impl=assign_impl)
+    assigned = assign_cells(df, centroids, vec_col)
     pairs = embedding_near_dups(
         assigned,
         vec_col=vec_col,

@@ -79,83 +79,14 @@ def cosine_topk(
     k: int = 10,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to a literal query vector.
     Deterministic tie-break on key. Returns (key, cosine) columns named
-    (<key_col>, cosine).
-
-    ``impl="arrow"`` swaps the per-row interpreted HOF cosine for the
-    `_cosine_lit_arrow` kernel (exact fold replay + Spark-exact
-    rounding — bit-identical scores): this is THE full-corpus scan of
-    exact retrieval, so at 10⁹ rows the ~3·dim interpreted ops per
-    row are the bottleneck the kernel removes; the final top-k stays
-    Spark's TakeOrdered either way (per-partition heap + driver
-    merge, no shuffle)."""
-    if impl not in ("expr", "arrow"):
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
-    if impl == "arrow":
-        score = _cosine_lit_arrow(query_vec, 6)(
-            F.col(vec_col).cast("array<double>")
-        )
-    else:
-        score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
+    (<key_col>, cosine).  The final top-k is Spark's TakeOrdered
+    (per-partition heap + driver merge, no shuffle)."""
+    score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
     scored = df.select(F.col(key_col), score.alias("cosine"))
     return scored.orderBy(F.col("cosine").desc(), F.col(key_col).asc()).limit(k)
-
-
-def _cosine_lit_arrow(query_vec: list[float], dp: int):
-    """Arrow kernel for ``round(cosine(vec, <literal query>), dp)`` —
-    `cosine_topk(impl="arrow")`'s scan lever.  Exact replica of
-    `vectors.cosine` against a constant query: dot and both squared
-    norms fold left-to-right per dimension, cos = dot /
-    (sqrt(nv)·sqrt(nq)), zero denominators → NULL (Spark's non-ANSI
-    divide), rounding via `_kmeans_np.round_spark`; NULL vectors
-    null-propagate."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import round_spark
-
-    q = [float(x) for x in query_vec]
-    nq = 0.0
-    for x in q:
-        nq = nq + x * x
-    import math as _math
-
-    nq_root = _math.sqrt(nq)
-
-    def _fn(vs):
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        valid = np.array([v is not None for v in vs], dtype=bool)
-        out = pd.Series([None] * n, dtype="object")
-        if valid.any():
-            M = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vs[valid]]
-            )
-            dot = np.zeros(M.shape[0])
-            nv = np.zeros(M.shape[0])
-            for d in range(M.shape[1]):
-                dot = dot + M[:, d] * q[d]
-                nv = nv + M[:, d] * M[:, d]
-            denom = np.sqrt(nv) * nq_root
-            # zero denom → NULL (non-ANSI divide); non-finite (a NULL
-            # element's NaN) → NULL, like the expression fold
-            ok = np.isfinite(denom) & (denom != 0)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = round_spark(dot / np.where(ok, denom, 1.0), dp)
-            ok &= np.isfinite(cos)
-            res = np.full(int(valid.sum()), None, dtype=object)
-            res[ok] = cos[ok]
-            o = out.to_numpy()
-            o[valid] = res
-            out = pd.Series(o, dtype="object")
-        return out
-
-    _fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_fn, "double")
 
 
 def train_ivf_centroids(
@@ -165,45 +96,18 @@ def train_ivf_centroids(
     key_col: str = "vec_id",
     iters: int = 2,
     round_dp: int = 6,
-    assign_impl: str = "expr",
-    engine: str = "sql",
     max_train_rows: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic Lloyd's k-means for IVF centroids.
-
-    ``engine`` picks the executor for the SAME algorithm, the
-    `quantize.pq_train` contract (unit-pinned identical centroids):
-
-    * ``"sql"`` (default): the in-engine loop below — the cross-engine
-      SPEC the q23 oracle unrolls CTE-for-CTE.  The default stays on
-      the spec executor for the same reason `train_logreg`'s does: the
-      numpy replica carries two documented tolerance-level channels
-      (F.avg's partition fold vs np.mean's pairwise sum under the
-      rounded mean; NaN-element argmax ordering), so the oracle-pinned
-      path must not ride them by default (ADVICE r10).
-      ``assign_impl="gemm"`` vectorizes its per-iteration assignment
-      scan (see `assign_cells`) — the in-engine lever at large
-      num_cells.
-    * ``"numpy"``: collect the training frame ONCE and run the Lloyd
-      loop driver-side (`_kmeans_np.ivf_train_np`) — O(1) Spark jobs
-      instead of iters·2 per-iteration round-trips; centroids are
-      metadata by construction.  REFUSES a pool larger than
-      `_kmeans_np.DRIVER_TRAIN_CAP` unless ``max_train_rows`` opts
-      into sampling.  ``assign_impl`` is moot here.
-    * ``"auto"``: numpy while the (possibly capped) pool fits
-      DRIVER_TRAIN_CAP, falling back to the distributed sql loop on
-      the FULL pool above it — never a silent sample, so every engine
-      choice computes exactly what the oracle spec says
-      (`kcenter_select`'s fallback contract).
+    """Deterministic Lloyd's k-means for IVF centroids — the in-engine
+    loop below is the SPEC the q23 oracle unrolls CTE-for-CTE.
 
     ``max_train_rows`` is an OPT-IN cap (default None = train on the
     whole pool, the q23/q126 oracle spec): when set and the pool is
     larger, the deterministic 1/ceil(n/cap) md5 key-sample is applied
-    before engine dispatch, so both engines train on identical frames.
-    Sampling changes the trained centroids by construction — that is
-    the caller's explicit scale/fidelity trade, never a default
-    (ADVICE r10: the previous 100k default silently diverged from the
-    oracle above 100k rows).
+    before training.  Sampling changes the trained centroids by
+    construction — that is the caller's explicit scale/fidelity trade,
+    never a default (ADVICE r10: the previous 100k default silently
+    diverged from the oracle above 100k rows).
 
     Fully reproducible by construction: the init is the `num_cells`
     smallest-key vectors (a seedless deterministic sample, the same
@@ -215,19 +119,15 @@ def train_ivf_centroids(
     oracle-reproducible in plain SQL (unrolled CTEs, one per
     iteration — see Q23_SQL in __spark_entry__.py).
 
-    Scale shape (sql engine): each iteration is one distributed
-    assignment map pass (centroids inlined as literals) plus one
-    posexplode + (cell, dim)-keyed avg — map-side combinable,
-    `num_cells * dim` output rows — and collects only that tiny grid.
+    Scale shape: each iteration is one distributed assignment map
+    pass (centroids inlined as literals) plus one posexplode +
+    (cell, dim)-keyed avg — map-side combinable, `num_cells * dim`
+    output rows — and collects only that tiny grid.
     Cells that lose all members keep their previous centroid (k never
     shrinks).  Cosine assignment, so means are taken over raw
     vectors; for unit vectors this is spherical k-means without the
     re-normalize step.
     """
-    if engine not in ("auto", "numpy", "sql"):
-        raise ValueError(
-            f"engine must be 'auto', 'numpy', or 'sql', got {engine!r}"
-        )
     from ._iterate import iterate_fixed
 
     # NULL embeddings are excluded BEFORE the smallest-key init: NULL
@@ -236,7 +136,6 @@ def train_ivf_centroids(
     clean = df.where(
         F.col(vec_col).isNotNull() & F.col(key_col).isNotNull()
     )
-    exact_n = None  # pool size, when the branch below already measured it
     if max_train_rows is not None:
         n = clean.count()
         if n > max_train_rows:
@@ -245,40 +144,6 @@ def train_ivf_centroids(
             clean = hash_sample(
                 clean, key_col, -(-n // max_train_rows)
             )
-        else:
-            exact_n = n  # unsampled: the count IS the pool size
-    if engine != "sql":
-        from ._kmeans_np import DRIVER_TRAIN_CAP
-
-        # over-cap gate without a full scan (the pq_train ADVICE r11
-        # fix, applied symmetrically): the dispatch only needs "more
-        # than CAP?", so scan at most CAP+1 rows — or reuse the exact
-        # count the max_train_rows branch took on an unsampled pool
-        if exact_n is not None:
-            over_cap = exact_n > DRIVER_TRAIN_CAP
-        else:
-            over_cap = (
-                clean.limit(DRIVER_TRAIN_CAP + 1).count() > DRIVER_TRAIN_CAP
-            )
-        if over_cap:
-            if engine == "numpy":
-                raise ValueError(
-                    f"train_ivf_centroids(engine='numpy') refuses a "
-                    f"training pool over {DRIVER_TRAIN_CAP} rows: "
-                    "pass max_train_rows to opt into the deterministic "
-                    "hash-sample, or use engine='sql'/'auto'"
-                )
-            engine = "sql"  # auto: distributed loop on the full pool
-    if engine != "sql":
-        from ._kmeans_np import ivf_train_np
-
-        keys, X = _gather_vectors(
-            clean.select(
-                F.col(key_col).alias("key"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-            )
-        )
-        return ivf_train_np(keys, X, num_cells, iters, round_dp)
     init = [
         [float(x) for x in r[1]]
         for r in clean.select(key_col, vec_col)
@@ -290,7 +155,7 @@ def train_ivf_centroids(
 
     def step(cents: list[list[float]]):
         return (
-            assign_cells(clean, cents, vec_col, impl=assign_impl)
+            assign_cells(clean, cents, vec_col)
             .select(
                 "cell_id",
                 F.posexplode(F.col(vec_col).cast("array<double>")).alias(
@@ -323,7 +188,6 @@ def ivf_topk(
     num_cells: int = 16,
     nprobe: int = 4,
     train_iters: int = 2,
-    impl: str = "expr",
 ) -> DataFrame:
     """IVF approximate top-k.
 
@@ -333,28 +197,18 @@ def ivf_topk(
     with its nearest cell (centroids broadcast as literals); queries
     touch only `nprobe` cells, i.e. ~nprobe/num_cells of the data.
     With the table written partitioned by cell_id, partition pruning
-    makes that literal.  ``impl`` feeds BOTH per-row passes the
-    family's vectorized kernels: the assignment map pass takes
-    `assign_cells(impl="gemm")` and the probe scan the `cosine_topk`
-    arrow kernel — bit-identical results either way.
+    makes that literal.
     """
-    if impl not in ("expr", "gemm"):
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
     centroids = train_ivf_centroids(
         df, num_cells, vec_col, key_col, iters=train_iters
     )
-    assigned = assign_cells(df, centroids, vec_col, impl=impl)
+    assigned = assign_cells(df, centroids, vec_col)
     probe_order = sorted(
         range(len(centroids)),
         key=lambda i: -_py_cosine(query_vec, centroids[i]),
     )
     probes = probe_order[:nprobe]
-    if impl == "gemm":
-        score = _cosine_lit_arrow(query_vec, 6)(
-            F.col(vec_col).cast("array<double>")
-        )
-    else:
-        score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
+    score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
     return (
         assigned.where(F.col("cell_id").isin(probes))
         .select(F.col(key_col), score.alias("cosine"))
@@ -367,25 +221,11 @@ def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    impl: str = "expr",
 ) -> DataFrame:
     """Tag each row with the id of its max-cosine centroid, entirely
     with column expressions (centroids inlined as literals — they are
-    small by construction).
-
-    ``impl="gemm"`` is the ingest-scale path: higher-order-function
-    expressions evaluate INTERPRETED per element, so the default costs
-    ~num_cells·dim interpreted ops per row — fine at 16 cells, the
-    dominant per-ingest cost at a 1024-cell index over 10⁹ rows.  The
-    gemm variant runs one Arrow-batched (rows × dim)·(dim × cells)
-    float64 matmul per batch (the dedup.py sign-LSH kernel's shape) —
-    same lowest-index argmax tiebreak, centroids pre-normalized so the
-    dot ranking equals the cosine ranking row-wise (norm(row) > 0 is a
-    positive per-row constant; zero-norm rows get NULL cell_id, the
-    expression path's null-propagation).  BLAS-vectorized ≈ two orders
-    faster per row; ulp-level differences vs the interpreted fold can
-    flip only exact near-ties (unit-pinned equal on the driver
-    embeddings).
+    small by construction).  NULL and zero-norm vectors get a NULL
+    cell_id (their cosines are NULL).
 
     Similarities go into ONE array column, computed by a single cosine
     lambda `transform`-ed over the constant-folded literal centroid
@@ -396,63 +236,12 @@ def assign_cells(
     same defect as the PQ k=256 ceiling). array_position(max) keeps
     the lowest index on ties, same as a strict-> when chain.
     """
-    if impl == "gemm":
-        return _assign_cells_gemm(df, centroids, vec_col)
-    if impl != "expr":
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
     cents = F.array(*[_lit_vec(c) for c in centroids])
     sims = F.transform(cents, lambda c: V.cosine(F.col(vec_col), c))
     return df.withColumn(
         "cell_id",
         (F.array_position(sims, F.array_max(sims)) - 1).cast("int"),
     )
-
-
-def _assign_cells_gemm(
-    df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Arrow-vectorized cell assignment (see `assign_cells` impl
-    switch): one float64 GEMM against the pre-normalized centroid
-    matrix per batch, first-occurrence argmax (numpy's rule == the
-    expression path's lowest-index tiebreak)."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0] = 1.0  # zero-norm centroid: cosine 0/0 → keep dot=0
-    Cn = (C / cn[:, None]).T  # (dim, cells)
-
-    def _cell_fn(vs):
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype="Int32")
-        # NULL embeddings must survive with NULL cell_id (the
-        # assign_cells contract semdedup relies on) — mask them out
-        # BEFORE the matmul; np.array over a batch containing None
-        # rows would raise instead of null-propagating.  Rows whose
-        # norm is 0 or non-finite (a NULL/NaN element) go NULL too,
-        # the expression path's cosine null-propagation.
-        valid = np.array([v is not None for v in vs], dtype=bool)
-        out = pd.Series([pd.NA] * n, dtype="Int32")
-        if valid.any():
-            M = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vs[valid]]
-            )
-            ids = pd.array(
-                np.argmax(M @ Cn, axis=1).astype("int32"), dtype="Int32"
-            )
-            norms = np.linalg.norm(M, axis=1)
-            ids[~(np.isfinite(norms) & (norms > 0))] = pd.NA
-            out[valid] = ids
-        return out
-
-    # real-class annotations: `from __future__ import annotations`
-    # stringifies inline ones, which pandas_udf rejects (the dedup.py
-    # GEMM kernel's convention)
-    _cell_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    _cell = F.pandas_udf(_cell_fn, "int")
-    return df.withColumn("cell_id", _cell(F.col(vec_col).cast("array<double>")))
 
 
 def build_ivf_index(
@@ -462,7 +251,6 @@ def build_ivf_index(
     key_col: str = "vec_id",
     num_cells: int = 16,
     train_iters: int = 2,
-    assign_impl: str = "expr",
 ) -> None:
     """Materialize the IVF index as a cell-partitioned parquet table.
 
@@ -480,14 +268,9 @@ def build_ivf_index(
     # would otherwise land in a NULL partition directory
     clean = df.where(F.col(vec_col).isNotNull())
     centroids = train_ivf_centroids(
-        clean, num_cells, vec_col, key_col, iters=train_iters,
-        assign_impl=assign_impl,
+        clean, num_cells, vec_col, key_col, iters=train_iters
     )
-    # assign_impl="gemm" is the big-corpus lever: the assignment pass
-    # is the one full-corpus scan here, and the Arrow GEMM kernel is
-    # ~65x the interpreted expression battery at 1024 cells
-    # (unit-pinned identical assignments; see assign_cells)
-    assigned = assign_cells(clean, centroids, vec_col, impl=assign_impl)
+    assigned = assign_cells(clean, centroids, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(path)
     spark = df.sparkSession
     cdf = spark.createDataFrame(
@@ -503,7 +286,6 @@ def append_to_ivf_index(
     path: str,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    assign_impl: str = "expr",
 ) -> None:
     """Incremental IVF maintenance: assign a delta batch of vectors to
     the index's EXISTING trained centroids and append them to their
@@ -543,7 +325,6 @@ def append_to_ivf_index(
         batch.select(*data_cols).where(F.col(vec_col).isNotNull()),
         centroids,
         vec_col,
-        impl=assign_impl,
     )
     assigned.write.mode("append").partitionBy("cell_id").parquet(path)
 
@@ -556,18 +337,11 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     key_col: str = "vec_id",
     nprobe: int = 4,
-    impl: str = "expr",
 ) -> DataFrame:
     """Query a build_ivf_index table: rank cells by centroid cosine on
     the driver (centroid set is tiny), then scan ONLY the nprobe
     nearest cell partitions — the cell_id filter is a partition-pruning
-    predicate, so unprobed cells cost zero IO.  ``impl="arrow"`` swaps
-    the probe scan's interpreted HOF cosine for the `cosine_topk`
-    kernel (bit-identical scores) — the same lever, applied after the
-    pruning has already cut the scan to nprobe/num_cells of the
-    corpus."""
-    if impl not in ("expr", "arrow"):
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
+    predicate, so unprobed cells cost zero IO."""
     centroids = {
         r["cell_id"]: [float(x) for x in r["centroid"]]
         for r in spark.read.parquet(f"{path}/_ivf_centroids").collect()
@@ -576,12 +350,7 @@ def ivf_topk_indexed(
         centroids, key=lambda i: -_py_cosine(query_vec, centroids[i])
     )
     probes = probe_order[:nprobe]
-    if impl == "arrow":
-        score = _cosine_lit_arrow(query_vec, 6)(
-            F.col(vec_col).cast("array<double>")
-        )
-    else:
-        score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
+    score = F.round(V.cosine(F.col(vec_col), _lit_vec(query_vec)), 6)
     return (
         spark.read.parquet(path)
         .where(F.col("cell_id").isin(probes))
@@ -626,118 +395,12 @@ def _py_cosine(a: list[float], b: list[float]) -> float:
     return num / (na * nb) if na and nb else 0.0
 
 
-def _sqdist_lit_arrow(center: list[float], dp: int):
-    """Arrow kernel for ``round(sqdist(vec, <literal center>), dp)`` —
-    the per-hop distance of `kcenter_select(impl="arrow")`.  Replays
-    `vectors.sqdist`'s left-to-right fold dimension by dimension (acc
-    = 0 + t₀² + t₁² + …) and rounds with Spark's exact F.round
-    semantics (`_kmeans_np.round_spark`), so values are bit-equal to
-    the expression path; NULL vectors null-propagate.  One fused
-    numpy pass per batch instead of ~dim interpreted HOF ops per
-    row."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import round_spark
-
-    # a None element poisons every fold lane to NaN, which the
-    # isfinite gate below turns into all-NULL distances — exactly the
-    # expression path's null-propagation for a NULL-element literal
-    cw = [float("nan") if x is None else float(x) for x in center]
-
-    def _fn(vs):
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        valid = np.array([v is not None for v in vs], dtype=bool)
-        out = pd.Series([None] * n, dtype="object")
-        if valid.any():
-            M = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vs[valid]]
-            )
-            acc = np.zeros(M.shape[0])
-            for d in range(M.shape[1]):
-                t = M[:, d] - cw[d]
-                acc = acc + t * t
-            # NULL elements arrive as NaN and must null-propagate like
-            # the expression fold (NULL element → NULL distance)
-            ok = np.isfinite(acc)
-            res = np.full(M.shape[0], None, dtype=object)
-            if ok.any():
-                res[ok] = round_spark(acc[ok], dp)
-            o = out.to_numpy()
-            o[valid] = res
-            out = pd.Series(o, dtype="object")
-        return out
-
-    _fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_fn, "double")
-
-
-def _pair_cosine_arrow(dp: int):
-    """Arrow kernel for ``round(cosine(a, b), dp)`` over two array
-    COLUMNS — the scoring row of `centroid_outlier_scores(
-    impl="arrow")`, where every row meets a different (group) centroid
-    so the literal-battery form doesn't apply.  Exact replica of
-    `vectors.cosine`: dot and both squared norms are left-to-right
-    per-dimension folds, cos = dot / (sqrt(na)·sqrt(nb)), zero
-    denominators → NULL (Spark's non-ANSI divide), rounding via
-    `round_spark`."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import round_spark
-
-    def _fn(va, vb):
-        n = len(va)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        valid = np.array(
-            [a is not None and b is not None for a, b in zip(va, vb)],
-            dtype=bool,
-        )
-        out = pd.Series([None] * n, dtype="object")
-        if valid.any():
-            A = np.array(
-                [np.asarray(v, dtype=np.float64) for v in va[valid]]
-            )
-            B = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vb[valid]]
-            )
-            dot = np.zeros(A.shape[0])
-            na = np.zeros(A.shape[0])
-            nb = np.zeros(A.shape[0])
-            for d in range(A.shape[1]):
-                dot = dot + A[:, d] * B[:, d]
-                na = na + A[:, d] * A[:, d]
-                nb = nb + B[:, d] * B[:, d]
-            denom = np.sqrt(na) * np.sqrt(nb)
-            # zero denom → NULL (non-ANSI divide); non-finite (a NULL
-            # element's NaN) → NULL, like the expression fold
-            ok = np.isfinite(denom) & (denom != 0)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = round_spark(dot / np.where(ok, denom, 1.0), dp)
-            ok &= np.isfinite(cos)
-            res = np.full(valid.shape[0], None, dtype=object)
-            res[np.flatnonzero(valid)[ok]] = cos[ok]
-            out[:] = res
-        return out
-
-    _fn.__annotations__ = {
-        "va": pd.Series,
-        "vb": pd.Series,
-        "return": pd.Series,
-    }
-    return F.pandas_udf(_fn, "double")
-
-
 def centroid_outlier_scores(
     df: DataFrame,
     vec_col: str = "embedding",
     group_col: str = "label",
     key_col: str = "vec_id",
     round_dp: int = 6,
-    impl: str = "expr",
 ) -> DataFrame:
     """Embedding-space outlier scoring: each vector's cosine to its
     GROUP's mean vector (per-label centroid). Low cosine = far from
@@ -754,16 +417,7 @@ def centroid_outlier_scores(
     BROADCAST and evaluates one zip_with dot per row. No collect; the
     N*dim exploded shuffle is the only corpus-sized movement, and it
     carries 8-byte doubles, not vectors.
-
-    ``impl="arrow"`` swaps the scoring row's interpreted HOF cosine
-    (~3·dim interpreted ops per row) for the `_pair_cosine_arrow`
-    kernel — bit-equal scores (exact fold replay + Spark-exact
-    rounding), the corpus-scan lever at large dim (the `assign_cells`
-    impl contract; per-row pairs, so the battery/GEMM form doesn't
-    apply here).
     """
-    if impl not in ("expr", "arrow"):
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     dims = df.select(
         F.col(group_col).alias("__g"),
@@ -780,12 +434,7 @@ def centroid_outlier_scores(
             ).alias("__c")
         )
     )
-    if impl == "arrow":
-        score = _pair_cosine_arrow(round_dp)(
-            F.col("__vd"), F.col("__c")
-        )
-    else:
-        score = F.round(V.cosine(F.col("__vd"), F.col("__c")), round_dp)
+    score = F.round(V.cosine(F.col("__vd"), F.col("__c")), round_dp)
     return (
         df.select(F.col(key_col), F.col(group_col), vd.alias("__vd"))
         .join(
@@ -808,8 +457,6 @@ def cosine_topk_batch(
     query_vec_col: str = "embedding",
     query_key_col: str = "query_id",
     round_dp: int = 6,
-    impl: str = "expr",
-    max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Exact top-k retrieval for a BATCH of query vectors in one corpus
     pass — the evaluation-retrieval shape (score every benchmark query
@@ -827,52 +474,20 @@ def cosine_topk_batch(
     so only each query's running top-k survives to the final shuffle.
     Beyond broadcastable query counts, loop over query chunks; beyond
     exact-scan budgets, IVF (build_ivf_index) is the path.
-
-    ``impl="gemm"`` is the scan lever: the m·|corpus| interpreted HOF
-    cosines (~3·dim interpreted ops EACH — the per-pair cost the
-    broadcast NLJ pays) become one (batch×dim)·(dim×m) exact-fold
-    pass per Arrow batch, emitted as a per-row score array and
-    posexploded back to the identical long form — bit-identical
-    scores/ranks (exact fold replay + Spark-exact rounding, NULL
-    corpus/query vectors and zero norms null-propagate like the
-    expression path).  The query side collects driver-side (it
-    broadcasts anyway); ``max_query_rows`` guards the gather.
     """
     from pyspark.sql import Window
 
-    if impl not in ("expr", "gemm"):
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
     cd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     qd = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
     c = corpus.select(F.col(key_col), cd.alias("__cv"))
     q = queries.select(F.col(query_key_col), qd.alias("__qv"))
-    if impl == "gemm":
-        qrows = q.limit(max_query_rows + 1).collect()
-        if len(qrows) > max_query_rows:
-            raise ValueError(
-                f"cosine_topk_batch(impl='gemm') refuses > "
-                f"{max_query_rows} query rows — chunk the queries or "
-                "use impl='expr'"
-            )
-        qkeys = [r[0] for r in qrows]
-        qvecs = [r[1] for r in qrows]
-        qk_arr = F.array(*[F.lit(kk) for kk in qkeys])
-        scores = _batch_cosine_arrow(qvecs, round_dp)(F.col("__cv"))
-        scored = c.select(
-            F.col(key_col), F.posexplode(scores).alias("__qi", "cosine")
-        ).select(
-            F.element_at(qk_arr, F.col("__qi") + 1).alias(query_key_col),
-            key_col,
-            "cosine",
-        )
-    else:
-        scored = c.crossJoin(F.broadcast(q)).select(
-            query_key_col,
-            key_col,
-            F.round(V.cosine(F.col("__cv"), F.col("__qv")), round_dp).alias(
-                "cosine"
-            ),
-        )
+    scored = c.crossJoin(F.broadcast(q)).select(
+        query_key_col,
+        key_col,
+        F.round(V.cosine(F.col("__cv"), F.col("__qv")), round_dp).alias(
+            "cosine"
+        ),
+    )
     w = Window.partitionBy(query_key_col).orderBy(
         F.col("cosine").desc(), F.col(key_col).asc()
     )
@@ -881,59 +496,6 @@ def cosine_topk_batch(
         .where(F.col("rank") <= k)
         .select(query_key_col, key_col, "cosine", "rank")
     )
-
-
-def _batch_cosine_arrow(qvecs: list, dp: int):
-    """Arrow kernel behind `cosine_topk_batch(impl="gemm")`: one
-    array<double> of per-query cosines per corpus row, computed over
-    the whole Arrow batch with `_kmeans_np._cosine_matrix`'s exact
-    left-to-right folds and Spark-exact rounding.  NULL corpus rows
-    emit an all-NULL array; NULL query vectors own an all-NULL column;
-    zero norms and NULL elements (NaN lanes) null-propagate — each
-    matching the expression path's divide/fold semantics."""
-    import numpy as np
-    import pandas as pd
-
-    from ._kmeans_np import _cosine_matrix, round_spark
-
-    m = len(qvecs)
-    q_ok = [i for i, v in enumerate(qvecs) if v is not None]
-    Q = (
-        np.array([np.asarray(qvecs[i], dtype=np.float64) for i in q_ok])
-        if q_ok
-        else None
-    )
-
-    def _fn(vs):
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        valid = np.array([v is not None for v in vs], dtype=bool)
-        out = np.full(n, None, dtype=object)
-        null_row = [None] * m
-        for i in np.flatnonzero(~valid):
-            out[i] = null_row
-        if valid.any() and Q is not None:
-            M = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vs[valid]]
-            )
-            cos = _cosine_matrix(M, Q)
-            ok = np.isfinite(cos)
-            with np.errstate(invalid="ignore"):
-                cos = round_spark(np.where(ok, cos, 0.0), dp)
-            for i, r_ok, r_cos in zip(np.flatnonzero(valid), ok, cos):
-                row = null_row.copy()
-                for j, qi in enumerate(q_ok):
-                    if r_ok[j]:
-                        row[qi] = float(r_cos[j])
-                out[i] = row
-        elif valid.any():
-            for i in np.flatnonzero(valid):
-                out[i] = null_row
-        return pd.Series(out, dtype=object)
-
-    _fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_fn, "array<double>")
 
 
 def mutual_nearest_neighbors(
@@ -945,8 +507,6 @@ def mutual_nearest_neighbors(
     a_out: str = "a_key",
     b_out: str = "b_key",
     round_dp: int = 6,
-    impl: str = "expr",
-    max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Mutual-nearest-neighbor alignment between two embedding sets —
     the bitext/dataset-alignment primitive (Artetxe & Schwenk's margin
@@ -970,47 +530,19 @@ def mutual_nearest_neighbors(
     oracle-reproducible.  Beyond broadcastable |a|, run per-chunk or
     swap the scoring leg for IVF (build_ivf_index) — the mutuality
     logic is unchanged.
-
-    ``impl="gemm"`` swaps the |a|·|b| interpreted per-pair HOF
-    cosines for the `cosine_topk_batch` batch kernel (exact folds,
-    Spark-exact rounding, identical null propagation — bit-identical
-    scored frame); the ``a`` side collects driver-side behind
-    ``max_query_rows`` (it broadcast anyway).
     """
     from pyspark.sql import Window
 
-    if impl not in ("expr", "gemm"):
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
     cd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     bb = b.select(F.col(b_key).alias("__bk"), cd.alias("__bv"))
     aa = a.select(F.col(a_key).alias("__ak"), cd.alias("__av"))
-    if impl == "gemm":
-        arows = aa.limit(max_query_rows + 1).collect()
-        if len(arows) > max_query_rows:
-            raise ValueError(
-                f"mutual_nearest_neighbors(impl='gemm') refuses > "
-                f"{max_query_rows} query rows — chunk side a or use "
-                "impl='expr'"
-            )
-        ak_arr = F.array(*[F.lit(r[0]) for r in arows])
-        scores = _batch_cosine_arrow(
-            [r[1] for r in arows], round_dp
-        )(F.col("__bv"))
-        scored = bb.select(
-            "__bk", F.posexplode(scores).alias("__qi", "cosine")
-        ).select(
-            F.element_at(ak_arr, F.col("__qi") + 1).alias("__ak"),
-            "__bk",
-            "cosine",
-        )
-    else:
-        scored = bb.crossJoin(F.broadcast(aa)).select(
-            "__ak",
-            "__bk",
-            F.round(V.cosine(F.col("__av"), F.col("__bv")), round_dp).alias(
-                "cosine"
-            ),
-        )
+    scored = bb.crossJoin(F.broadcast(aa)).select(
+        "__ak",
+        "__bk",
+        F.round(V.cosine(F.col("__av"), F.col("__bv")), round_dp).alias(
+            "cosine"
+        ),
+    )
     w_ab = Window.partitionBy("__ak").orderBy(
         F.col("cosine").desc(), F.col("__bk").asc()
     )
@@ -1044,8 +576,6 @@ def hard_negatives(
     label_col: str = "label",
     query_key_col: str = "vec_id",
     round_dp: int = 6,
-    impl: str = "expr",
-    max_query_rows: int = 100_000,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query
     item, the ``k`` most-similar corpus items whose label DIFFERS —
@@ -1065,17 +595,9 @@ def hard_negatives(
     query sets: chunk the queries, or generate candidates with the
     IVF index and re-rank — the mismatch predicate composes
     unchanged.
-
-    ``impl="gemm"`` scores through the `cosine_topk_batch` batch
-    kernel and applies the same label-mismatch predicate on the
-    exploded rows — identical output (same-label pairs cost GEMM
-    flops instead of being predicate-pruned pre-score, a trade that
-    favors gemm well before the per-pair interpreted cost does).
     """
     from pyspark.sql import Window
 
-    if impl not in ("expr", "gemm"):
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
     cd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     c = corpus.select(
         F.col(key_col), cd.alias("__cv"), F.col(label_col).alias("__cl")
@@ -1085,57 +607,23 @@ def hard_negatives(
         cd.alias("__qv"),
         F.col(label_col).alias("__ql"),
     )
-    if impl == "gemm":
-        qrows = q.limit(max_query_rows + 1).collect()
-        if len(qrows) > max_query_rows:
-            raise ValueError(
-                f"hard_negatives(impl='gemm') refuses > "
-                f"{max_query_rows} query rows — chunk the queries or "
-                "use impl='expr'"
-            )
-        qk_arr = F.array(*[F.lit(r[0]) for r in qrows])
-        ql_arr = F.array(*[F.lit(r[2]) for r in qrows])
-        scores = _batch_cosine_arrow(
-            [r[1] for r in qrows], round_dp
-        )(F.col("__cv"))
-        scored = (
-            c.select(
-                F.col(key_col),
-                F.col("__cl"),
-                F.posexplode(scores).alias("__qi", "cosine"),
-            )
-            .select(
-                F.element_at(qk_arr, F.col("__qi") + 1).alias("query_key"),
-                F.element_at(ql_arr, F.col("__qi") + 1).alias("__ql"),
-                F.col(key_col),
-                F.col("__cl"),
-                "cosine",
-            )
-            .where(
-                F.col("__cl").isNotNull()
-                & F.col("__ql").isNotNull()
-                & (F.col("__cl") != F.col("__ql"))
-            )
-            .select("query_key", key_col, "cosine")
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        # NULL-labeled rows match nothing negatively: a NULL label
+        # is "unknown", not "different from everything"
+        .where(
+            F.col("__cl").isNotNull()
+            & F.col("__ql").isNotNull()
+            & (F.col("__cl") != F.col("__ql"))
         )
-    else:
-        scored = (
-            c.crossJoin(F.broadcast(q))
-            # NULL-labeled rows match nothing negatively: a NULL label
-            # is "unknown", not "different from everything"
-            .where(
-                F.col("__cl").isNotNull()
-                & F.col("__ql").isNotNull()
-                & (F.col("__cl") != F.col("__ql"))
-            )
-            .select(
-                F.col("__qk").alias("query_key"),
-                F.col(key_col),
-                F.round(
-                    V.cosine(F.col("__cv"), F.col("__qv")), round_dp
-                ).alias("cosine"),
-            )
+        .select(
+            F.col("__qk").alias("query_key"),
+            F.col(key_col),
+            F.round(
+                V.cosine(F.col("__cv"), F.col("__qv")), round_dp
+            ).alias("cosine"),
         )
+    )
     w = Window.partitionBy("query_key").orderBy(
         F.col("cosine").desc(), F.col(key_col).asc()
     )
@@ -1283,7 +771,6 @@ def kcenter_select(
     key_col: str = "vec_id",
     dist_dp: int = 9,
     round_dp: int = 6,
-    impl: str = "expr",
     engine: str = "auto",
     max_driver_rows: int = 1_000_000,
 ) -> DataFrame:
@@ -1315,11 +802,6 @@ def kcenter_select(
     frame — k scans total, embarrassingly parallel, zero shuffle; for
     very large k switch to batched variants (pick per-partition
     farthest candidates first), documented rather than implemented.
-    ``impl="arrow"`` swaps each hop's interpreted HOF sqdist (~dim
-    interpreted ops per row per hop — k·dim per row over the full
-    selection) for the `_sqdist_lit_arrow` kernel: bit-equal
-    distances (exact fold replay + Spark-exact rounding), identical
-    picks and radii including tiebreaks.
 
     ``engine`` picks the EXECUTION strategy for the same algorithm —
     identical output either way (unit-pinned), so the switch is pure
@@ -1337,16 +819,12 @@ def kcenter_select(
       the OUTPUT here, so silently sampling would change results;
       pre-sample upstream or use the sql engine).
     """
-    if impl not in ("expr", "arrow"):
-        raise ValueError(f"impl must be 'expr' or 'arrow', got {impl!r}")
     if engine not in ("auto", "numpy", "sql"):
         raise ValueError(
             f"engine must be 'auto', 'numpy', or 'sql', got {engine!r}"
         )
 
     def _hop_dist(center: list[float]):
-        if impl == "arrow":
-            return _sqdist_lit_arrow(center, dist_dp)(F.col("vec"))
         return F.round(
             V.sqdist(F.col("vec"), _lit_vec(center)), dist_dp
         )

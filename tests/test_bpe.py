@@ -11,6 +11,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (
     train_bpe_merges,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 def _ref_merges(word_freq: dict[str, int], k: int, marker=None):
     syms = {
@@ -76,7 +78,7 @@ def test_bpe_matches_sequential_reference(spark):
 def test_bpe_real_corpus_prefix_consistency(spark):
     # training k merges then k+2 merges must agree on the first k —
     # the loop is greedy and order-deterministic
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
     short = train_bpe_merges(docs, num_merges=3).orderBy("step").collect()
     longer = train_bpe_merges(docs, num_merges=5).orderBy("step").collect()
     assert [tuple(r) for r in short] == [tuple(r) for r in longer[:3]]
@@ -133,7 +135,7 @@ def test_q143_bpe_oracle_shape(spark):
 
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = sorted(tuple(r) for r in E.q143_bpe_merges(spark, sf).collect())
     want = sorted(
         tuple(r)
@@ -323,7 +325,7 @@ def test_q144_bpe_encode_oracle_shape(spark):
 
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = sorted(tuple(r) for r in E.q144_bpe_encode(spark, sf).collect())
     want = sorted(
         tuple(r)
@@ -344,11 +346,14 @@ def test_incremental_trainer_matches_reference_fuzz():
     lazy-heap invalidation and incremental pair bookkeeping are easy
     to get subtly wrong (stale memberships, overlap leftovers that
     resurrect a pair).  Pure-python, no Spark session."""
+    import os
     import sys
 
     from hypothesis import given, settings, strategies as st
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
+    )
     from bpe_decade import _seq_reference, _train_merges_fast
 
     word = st.text(alphabet="abcd", min_size=1, max_size=8)

@@ -5,12 +5,14 @@ from pyspark.sql import functions as F
 
 from cloud_native_medical_data_etl_pipeline_spark.sources import lake
 
+from conftest import ORACLE_SF_DIR, SF_0_01_DIR
+
 
 def test_bucketed_join_has_no_shuffle(spark):
-    l = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
+    l = spark.read.parquet(f"{ORACLE_SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
+    o = spark.read.parquet(f"{ORACLE_SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
     lake.write_bucketed(l, "bk_lineitem", "l_orderkey", num_buckets=8)
@@ -50,7 +52,7 @@ def test_clustered_write_skips_files(spark, tmp_path):
 
     from cloud_native_medical_data_etl_pipeline_spark.sources import lake
 
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
+    ev = spark.read.parquet(f"{SF_0_01_DIR}/events.parquet")
     clustered = str(tmp_path / "clustered")
     scattered = str(tmp_path / "scattered")
     lake.write_clustered(ev, clustered, ["user_id"], num_files=8)

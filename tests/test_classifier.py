@@ -17,6 +17,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
     kcenter_select,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
@@ -249,28 +251,21 @@ def test_sampled_training_rejects_bad_mod(spark):
         quality_classifier_scores(df, train_sample_mod=0)
 
 
-def test_kcenter_engines_and_impls_agree(spark):
-    """All three execution paths — the distributed sql loop (the
-    DuckDB-oracle spec), its impl="arrow" per-hop kernel swap, and
-    the engine="numpy" driver-side traversal that engine="auto"
-    dispatches to when the pool fits — must produce IDENTICAL picks,
-    ranks, and radii, including the ascending-key argmax tiebreaks
-    (exact fold replay + Spark-exact rounding everywhere)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+def test_kcenter_engines_agree(spark):
+    """Both execution paths — the distributed sql loop (the
+    DuckDB-oracle spec) and the engine="numpy" driver-side traversal
+    that engine="auto" dispatches to when the pool fits — must produce
+    IDENTICAL picks, ranks, and radii, including the ascending-key
+    argmax tiebreaks (exact fold replay + Spark-exact rounding)."""
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     a = sorted(
         tuple(r) for r in kcenter_select(emb, k=8, engine="sql").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in kcenter_select(
-            emb, k=8, engine="sql", impl="arrow"
-        ).collect()
     )
     c = sorted(
         tuple(r) for r in kcenter_select(emb, k=8, engine="numpy").collect()
     )
     d = sorted(tuple(r) for r in kcenter_select(emb, k=8).collect())
-    assert a == b == c == d and len(a) == 8
+    assert a == c == d and len(a) == 8
     # all-duplicate corpus: ties everywhere, distinct keys every path
     rows = [(i, [1.0, 2.0]) for i in range(6)]
     dup = [
@@ -278,14 +273,9 @@ def test_kcenter_engines_and_impls_agree(spark):
             tuple(r)
             for r in kcenter_select(_emb(spark, rows), k=4, **kw).collect()
         )
-        for kw in (
-            {"engine": "sql"},
-            {"engine": "sql", "impl": "arrow"},
-            {"engine": "numpy"},
-            {},
-        )
+        for kw in ({"engine": "sql"}, {"engine": "numpy"}, {})
     ]
-    assert dup[0] == dup[1] == dup[2] == dup[3]
+    assert dup[0] == dup[1] == dup[2]
     # element-level NULLs null-propagate identically (NULL distance
     # never overwrites dmin, NULL radius rows sort last)
     en = [(1, [0.0, 0.0]), (2, [None, 1.0]), (3, [5.0, 5.0]), (4, [1.0, 9.0])]
@@ -294,15 +284,9 @@ def test_kcenter_engines_and_impls_agree(spark):
             tuple(r)
             for r in kcenter_select(_emb(spark, en), k=3, **kw).collect()
         )
-        for kw in (
-            {"engine": "sql"},
-            {"engine": "sql", "impl": "arrow"},
-            {"engine": "numpy"},
-        )
+        for kw in ({"engine": "sql"}, {"engine": "numpy"})
     ]
-    assert across[0] == across[1] == across[2]
-    with pytest.raises(ValueError, match="impl"):
-        kcenter_select(_emb(spark, rows), k=2, impl="simd")
+    assert across[0] == across[1]
     with pytest.raises(ValueError, match="engine"):
         kcenter_select(_emb(spark, rows), k=2, engine="simd")
     # the numpy engine refuses a pool over the driver cap (selection
@@ -316,38 +300,6 @@ def test_kcenter_engines_and_impls_agree(spark):
         ).collect()
     )
     assert e == dup[0]
-
-
-def test_train_logreg_numpy_engine_matches_sql(spark):
-    """engine="numpy" (the opt-in many-step lever — 32 driver
-    round-trips become one gather) must reproduce the sql spec's
-    weights on the driver corpus; equality is tolerance-level by
-    contract (exp/mean channels under the rounding grain), pinned
-    exact here empirically."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    feat = featurize_documents(docs).localCheckpoint()
-    a = train_logreg(feat, iterations=8)
-    b = train_logreg(feat, iterations=8, engine="numpy")
-    assert a == b
-    with pytest.raises(ValueError, match="engine"):
-        train_logreg(feat, engine="simd")
-    # the end-to-end scorer exposes the same switch; scores identical
-    from cloud_native_medical_data_etl_pipeline_spark.operators.classifier import (
-        quality_classifier_scores,
-    )
-
-    e2e_sql = sorted(
-        tuple(r) for r in quality_classifier_scores(docs, iterations=4).collect()
-    )
-    e2e_np = sorted(
-        tuple(r)
-        for r in quality_classifier_scores(
-            docs, iterations=4, engine="numpy"
-        ).collect()
-    )
-    assert e2e_sql == e2e_np
-    with pytest.raises(ValueError, match="max_train_rows"):
-        train_logreg(feat, engine="numpy", max_train_rows=5)
 
 
 def test_kcenter_all_nan_candidates_no_duplicate_picks(spark):
@@ -386,11 +338,10 @@ def test_kcenter_nan_lanes_lose_to_real_distances(spark):
         assert out[3]["radius"] is None, engine
 
 
-def test_kcenter_arrow_impl_matches_expr_on_nan_lanes(spark):
-    # the arrow hop kernel must replay the same NULL-element contract
-    # as the expression path: a NULL-element CENTER yields all-NULL
-    # hop distances (NaN-poisoned fold -> isfinite gate), and NULL
-    # element rows null-propagate — picks/radii identical
+def test_kcenter_engines_agree_on_null_element_centers(spark):
+    # a NULL-element CENTER yields all-NULL hop distances on the sql
+    # loop and NaN lanes on the numpy traversal, and NULL-element rows
+    # null-propagate — picks/radii identical on both engines
     rows = [
         (1, [0.0, 0.0]),
         (2, [None, 9.0]),
@@ -401,13 +352,7 @@ def test_kcenter_arrow_impl_matches_expr_on_nan_lanes(spark):
     a = sorted(
         tuple(r)
         for r in kcenter_select(
-            _emb(spark, rows), k=5, engine="sql", impl="expr"
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in kcenter_select(
-            _emb(spark, rows), k=5, engine="sql", impl="arrow"
+            _emb(spark, rows), k=5, engine="sql"
         ).collect()
     )
     c = sorted(
@@ -416,4 +361,4 @@ def test_kcenter_arrow_impl_matches_expr_on_nan_lanes(spark):
             _emb(spark, rows), k=5, engine="numpy"
         ).collect()
     )
-    assert a == b == c
+    assert a == c

@@ -9,6 +9,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators import (
     dedup,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 def _pairs(spark, edges):
     return spark.createDataFrame(edges, "key_a long, key_b long")
@@ -44,7 +46,7 @@ def test_dedup_clusters_summary(spark):
 
 def test_components_on_real_minhash_pairs(spark):
     docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
         .select("doc_id", "text")
     )
     pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5)

@@ -12,7 +12,9 @@ from cloud_native_medical_data_etl_pipeline_spark.operators import (
     similarity,
 )
 
-SF = "/root/testdata/sf0.001"
+from conftest import ORACLE_SF_DIR
+
+SF = ORACLE_SF_DIR
 
 
 def _docs(spark):
@@ -187,22 +189,6 @@ def test_ivf_topk_overlaps_exact(spark):
     # overlap the exact set substantially
     assert 3 in approx
     assert len(set(exact) & set(approx)) >= 5
-    # the gemm/arrow kernel pair produces identical rows end to end
-    gemm = [
-        tuple(r)
-        for r in similarity.ivf_topk(
-            emb, q, k=10, num_cells=8, nprobe=4, impl="gemm"
-        ).collect()
-    ]
-    expr = [
-        tuple(r)
-        for r in similarity.ivf_topk(
-            emb, q, k=10, num_cells=8, nprobe=4
-        ).collect()
-    ]
-    assert gemm == expr
-    with pytest.raises(ValueError, match="impl"):
-        similarity.ivf_topk(emb, q, impl="simd")
 
 
 def test_text_functions(spark):
@@ -275,7 +261,7 @@ def test_vector_kernels(spark):
 def test_ivf_index_roundtrip_matches_inline(spark, tmp_path):
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     q = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
     idx = str(tmp_path / "ivf")
     S.build_ivf_index(emb, idx, num_cells=16)
@@ -284,19 +270,12 @@ def test_ivf_index_roundtrip_matches_inline(spark, tmp_path):
     assert [(r["vec_id"], r["cosine"]) for r in indexed] == [
         (r["vec_id"], r["cosine"]) for r in inline
     ]
-    # the arrow probe-scan kernel scores bit-identically
-    arrow = S.ivf_topk_indexed(
-        spark, idx, q, k=10, nprobe=4, impl="arrow"
-    ).collect()
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in indexed]
-    with pytest.raises(ValueError, match="impl"):
-        S.ivf_topk_indexed(spark, idx, q, impl="simd")
 
 
 def test_ivf_index_scan_prunes_partitions(spark, tmp_path):
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     q = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
     idx = str(tmp_path / "ivf")
     S.build_ivf_index(emb, idx, num_cells=8)
@@ -311,7 +290,7 @@ def test_multimodal_resize_and_frames(spark):
 
     from cloud_native_medical_data_etl_pipeline_spark.operators import multimodal as MM
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(20)
+    docs = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet").limit(20)
     media = MM.attach_payload(docs)
 
     resized = MM.resize_images(media, width=8, height=8)
@@ -624,7 +603,7 @@ def test_embedding_near_dups_rejects_bad_verify(spark):
 
 
 def test_cosine_topk_batch_matches_single_query_loop(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     queries = (
         emb.orderBy(F.col("vec_id").asc())
         .limit(3)
@@ -954,7 +933,7 @@ def test_ivf_append_lands_in_trained_cells(spark, tmp_path):
     centroid sidecar is unchanged."""
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = emb.where(F.col("vec_id") % 10 == 0)
     path = str(tmp_path / "index")
@@ -1169,140 +1148,82 @@ def test_ivf_append_preserves_index_schema(spark, tmp_path):
         S.append_to_ivf_index(spark, bad, path)
 
 
-def test_assign_cells_gemm_matches_expression_path(spark):
-    """The Arrow GEMM assignment (assign_cells impl="gemm" — the
-    1024-cell ingest lever, ~65x the interpreted expression battery)
-    must produce IDENTICAL cell ids to the expression path on real
-    embeddings and trained centroids, including the lowest-index
-    argmax tiebreak; zero-norm rows get NULL either way."""
+def test_assign_cells_null_and_zero_norm_rows_get_null_cell(spark):
+    """NULL embeddings, NULL elements and zero-norm rows must get a
+    NULL cell_id, not crash (semantic_dedup_keep passes the UNFILTERED
+    frame to assign_cells and promises such rows survive); ties keep
+    the lowest centroid index."""
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = S.train_ivf_centroids(emb, 8, iters=1)
-    a = sorted(
-        tuple(r)
-        for r in S.assign_cells(emb, cents).select("vec_id", "cell_id").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in S.assign_cells(emb, cents, impl="gemm")
-        .select("vec_id", "cell_id")
-        .collect()
-    )
-    assert a == b
-    # zero-norm row -> NULL cell id on the gemm path (the expression
-    # path's null-propagating division)
-    z = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    got = {
-        r["vec_id"]: r["cell_id"]
-        for r in S.assign_cells(z, [[1.0, 0.0], [0.0, 1.0]], impl="gemm").collect()
-    }
-    assert got[1] is None and got[2] == 0
-    # NULL embeddings and NULL elements must null-propagate, not crash
-    # (semantic_dedup_keep passes the UNFILTERED frame to assign_cells
-    # and promises NULL-embedding rows survive with NULL cell_id)
     nl = spark.createDataFrame(
-        [(1, None), (2, [1.0, 0.0]), (3, [None, 1.0]), (4, [0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    for impl in ("expr", "gemm"):
-        got = {
-            r["vec_id"]: r["cell_id"]
-            for r in S.assign_cells(
-                nl, [[1.0, 0.0], [0.0, 1.0]], impl=impl
-            ).collect()
-        }
-        assert got[1] is None and got[3] is None and got[4] is None, impl
-        assert got[2] == 0, impl
-    with pytest.raises(ValueError, match="impl"):
-        S.assign_cells(z, [[1.0, 0.0]], impl="simd")
-
-
-def test_train_ivf_centroids_gemm_assignment_matches(spark):
-    # gemm-assigned training produces the same centroids: identical
-    # member sets per iteration => identical rounded means
-    from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = S.train_ivf_centroids(emb, 8, iters=2)
-    b = S.train_ivf_centroids(emb, 8, iters=2, assign_impl="gemm")
-    assert a == b
-
-
-def test_train_ivf_centroids_engines_agree(spark):
-    """engine="numpy" (what auto resolves to — the driver-side Lloyd
-    loop) must produce IDENTICAL centroids to the in-engine sql spec
-    the q23 oracle unrolls, on real embeddings and on edge shapes:
-    zero-norm rows (NULL cosine → assigned nowhere), cells that lose
-    every member (keep previous centroid), fewer rows than cells."""
-    from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    for iters in (0, 1, 2):
-        a = S.train_ivf_centroids(emb, 8, iters=iters, engine="numpy")
-        b = S.train_ivf_centroids(emb, 8, iters=iters, engine="sql")
-        assert a == b, iters
-    edge = spark.createDataFrame(
         [
-            (1, [0.0, 0.0]),          # zero norm: no cell either engine
+            (1, None),
             (2, [1.0, 0.0]),
-            (3, [0.9, 0.1]),
-            (4, [-1.0, 0.05]),
-            (None, [5.0, 5.0]),       # NULL key: excluded
-            (5, None),                # NULL vec: excluded
+            (3, [None, 1.0]),
+            (4, [0.0, 0.0]),
+            (5, [1.0, 1.0]),
         ],
         "vec_id long, embedding array<double>",
     )
-    for cells in (2, 3, 10):
-        a = S.train_ivf_centroids(edge, cells, iters=3, engine="numpy")
-        b = S.train_ivf_centroids(edge, cells, iters=3, engine="sql")
-        assert a == b, cells
-    with pytest.raises(ValueError, match="engine"):
-        S.train_ivf_centroids(edge, 2, engine="simd")
+    got = {
+        r["vec_id"]: r["cell_id"]
+        for r in S.assign_cells(nl, [[1.0, 0.0], [0.0, 1.0]]).collect()
+    }
+    assert got[1] is None and got[3] is None and got[4] is None
+    assert got[2] == 0 and got[5] == 0
+
+
+def test_train_ivf_centroids_edge_shapes(spark):
+    """The q23 spec loop on edge shapes: a zero-norm row (NULL cosine,
+    assigned nowhere), a cell that loses every member (keeps its
+    previous centroid), fewer rows than cells, and NULL keys / NULL
+    vectors excluded before the smallest-key init."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
+
+    edge = spark.createDataFrame(
+        [
+            (1, [0.0, 0.0]),
+            (2, [1.0, 0.0]),
+            (3, [0.9, 0.1]),
+            (4, [-1.0, 0.05]),
+            (None, [5.0, 5.0]),
+            (5, None),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    assert S.train_ivf_centroids(edge, 2, iters=3) == [
+        [0.0, 0.0], [0.3, 0.05]
+    ]
+    assert S.train_ivf_centroids(edge, 3, iters=3) == [
+        [0.0, 0.0], [0.95, 0.05], [-1.0, 0.05]
+    ]
+    assert S.train_ivf_centroids(edge, 10, iters=3) == [
+        [0.0, 0.0], [1.0, 0.0], [0.9, 0.1], [-1.0, 0.05]
+    ]
 
 
 def test_train_ivf_centroids_auto_caps_collect(spark):
-    # max_train_rows mirrors pq_train's guard: auto-derived md5 sample
-    # applied before engine dispatch, identical across engines
+    # max_train_rows mirrors pq_train's guard: the auto-derived md5
+    # sample equals training on the explicit 1/ceil(n/cap) sample
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
     from cloud_native_medical_data_etl_pipeline_spark.operators._sampling import (
         hash_sample,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    capped_np = S.train_ivf_centroids(
-        emb, 4, iters=1, max_train_rows=100, engine="auto"
-    )
-    capped_sql = S.train_ivf_centroids(
-        emb, 4, iters=1, max_train_rows=100, engine="sql"
-    )
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    capped = S.train_ivf_centroids(emb, 4, iters=1, max_train_rows=100)
     n = emb.count()
     explicit = S.train_ivf_centroids(
         hash_sample(emb, "vec_id", -(-n // 100)), 4, iters=1,
         max_train_rows=None,
     )
-    assert capped_np == capped_sql == explicit
+    assert capped == explicit
 
 
-def test_centroid_outlier_arrow_matches_expr(spark):
-    """impl="arrow" (the corpus-scan lever replacing the interpreted
-    per-row HOF cosine) must score bit-identically to the expression
-    path — real embeddings, plus NULL-embedding null-propagation and
-    the zero-norm → NULL divide contract."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = sorted(
-        tuple(r)
-        for r in similarity.centroid_outlier_scores(emb).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in similarity.centroid_outlier_scores(
-            emb, impl="arrow"
-        ).collect()
-    )
-    assert a == b and len(a) > 0
+def test_centroid_outlier_null_and_zero_norm_rows_score_null(spark):
+    """NULL embeddings, zero-norm vectors and NULL elements (which
+    poison their group's centroid) score NULL — Spark's non-ANSI
+    divide and null-propagating fold — while real rows still score."""
     edge = spark.createDataFrame(
         [
             (1, [1.0, 0.0], 1),
@@ -1312,68 +1233,32 @@ def test_centroid_outlier_arrow_matches_expr(spark):
         ],
         "vec_id long, embedding array<float>, label int",
     )
-    for impl in ("expr", "arrow"):
-        got = {
-            r["vec_id"]: r["centroid_cosine"]
-            for r in similarity.centroid_outlier_scores(
-                edge, impl=impl
-            ).collect()
-        }
-        assert got[2] is None and got[3] is None and got[4] is None, impl
-        assert got[1] is not None, impl
-    with pytest.raises(ValueError, match="impl"):
-        similarity.centroid_outlier_scores(edge, impl="simd")
+    got = {
+        r["vec_id"]: r["centroid_cosine"]
+        for r in similarity.centroid_outlier_scores(edge).collect()
+    }
+    assert got[2] is None and got[3] is None and got[4] is None
+    assert got[1] is not None
 
 
-def test_cosine_topk_arrow_matches_expr(spark):
-    """impl="arrow" (the exact-retrieval scan lever) must score and
-    rank bit-identically to the expression path, including NULL /
-    zero-norm propagation."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = [float(x) for x in emb.where(F.col("vec_id") == 3).first()["embedding"]]
-    a = [tuple(r) for r in similarity.cosine_topk(emb, q, k=20).collect()]
-    b = [
-        tuple(r)
-        for r in similarity.cosine_topk(emb, q, k=20, impl="arrow").collect()
-    ]
-    assert a == b and len(a) == 20
+def test_cosine_topk_null_and_zero_norm_rows_score_null(spark):
+    """NULL vectors, zero norms and NULL elements score NULL and rank
+    after every real score."""
     edge = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 0.0]), (4, [None, 1.0])],
         "vec_id long, embedding array<float>",
     )
-    for impl in ("expr", "arrow"):
-        got = {
-            r["vec_id"]: r["cosine"]
-            for r in similarity.cosine_topk(
-                edge, [1.0, 1.0], k=4, impl=impl
-            ).collect()
-        }
-        assert got[2] is None and got[3] is None and got[4] is None, impl
-        assert got[1] is not None, impl
-    with pytest.raises(ValueError, match="impl"):
-        similarity.cosine_topk(edge, [1.0, 1.0], impl="simd")
+    got = [
+        (r["vec_id"], r["cosine"])
+        for r in similarity.cosine_topk(edge, [1.0, 1.0], k=4).collect()
+    ]
+    assert got == [(1, 0.707107), (2, None), (3, None), (4, None)]
 
 
-def test_cosine_topk_batch_gemm_matches_expr(spark):
-    """impl="gemm" (one exact-fold batch pass instead of m·|corpus|
-    interpreted HOF cosines) must emit identical (query, key, cosine,
-    rank) rows to the broadcast-NLJ expression path, including NULL
-    corpus vectors, NULL query vectors, and zero norms."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = sorted(
-        tuple(r)
-        for r in similarity.cosine_topk_batch(emb, queries, k=7).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in similarity.cosine_topk_batch(
-            emb, queries, k=7, impl="gemm"
-        ).collect()
-    )
-    assert a == b and len(a) == 35
+def test_cosine_topk_batch_null_and_zero_norm_vectors(spark):
+    """NULL corpus vectors, NULL query vectors, zero norms and NULL
+    elements score NULL and rank after every real score (key
+    tiebreak); real pairs rank by rounded cosine."""
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 0.0]), (4, [None, 2.0]), (5, [0.5, 0.5])],
         "vec_id long, embedding array<float>",
@@ -1382,54 +1267,24 @@ def test_cosine_topk_batch_gemm_matches_expr(spark):
         [(10, [1.0, 1.0]), (11, None), (12, [3.0, -1.0])],
         "query_id long, embedding array<float>",
     )
-    x = sorted(
+    got = sorted(
         tuple(r)
         for r in similarity.cosine_topk_batch(corpus, qs, k=5).collect()
     )
-    y = sorted(
-        tuple(r)
-        for r in similarity.cosine_topk_batch(
-            corpus, qs, k=5, impl="gemm"
-        ).collect()
-    )
-    assert x == y
-    with pytest.raises(ValueError, match="impl"):
-        similarity.cosine_topk_batch(corpus, qs, impl="simd")
-    with pytest.raises(ValueError, match="query rows"):
-        similarity.cosine_topk_batch(
-            corpus, qs, impl="gemm", max_query_rows=2
-        )
+    assert got == [
+        (10, 1, 0.707107, 2), (10, 2, None, 3), (10, 3, None, 4),
+        (10, 4, None, 5), (10, 5, 1.0, 1),
+        (11, 1, None, 1), (11, 2, None, 2), (11, 3, None, 3),
+        (11, 4, None, 4), (11, 5, None, 5),
+        (12, 1, 0.948683, 1), (12, 2, None, 3), (12, 3, None, 4),
+        (12, 4, None, 5), (12, 5, 0.447214, 2),
+    ]
 
 
-def test_mutual_nn_and_hard_negatives_gemm_match_expr(spark):
-    """The gemm scoring leg must leave mutual-NN pairs and hard-
-    negative rankings bit-identical to the expression path, including
-    NULL vectors and NULL labels."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = emb.where(F.col("vec_id") < 20)
-    b = emb.where(F.col("vec_id") >= 20)
-    x = sorted(
-        tuple(r)
-        for r in similarity.mutual_nearest_neighbors(a, b).collect()
-    )
-    y = sorted(
-        tuple(r)
-        for r in similarity.mutual_nearest_neighbors(
-            a, b, impl="gemm"
-        ).collect()
-    )
-    assert x == y and len(x) > 0
-    hx = sorted(
-        tuple(r)
-        for r in similarity.hard_negatives(emb, a, k=3).collect()
-    )
-    hy = sorted(
-        tuple(r)
-        for r in similarity.hard_negatives(
-            emb, a, k=3, impl="gemm"
-        ).collect()
-    )
-    assert hx == hy and len(hx) > 0
+def test_mutual_nn_and_hard_negatives_null_vectors_and_labels(spark):
+    """NULL vectors score NULL (ranked last, key tiebreak) and NULL
+    labels are never negatives; mutuality holds only for real
+    top-1 pairs."""
     corpus = spark.createDataFrame(
         [
             (1, [1.0, 0.0], "en"),
@@ -1443,48 +1298,31 @@ def test_mutual_nn_and_hard_negatives_gemm_match_expr(spark):
         [(10, [1.0, 0.2], "en"), (11, None, "fr"), (12, [2.0, 1.0], None)],
         "vec_id long, embedding array<float>, label string",
     )
-    for fn, kw in (
-        (similarity.hard_negatives, {"k": 4}),
-        (similarity.mutual_nearest_neighbors, {}),
-    ):
-        e = sorted(tuple(r) for r in fn(corpus, qs, **kw).collect())
-        g = sorted(
-            tuple(r) for r in fn(corpus, qs, impl="gemm", **kw).collect()
-        )
-        assert e == g, fn.__name__
-    with pytest.raises(ValueError, match="query rows"):
-        similarity.hard_negatives(corpus, qs, impl="gemm", max_query_rows=1)
-    with pytest.raises(ValueError, match="query rows"):
-        similarity.mutual_nearest_neighbors(
-            qs, corpus, impl="gemm", max_query_rows=1
-        )
+    hn = sorted(
+        tuple(r)
+        for r in similarity.hard_negatives(corpus, qs, k=4).collect()
+    )
+    assert hn == [
+        (10, 2, None, 2), (10, 4, 0.196116, 1),
+        (11, 1, None, 1), (11, 2, None, 2),
+    ]
+    mnn = sorted(
+        tuple(r)
+        for r in similarity.mutual_nearest_neighbors(corpus, qs).collect()
+    )
+    assert mnn == [(1, 10, 0.980581), (3, 12, 0.948683)]
 
 
-def test_gemm_lever_plan_shapes(spark, tmp_path):
-    """Plan pins for the r10 kernel levers: the gemm batch scorer must
-    NOT plan a broadcast nested-loop join (that is exactly the shape
-    it replaces — the score array + Generate carries the fan-out
-    instead), and the arrow probe scan must keep the partition-pruned
-    read (the UDF must not defeat PartitionFilters)."""
+def test_cosine_topk_batch_plans_broadcast_nested_loop(spark):
+    """The batch scorer is a broadcast nested-loop join of the query
+    side against one corpus scan."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    gemm = similarity.cosine_topk_batch(emb, queries, k=3, impl="gemm")
-    plan = gemm._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Generate" in plan  # the posexplode fan-out
     expr = similarity.cosine_topk_batch(emb, queries, k=3)
     eplan = expr._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in eplan  # the shape being replaced
-    # arrow probe scan keeps pruning
-    q = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
-    idx = str(tmp_path / "ivf_arrow")
-    similarity.build_ivf_index(emb, idx, num_cells=8)
-    df = similarity.ivf_topk_indexed(spark, idx, q, k=5, nprobe=2, impl="arrow")
-    aplan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in aplan and "cell_id" in aplan
-    assert df.count() == 5
+    assert "BroadcastNestedLoopJoin" in eplan
 
 
 def test_gather_vectors_matches_row_collect(spark):
@@ -1530,49 +1368,14 @@ def test_gather_vectors_matches_row_collect(spark):
 
 def test_train_ivf_default_is_uncapped_oracle_spec(spark):
     # ADVICE r10: defaults must compute exactly what the q23/q126
-    # oracle unrolls — sql engine, whole pool, no silent sample.  An
-    # explicit uncapped sql run IS the default run.
+    # oracle unrolls — whole pool, no silent sample.  An explicit
+    # uncapped run IS the default run.
     from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     default = S.train_ivf_centroids(emb, 4, iters=1)
-    spec = S.train_ivf_centroids(
-        emb, 4, iters=1, engine="sql", max_train_rows=None
-    )
+    spec = S.train_ivf_centroids(emb, 4, iters=1, max_train_rows=None)
     assert default == spec
-
-
-def test_train_ivf_numpy_refuses_overcap_auto_falls_back(
-    spark, monkeypatch
-):
-    # engine="numpy" REFUSES a pool over DRIVER_TRAIN_CAP instead of
-    # silently sampling it; engine="auto" falls back to the
-    # distributed sql loop on the FULL pool — identical output to the
-    # spec executor either way
-    from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
-    from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).limit(20)
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 5)
-    with pytest.raises(ValueError, match="refuses"):
-        S.train_ivf_centroids(emb, 4, iters=1, engine="numpy")
-    auto = S.train_ivf_centroids(emb, 4, iters=1, engine="auto")
-    sql = S.train_ivf_centroids(emb, 4, iters=1, engine="sql")
-    assert auto == sql
-    # with an explicit cap the pool shrinks below the gate and numpy
-    # runs again — all three engines on the identical sampled frame
-    # (max_train_rows=2 -> mod=10 keeps 5 of these 20 keys, at the
-    # monkeypatched gate; the md5 sample is approximate, so a looser
-    # cap could still overshoot the gate and correctly refuse)
-    capped = [
-        S.train_ivf_centroids(
-            emb, 4, iters=1, engine=e, max_train_rows=2
-        )
-        for e in ("numpy", "auto", "sql")
-    ]
-    assert capped[0] == capped[1] == capped[2]
 
 
 def test_gather_vectors_rejects_null_rows_and_ragged(spark):
@@ -1596,41 +1399,3 @@ def test_gather_vectors_rejects_null_rows_and_ragged(spark):
     empty = spark.createDataFrame([], "key long, vec array<double>")
     keys, X = _gather_vectors(empty)
     assert keys == [] and X.shape == (0, 0)
-
-
-def test_train_ivf_overcap_gate_boundary_and_exact_n_reuse(
-    spark, monkeypatch
-):
-    # the pq_train ADVICE r11 gate, applied symmetrically: dispatch
-    # reads at most CAP+1 rows (or reuses the max_train_rows branch's
-    # exact count) and the DECISION is unchanged — pool == CAP stays
-    # on numpy, CAP+1 refuses / falls back identically
-    from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
-    from cloud_native_medical_data_etl_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).limit(12)
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 12)
-    at_cap_np = S.train_ivf_centroids(emb, 4, iters=1, engine="numpy")
-    at_cap_sql = S.train_ivf_centroids(emb, 4, iters=1, engine="sql")
-    assert at_cap_np == at_cap_sql
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 11)
-    with pytest.raises(ValueError, match="refuses"):
-        S.train_ivf_centroids(emb, 4, iters=1, engine="numpy")
-    assert (
-        S.train_ivf_centroids(emb, 4, iters=1, engine="auto") == at_cap_sql
-    )
-    # exact-count reuse: unsampled max_train_rows pool (12 <= 1000)
-    # knows n without the limit scan and must gate identically
-    with pytest.raises(ValueError, match="refuses"):
-        S.train_ivf_centroids(
-            emb, 4, iters=1, engine="numpy", max_train_rows=1000
-        )
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 12)
-    assert (
-        S.train_ivf_centroids(
-            emb, 4, iters=1, engine="numpy", max_train_rows=1000
-        )
-        == at_cap_sql
-    )

@@ -132,38 +132,10 @@ def test_ct_only_fallback(spark):
     assert out.collect()[0]["condition"] == "FLU"
 
 
-def test_scalable_variant_agrees(spark):
-    fda = _fda(
-        spark,
-        [
-            dict(safetyreportid="1", drug_name="A", drug_indication="Lung Cancer"),
-            dict(safetyreportid="2", drug_name="B", drug_indication="Flu"),
-            dict(safetyreportid="3", drug_name="C", drug_indication="Type 2 Diabetes"),
-        ],
-    )
-    ct = _ct(
-        spark,
-        [
-            dict(nct_id="NCT1", enrollment_count=300, conditions="NON-SMALL CELL LUNG CANCER"),
-            dict(nct_id="NCT2", enrollment_count=40, conditions="TYPE 2 DIABETES"),
-        ],
-    )
-    exact = {
-        (r["drug_name"], r["trial_count"], r["total_enrollment"])
-        for r in enrich.enrich(fda, ct).collect()
-    }
-    approx = {
-        (r["drug_name"], r["trial_count"], r["total_enrollment"])
-        for r in enrich.enrich_scalable(fda, ct).collect()
-    }
-    assert exact == approx
-
-
-def test_empty_condition_matches_every_drug_in_both_variants(spark):
+def test_empty_condition_matches_every_drug(spark):
     """An empty-normalized condition ('' is a substring of everything)
     matches every drug with a non-empty indication under the reference
-    predicate — the scalable prefilter must not lose it (its tokens
-    are empty, so it rides a dedicated branch)."""
+    predicate."""
     fda = _fda(
         spark,
         [
@@ -182,11 +154,6 @@ def test_empty_condition_matches_every_drug_in_both_variants(spark):
         (r["drug_name"], r["trial_count"], r["total_enrollment"])
         for r in enrich.enrich(fda, ct).collect()
     }
-    approx = {
-        (r["drug_name"], r["trial_count"], r["total_enrollment"])
-        for r in enrich.enrich_scalable(fda, ct).collect()
-    }
-    assert exact == approx
     assert ("A", 1, 50.0) in exact          # '' condition reaches A
     assert ("B", 2, 150.0) in exact         # B gets both
 

@@ -8,7 +8,6 @@ compare discipline as tests/test_oracle.py: identical aliases,
 order-insensitive row sets.
 """
 
-import os
 
 import duckdb
 import pytest
@@ -17,7 +16,9 @@ from pyspark.sql import functions as F
 from cloud_native_medical_data_etl_pipeline_spark.functions import text as X
 from cloud_native_medical_data_etl_pipeline_spark.operators import curate, dedup
 
-SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from conftest import ORACLE_SF_DIR
+
+SF_DIR = ORACLE_SF_DIR
 
 
 @pytest.fixture(scope="module")

@@ -10,6 +10,8 @@ from cloud_native_medical_data_etl_pipeline_spark import schemas
 from cloud_native_medical_data_etl_pipeline_spark.operators import ingest
 from cloud_native_medical_data_etl_pipeline_spark.sources import lake, rest
 
+from conftest import ORACLE_SF_DIR
+
 # Mirrors the reference FDA mock payload (tests/test_extractors.py:32-52).
 FDA_MOCK = {
     "application_number": "NDA123456",
@@ -252,14 +254,14 @@ def test_streaming_hourly_counts(spark, tmp_path):
     # micros, since the file-stream schema declares TimestampType)
     import __spark_entry__ as em
 
-    src = em._t(spark, "/root/testdata/sf0.001", "events")
+    src = em._t(spark, ORACLE_SF_DIR, "events")
     in_dir = str(tmp_path / "in")
     src.write.parquet(in_dir)
     out_dir = str(tmp_path / "out")
     cp = str(tmp_path / "cp")
     se.run_available_now(spark, in_dir, out_dir, cp)
     got = spark.read.parquet(out_dir)
-    batch = em.q14_hourly_windows(spark, "/root/testdata/sf0.001")
+    batch = em.q14_hourly_windows(spark, ORACLE_SF_DIR)
     # append mode only emits windows the watermark has closed; every
     # emitted window must match the batch result exactly
     emitted = {tuple(r) for r in got.collect()}
@@ -469,7 +471,7 @@ def test_q140_lake_roundtrip_oracle_shape(spark):
 
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = sorted(
         tuple(r) for r in E.q140_lake_roundtrip(spark, sf).collect()
     )
@@ -501,7 +503,7 @@ def test_q142_catalog_ops_oracle_shape(spark):
 
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = sorted(tuple(r) for r in E.q142_catalog_ops(spark, sf).collect())
     want = sorted(
         tuple(r)

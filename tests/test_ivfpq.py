@@ -13,11 +13,13 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     pq_train,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+        f"{ORACLE_SF_DIR}/embeddings.parquet"
     )
 
 
@@ -258,7 +260,7 @@ def test_q138_params_never_trigger_refill_on_residuals(spark, tmp_path):
     K._refill_empty = spy
     try:
         emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
+            f"{ORACLE_SF_DIR}/embeddings.parquet"
         )
         build_ivfpq_index(
             emb, str(tmp_path / "idx"), num_cells=4, train_iters=1,
@@ -288,27 +290,6 @@ def test_build_engine_sql_matches_default(spark, tmp_path):
     assert codes_a == codes_b
 
 
-def test_build_encode_impl_arrow_matches_expr(spark, tmp_path):
-    # encode_impl="arrow" through the builder: identical codes table,
-    # raw and residual encodings both
-    df = _clustered_df(spark)
-    for res in (False, True):
-        pa = str(tmp_path / f"a{res}")
-        pb = str(tmp_path / f"b{res}")
-        build_ivfpq_index(df, pa, num_cells=2, train_iters=1, m=2, k=4,
-                          pq_iters=2, residual=res)
-        build_ivfpq_index(df, pb, num_cells=2, train_iters=1, m=2, k=4,
-                          pq_iters=2, residual=res, encode_impl="arrow")
-        a = sorted(map(tuple, spark.read.parquet(pa)
-                       .select("key", "pq_code", "cell_id").collect()))
-        b = sorted(map(tuple, spark.read.parquet(pb)
-                       .select("key", "pq_code", "cell_id").collect()))
-        assert a == b, f"residual={res}"
-    with pytest.raises(ValueError, match="encode_impl"):
-        build_ivfpq_index(df, str(tmp_path / "x"), num_cells=2,
-                          train_iters=1, m=2, k=4, encode_impl="simd")
-
-
 def test_append_to_ivfpq_index_matches_full_rebuild_assignment(spark, tmp_path):
     """Appending a delta batch against the stored sidecars must encode
     it exactly as the build pass would have (same cell membership,
@@ -318,7 +299,7 @@ def test_append_to_ivfpq_index_matches_full_rebuild_assignment(spark, tmp_path):
         append_to_ivfpq_index,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = emb.where(F.col("vec_id") % 10 == 0)
     for res in (False, True):
@@ -326,25 +307,25 @@ def test_append_to_ivfpq_index_matches_full_rebuild_assignment(spark, tmp_path):
         build_ivfpq_index(corpus, p, num_cells=4, train_iters=1, m=4,
                           k=4, pq_iters=2, residual=res)
         before = spark.read.parquet(p).count()
-        append_to_ivfpq_index(spark, batch, p, encode_impl="arrow")
+        append_to_ivfpq_index(spark, batch, p)
         idx = spark.read.parquet(p)
         assert idx.count() == before + batch.count()
         # the appended rows' codes equal what the shared expression
         # path produces against the same stored sidecars
         from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
-            _ivfpq_code_expr,
             _ivfpq_code_source,
             _load_ivfpq_sidecars,
+            _pq_code_expr,
         )
 
         cents, books, residual = _load_ivfpq_sidecars(spark, p)
         centroids = [cents[i] for i in sorted(cents)]
         src, col = _ivfpq_code_source(
-            batch, centroids, residual, "expr", "embedding", "vec_id"
+            batch, centroids, residual, "embedding", "vec_id"
         )
         want = sorted(
             map(tuple,
-                src.select("key", _ivfpq_code_expr(books, col, "expr")
+                src.select("key", _pq_code_expr(books, col)
                            .alias("pq_code"), "cell_id").collect())
         )
         got = sorted(
@@ -360,7 +341,7 @@ def test_ivfpq_append_then_query_finds_appended_vector(spark, tmp_path):
         append_to_ivfpq_index,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     corpus = emb.where(F.col("vec_id") != 0)
     batch = emb.where(F.col("vec_id") == 0)
     p = str(tmp_path / "idx")

@@ -11,7 +11,9 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from conftest import ORACLE_SF_DIR
+
+SF_DIR = ORACLE_SF_DIR
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",

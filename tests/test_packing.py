@@ -9,12 +9,14 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.packing import (
     pack_sequences,
 )
 
+from conftest import ORACLE_SF_DIR
+
 BUDGET = 64
 
 
 @pytest.fixture(scope="module")
 def doc_tokens(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
     return docs.select(
         "doc_id", X.token_count("text").alias("n_tokens")
     ).persist()

@@ -11,7 +11,9 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from conftest import ORACLE_SF_DIR
+
+SF_DIR = ORACLE_SF_DIR
 # bench scale for the pins whose gates fire only above the unit-test
 # stats floor; defaults to the sf0.1 set next to SF_DIR
 SCALE_SF_DIR = os.environ.get(
@@ -428,7 +430,7 @@ def test_bench_consume_full_keeps_q02_joins(spark):
         r"ShuffledHashJoin|CartesianProduct)"
     )
     df = E.queries()["q02_containment_enrich"](
-        spark, "/root/testdata/sf0.001"
+        spark, ORACLE_SF_DIR
     )
     full = df._jdf.queryExecution().executedPlan().toString()
     from pyspark.sql import functions as F
@@ -467,7 +469,7 @@ def test_q15_tokenizes_once(spark):
     the split count in the executed plan multiplies and this pins it."""
     import __spark_entry__ as E
 
-    df = E.queries()["q15_text_stats"](spark, "/root/testdata/sf0.001")
+    df = E.queries()["q15_text_stats"](spark, ORACLE_SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("split(") == 1, plan[:2000]
     assert "_toks" in plan
@@ -482,7 +484,7 @@ def test_bpe_arrow_encode_is_shuffle_free(spark):
         apply_bpe_merges,
     )
 
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    df = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
     enc = apply_bpe_merges(df, [("a", "b"), ("ab", "c")], impl="arrow")
     plan = _executed_plan(enc)
     assert "Exchange" not in plan, plan

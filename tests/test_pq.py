@@ -13,6 +13,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     pq_train,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 def _emb(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -140,7 +142,7 @@ def test_pq_empty_and_null_vectors(spark):
 
 
 def test_pq_recall_vs_brute_force_on_real_embeddings(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     books = pq_train(emb, m=8, k=16, iters=2)
     enc = pq_encode(emb, books)
     q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
@@ -160,7 +162,7 @@ def test_pq_recall_vs_brute_force_on_real_embeddings(spark):
 
 
 def test_pq_train_hash_sample_mod(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     # mod=1 keeps every row: identical codebooks to the unsampled path
     full = pq_train(emb, m=2, k=4, iters=1)
     mod1 = pq_train(emb, m=2, k=4, iters=1, train_sample_mod=1)
@@ -219,7 +221,7 @@ def test_q137_params_never_trigger_refill_on_real_embeddings(spark):
 
     K._refill_empty = spy
     try:
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
         # default engine — the exact call q137 makes; engine equality
         # (pinned elsewhere in this file) carries the invariant to the
         # SQL spec path the oracle unrolls
@@ -239,7 +241,7 @@ def test_pq_train_engines_agree_on_real_embeddings(spark):
     in-engine loop the DuckDB oracles unroll).  Every rounding in
     `_kmeans_np` mirrors the Spark expression it replaces, so equality
     is exact, not approximate."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     b_sql = pq_train(emb, m=8, k=16, iters=2, engine="sql")
     b_np = pq_train(emb, m=8, k=16, iters=2, engine="numpy")
     assert b_np == b_sql
@@ -279,7 +281,7 @@ def test_pq_train_k256_production_regime(spark):
     named scale defect (plan-compile-bound for minutes at k>=64 on the
     in-engine path).  The numpy engine trains it in seconds; shapes
     and code ranges must hold."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     books = pq_train(emb, m=8, k=256, iters=2)
     assert len(books) == 8 and all(len(b) == 256 for b in books)
     enc = pq_encode(emb, books)
@@ -313,26 +315,6 @@ def test_md5_uniform_python_replica_matches_spark(spark):
         }
         for k in keys:
             assert got[k] == md5_uniform_py(k, salt), (salt, k)
-
-
-def test_pq_encode_arrow_matches_expression_path(spark):
-    """`pq_encode(impl="arrow")` (the vectorized encode lever for the
-    one unavoidable full-corpus pass) must produce IDENTICAL codes to
-    the expression path: same dim-by-dim fold order, same 9dp
-    rounding, same first-occurrence argmin."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = pq_train(emb, m=8, k=16, iters=2)
-    a = sorted(
-        (r["key"], tuple(r["pq_code"]))
-        for r in pq_encode(emb, books).collect()
-    )
-    b = sorted(
-        (r["key"], tuple(r["pq_code"]))
-        for r in pq_encode(emb, books, impl="arrow").collect()
-    )
-    assert a == b
-    with pytest.raises(ValueError, match="impl"):
-        pq_encode(emb, books, impl="simd")
 
 
 def test_pq_train_null_keys_excluded_both_engines(spark):
@@ -460,7 +442,7 @@ def test_pq_train_default_is_uncapped_oracle_spec(spark):
     # whole pool, no silent sample (ADVICE r10) — numpy-vs-sql
     # equality on the same pool is pinned elsewhere; here the default
     # run must equal the explicit uncapped run
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     default = pq_train(emb, m=2, k=4, iters=1)
     spec = pq_train(
         emb, m=2, k=4, iters=1, max_train_rows=None, train_sample_mod=None
@@ -475,7 +457,7 @@ def test_pq_train_numpy_refuses_overcap_auto_falls_back(spark, monkeypatch):
     from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
 
     emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+        f"{ORACLE_SF_DIR}/embeddings.parquet"
     ).limit(12)
     monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 5)
     with pytest.raises(ValueError, match="refuses"):
@@ -494,7 +476,7 @@ def test_pq_train_overcap_gate_boundary_and_exact_n_reuse(spark, monkeypatch):
     from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
 
     emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+        f"{ORACLE_SF_DIR}/embeddings.parquet"
     ).limit(12)
     monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 12)
     # exactly at the cap: numpy accepted, identical to sql

@@ -7,9 +7,11 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.profile import (
     approx_profile,
 )
 
+from conftest import ORACLE_SF_DIR
+
 
 def test_profile_estimates_within_bounds(spark):
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    o = spark.read.parquet(f"{ORACLE_SF_DIR}/orders.parquet")
     prof = {r["column"]: r for r in approx_profile(
         o, ["o_custkey", "o_totalprice", "o_orderpriority"]
     ).collect()}
@@ -33,7 +35,7 @@ def test_profile_estimates_within_bounds(spark):
 
 
 def test_profile_single_scan(spark):
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    o = spark.read.parquet(f"{ORACLE_SF_DIR}/orders.parquet")
     plan = (
         approx_profile(o)._jdf.queryExecution().executedPlan().toString()
     )
@@ -83,7 +85,7 @@ def test_deterministic_profile_exact_columns(spark):
         profile_deterministic,
     )
 
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    o = spark.read.parquet(f"{ORACLE_SF_DIR}/orders.parquet")
     prof = {
         r["column"]: r
         for r in profile_deterministic(
@@ -113,7 +115,7 @@ def test_deterministic_profile_is_deterministic(spark):
         profile_deterministic,
     )
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    d = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
     a = sorted(map(tuple, profile_deterministic(d, sample_key="doc_id").collect()))
     b = sorted(
         map(

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from cloud_native_medical_data_etl_pipeline_spark.functions import medical as M
 from cloud_native_medical_data_etl_pipeline_spark.functions import text as X
 
+from conftest import SF_0_01_DIR
+
 AGE_BINS = [0, 18, 30, 50, 65, 100]
 # reference labels: drug_transformer.py:119
 AGE_LABELS = ["Pediatric", "Young Adult", "Adult", "Senior", "Elderly"]
@@ -148,7 +150,7 @@ def test_sessionize_invariants(spark, batch):
 # contract that makes the swap safe.
 # ---------------------------------------------------------------------------
 def test_approx_count_distinct_within_rsd(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
+    ev = spark.read.parquet(f"{SF_0_01_DIR}/events.parquet")
     row = ev.agg(
         F.countDistinct("user_id").alias("exact"),
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx"),
@@ -158,7 +160,7 @@ def test_approx_count_distinct_within_rsd(spark):
 
 
 def test_approx_percentile_within_accuracy(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
+    ev = spark.read.parquet(f"{SF_0_01_DIR}/events.parquet")
     row = ev.agg(
         F.expr("percentile(value, 0.95)").alias("exact"),
         F.percentile_approx("value", 0.95, 10000).alias("approx"),
@@ -960,276 +962,6 @@ def test_kcenter_engines_agree_under_null_elements(spark, rows, k):
     )
     b = sorted(
         tuple(r) for r in kcenter_select(df, k=k, engine="sql").collect()
-    )
-    assert a == b
-
-
-@settings(max_examples=4, deadline=None)
-@given(_kc_rows, st.sampled_from([3, 6]))
-def test_kcenter_arrow_hop_kernel_agrees_under_null_elements(spark, rows, k):
-    """The Arrow per-hop sqdist kernel must replay the expression
-    path's NULL contract exactly — NULL-element CENTERS (NaN-poisoned
-    fold → all-NULL hop distances) and NULL-element rows
-    (null-propagating lanes) — under randomized NULL patterns, not
-    just the pinned unit case."""
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        kcenter_select,
-    )
-
-    df = spark.createDataFrame(
-        [(key, vec) for key, vec in rows],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        tuple(r)
-        for r in kcenter_select(df, k=k, engine="sql", impl="expr").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in kcenter_select(df, k=k, engine="sql", impl="arrow").collect()
-    )
-    assert a == b
-
-
-# cosine_topk arrow kernel: the r10 exact-fold replay claim, property
-# form — bit-identical scores INCLUDING NULL rows, NULL elements,
-# zero-norm vectors, and rounding-boundary lanes, under arbitrary
-# float mixes (the kernel replays the same left-to-right fold, so
-# float noise must cancel exactly, not approximately)
-_ct_vals = st.sampled_from([0.0, 1.0, -1.0, 0.5, 1e-3, 7.25, None])
-_ct_rows = st.lists(
-    st.tuples(
-        st.integers(0, 10**6),
-        st.one_of(
-            st.none(),
-            st.lists(_ct_vals, min_size=3, max_size=3),
-        ),
-    ),
-    min_size=1,
-    max_size=12,
-    unique_by=lambda t: t[0],
-)
-
-
-@settings(max_examples=6, deadline=None)
-@given(_ct_rows, st.sampled_from([[1.0, 0.0, 2.0], [0.5, -1.0, 1e-3]]))
-def test_cosine_topk_arrow_bit_identical_property(spark, rows, qv):
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        cosine_topk,
-    )
-
-    df = spark.createDataFrame(
-        [(key, vec) for key, vec in rows],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        tuple(r) for r in cosine_topk(df, qv, k=5, impl="expr").collect()
-    )
-    b = sorted(
-        tuple(r) for r in cosine_topk(df, qv, k=5, impl="arrow").collect()
-    )
-    assert a == b
-
-
-@settings(max_examples=5, deadline=None)
-@given(_ct_rows, _ct_rows)
-def test_mutual_nn_gemm_bit_identical_property(spark, rows_a, rows_b):
-    """The batch GEMM scorer (shared by cosine_topk_batch /
-    mutual_nearest_neighbors / hard_negatives) replays the exact fold
-    too — expr and gemm alignments must be tuple-equal under NULL
-    rows, NULL elements, and zero-norm vectors on BOTH sides."""
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        mutual_nearest_neighbors,
-    )
-
-    da = spark.createDataFrame(
-        [(key, vec) for key, vec in rows_a],
-        "vec_id long, embedding array<double>",
-    )
-    db = spark.createDataFrame(
-        [(key, vec) for key, vec in rows_b],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        tuple(r)
-        for r in mutual_nearest_neighbors(da, db, impl="expr").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in mutual_nearest_neighbors(da, db, impl="gemm").collect()
-    )
-    assert a == b
-
-
-# integer-ish values keep every partial sum exact in float64, so the
-# F.avg-fold vs np.mean channel is closed by construction and any
-# engine divergence is a LOGIC bug (init order, empty-cell fallback,
-# assignment tiebreak), not float noise
-_iv_rows = st.lists(
-    st.tuples(
-        st.integers(0, 10**6),
-        st.lists(st.sampled_from([0.0, 1.0, 2.0, 3.0]), min_size=2, max_size=2),
-    ),
-    min_size=1,
-    max_size=10,
-    unique_by=lambda t: t[0],
-)
-
-
-@settings(max_examples=5, deadline=None)
-@given(_iv_rows, st.sampled_from([2, 4]), st.sampled_from([1, 2]))
-def test_train_ivf_engines_agree_property(spark, rows, cells, iters):
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    df = spark.createDataFrame(
-        [(key, vec) for key, vec in rows],
-        "vec_id long, embedding array<double>",
-    )
-    a = train_ivf_centroids(df, cells, iters=iters, engine="numpy")
-    b = train_ivf_centroids(df, cells, iters=iters, engine="sql")
-    assert a == b
-
-
-# assign_cells gemm parity: the r9 GEMM ingest kernel's documented
-# contract is "ulp-level differences can flip only exact near-ties",
-# so arbitrary centroids are NOT a bit-identity surface.  Scaled basis
-# vectors ARE: cosine to s·e_i is x_i/|x| (power-of-two scales cancel
-# EXACTLY in float), so both impls rank the raw lane values — argmax,
-# lowest-index ties (duplicate centroids included), and the NULL
-# contract (NULL vec / NULL element / zero-norm row -> NULL cell_id)
-# must agree exactly under randomized inputs.
-_ac_vals = st.sampled_from([0.0, 1.0, 2.0, -1.0, -0.5, None])
-_ac_rows = st.lists(
-    st.tuples(
-        st.integers(0, 10**6),
-        st.one_of(
-            st.none(),
-            st.lists(_ac_vals, min_size=3, max_size=3),
-        ),
-    ),
-    min_size=1,
-    max_size=10,
-    unique_by=lambda t: t[0],
-)
-_ac_cents = st.sampled_from(
-    [
-        [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]],
-        # duplicate direction at a power-of-two scale: an EXACT
-        # cosine tie with its twin -> lowest-index tiebreak on both
-        [[0.0, 1.0, 0.0], [0.0, 2.0, 0.0], [1.0, 0.0, 0.0]],
-        [[0.0, 0.0, 2.0], [2.0, 0.0, 0.0]],
-    ]
-)
-
-
-@settings(max_examples=6, deadline=None)
-@given(_ac_rows, _ac_cents)
-def test_assign_cells_gemm_agrees_on_basis_centroids(spark, rows, cents):
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        assign_cells,
-    )
-
-    df = spark.createDataFrame(
-        [(key, vec) for key, vec in rows],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        (r["vec_id"], r["cell_id"])
-        for r in assign_cells(df, cents, impl="expr").collect()
-    )
-    b = sorted(
-        (r["vec_id"], r["cell_id"])
-        for r in assign_cells(df, cents, impl="gemm").collect()
-    )
-    assert a == b
-
-
-# centroid_outlier_scores arrow kernel: the docstring contract is
-# BIT-EQUAL scores (exact fold replay + Spark-exact rounding), so the
-# property runs the full operator — per-group mean centroid then
-# per-row pair cosine — on arbitrary float mixes, NULL embeddings,
-# and NULL elements, and demands exact row equality.
-_co_vals = st.sampled_from([0.0, 1.0, -1.0, 0.5, 1e-3, 7.25, None])
-_co_rows = st.lists(
-    st.tuples(
-        st.integers(0, 10**6),
-        st.sampled_from(["g0", "g1"]),
-        st.one_of(
-            st.none(),
-            st.lists(_co_vals, min_size=3, max_size=3),
-        ),
-    ),
-    min_size=1,
-    max_size=12,
-    unique_by=lambda t: t[0],
-)
-
-
-@settings(max_examples=6, deadline=None)
-@given(_co_rows)
-def test_centroid_outlier_scores_arrow_bit_identical_property(spark, rows):
-    from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
-        centroid_outlier_scores,
-    )
-
-    df = spark.createDataFrame(
-        [(key, g, vec) for key, g, vec in rows],
-        "vec_id long, label string, embedding array<double>",
-    )
-    a = sorted(
-        tuple(r) for r in centroid_outlier_scores(df, impl="expr").collect()
-    )
-    b = sorted(
-        tuple(r) for r in centroid_outlier_scores(df, impl="arrow").collect()
-    )
-    assert a == b
-
-
-# pq_encode arrow kernel: "identical codes by construction (same fold
-# order, same roundings, same argmin tiebreak)" — property form over
-# arbitrary float mixes and randomized codebooks, including exact
-# distance ties from duplicated codewords.  NULL-ELEMENT vectors are
-# outside the contract (the expr battery null-propagates to a NULL
-# code lane; the numpy kernel sees NaN) — whole-NULL vectors are the
-# contracted NULL surface (both impls drop them).
-_pe_vals = st.sampled_from([0.0, 1.0, -1.0, 0.5, 1e-3, 7.25])
-_pe_vec = st.lists(_pe_vals, min_size=4, max_size=4)
-_pe_rows = st.lists(
-    st.tuples(st.integers(0, 10**6), st.one_of(st.none(), _pe_vec)),
-    min_size=1,
-    max_size=10,
-    unique_by=lambda t: t[0],
-)
-_pe_books = st.lists(
-    st.lists(st.lists(_pe_vals, min_size=2, max_size=2), min_size=2, max_size=3),
-    min_size=2,
-    max_size=2,
-)
-
-
-@settings(max_examples=6, deadline=None)
-@given(_pe_rows, _pe_books)
-def test_pq_encode_arrow_bit_identical_property(spark, rows, books):
-    from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
-        pq_encode,
-    )
-
-    # both subspace codebooks need the same k (build invariant)
-    k = min(len(b) for b in books)
-    books = [b[:k] for b in books]
-    df = spark.createDataFrame(
-        [(key, vec) for key, vec in rows],
-        "vec_id long, embedding array<double>",
-    )
-    a = sorted(
-        (r["key"], tuple(r["pq_code"]))
-        for r in pq_encode(df, books, impl="expr").collect()
-    )
-    b = sorted(
-        (r["key"], tuple(r["pq_code"]))
-        for r in pq_encode(df, books, impl="arrow").collect()
     )
     assert a == b
 

@@ -8,6 +8,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     quantize_embeddings_int8,
 )
 
+from conftest import ORACLE_SF_DIR, SF_0_01_DIR
+
 
 def test_quantize_hand_computed(spark):
     df = spark.createDataFrame(
@@ -35,7 +37,7 @@ def test_quantize_hand_computed(spark):
 def test_quantize_roundtrip_error_bound(spark):
     # reconstruction error is bounded by scale/2 per element by
     # construction of round(); verify on real data and via dequantize
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     q = quantize_embeddings_int8(emb)
     bad = q.where(
         (F.col("scale") > 0) & (F.col("mean_abs_err") > F.col("scale") / 2 + 1e-9)
@@ -129,7 +131,7 @@ def test_hash_split_group_integrity(spark):
         hash_split_by_group,
     )
 
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
+    ev = spark.read.parquet(f"{SF_0_01_DIR}/events.parquet")
     out = hash_split_by_group(ev, "user_id")
     # THE invariant: every user appears in exactly one split
     leaky = (

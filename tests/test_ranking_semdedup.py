@@ -8,7 +8,9 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.semdedup import (
     semantic_dedup_keep,
 )
 
-SF = "/root/testdata/sf0.001"
+from conftest import ORACLE_SF_DIR
+
+SF = ORACLE_SF_DIR
 
 
 def _docs(spark):
@@ -169,7 +171,7 @@ def test_q141_bm25_indexed_oracle_shape(spark):
 
     import __spark_entry__ as E
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = sorted(
         tuple(r) for r in E.q141_bm25_indexed(spark, sf).collect()
     )

@@ -12,7 +12,9 @@ from cloud_native_medical_data_etl_pipeline_spark.sources.events_io import (
     read_events,
 )
 
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import ORACLE_SF_DIR
+
+SF_DIR = ORACLE_SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -155,7 +157,7 @@ def test_winsorize_approx_tracks_exact(spark):
         read_events,
     )
 
-    ev = read_events(spark, "/root/testdata/sf0.001/events.parquet")
+    ev = read_events(spark, f"{ORACLE_SF_DIR}/events.parquet")
     exact = {
         r["event_id"]: r["clipped"]
         for r in winsorize(ev, "value", "event_type", exact=True).collect()

@@ -10,9 +10,11 @@ from cloud_native_medical_data_etl_pipeline_spark.sources.events_io import read_
 from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 from cloud_native_medical_data_etl_pipeline_spark.streaming import sessions as SS
 
+from conftest import ORACLE_SF_DIR
+
 
 def test_hourly_counts_available_now_matches_batch(spark):
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = ORACLE_SF_DIR
     streamed = SE.hourly_counts_available_now(
         spark, f"{sf_dir}/events.parquet"
     )
@@ -84,7 +86,7 @@ def test_sessions_available_now_equals_batch(spark):
         sessions as BS,
     )
 
-    path = "/root/testdata/sf0.001/events.parquet"
+    path = f"{ORACLE_SF_DIR}/events.parquet"
     got = sorted(
         tuple(r)
         for r in SS.sessions_available_now(spark, path, gap_minutes=30).collect()
@@ -111,7 +113,7 @@ def test_streaming_dedup_collapses_injected_duplicates(spark):
     exactly one row per event_id."""
     from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 
-    path = "/root/testdata/sf0.001/events.parquet"
+    path = f"{ORACLE_SF_DIR}/events.parquet"
     out = SE.deduped_daily_counts_available_now(spark, path)
     total = out.agg({"n_events": "sum"}).collect()[0][0]
     n_ids = (
@@ -143,7 +145,7 @@ def test_stream_static_enrich_matches_batch(spark):
 
     from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     dim = spark.read.parquet(f"{sf}/customer.parquet").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -174,7 +176,7 @@ def test_stream_stream_join_matches_batch(spark):
 
     from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     streamed = SE.click_purchase_attribution_available_now(
         spark, f"{sf}/events.parquet", gap_minutes=30
     )
@@ -206,7 +208,7 @@ def test_stream_to_lake_upsert_exactly_once(spark, tmp_path):
     from cloud_native_medical_data_etl_pipeline_spark.sources import lake
     from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     base = str(tmp_path / "lake")
     ck1 = str(tmp_path / "ck1")
 
@@ -331,7 +333,7 @@ def test_streaming_zscore_matches_python_replay(spark):
     )
     from cloud_native_medical_data_etl_pipeline_spark.streaming import anomaly as SA
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     got = {
         (r["event_id"], r["event_type"]): r["z"]
         for r in SA.zscore_flags_available_now(
@@ -616,7 +618,7 @@ def test_stream_to_lake_upsert_oracle_roundtrip(spark, tmp_path):
 
     from cloud_native_medical_data_etl_pipeline_spark.streaming import events as SE
 
-    sf = "/root/testdata/sf0.001"
+    sf = ORACLE_SF_DIR
     base, ck1, ck2 = (
         str(tmp_path / "lake"),
         str(tmp_path / "ck1"),

@@ -8,14 +8,15 @@ incompatible types, this fails first with the actual schema instead of
 13 queries dying at analysis time.
 """
 
-import os
 
 import pytest
 from pyspark.sql import types as T
 
 from cloud_native_medical_data_etl_pipeline_spark.sources.events_io import read_events
 
-SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+from conftest import ORACLE_SF_DIR
+
+SF_DIR = ORACLE_SF_DIR
 
 # column -> type-category ('ts' means any timestamp flavor; events.ts
 # additionally tolerates nanos-as-long, which read_events normalizes)

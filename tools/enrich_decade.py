@@ -1,34 +1,23 @@
 #!/usr/bin/env python
 """Measured scale evidence for the containment-enrichment centerpiece
-(J1, q02) and its 100× form `enrich.enrich_scalable` (evidence-only,
-no kernel changes).
+(J1, q02).
 
 Claim under test (SCALING.md "Containment enrichment"): the broadcast
 NLJ's cost is |indications| × |conditions| exact containment
 comparisons — fine while the condition summary broadcasts, quadratic
-at corpus scale — and `enrich_scalable`'s token-overlap candidate
-join bounds the verified pairs by shared-token fan-out instead, same
-answer.
+at corpus scale.
 
-Synthetic frames constructed so parity is EXACT by construction: the
-vocabulary is fixed-width tokens 'w'+5 digits, so a normalized
-(de-spaced) containment can only occur at 6-char-aligned offsets
-(any other offset starts with a digit, indications start with 'w') —
-i.e. every containment is boundary-aligned and the prefilter's two
-documented recall losses (cross-word-boundary and sub-word matches)
-cannot occur. 60% of indications are contiguous 2-word slices of a
-condition phrase (guaranteed matches), 40% are arbitrary 2-word
-phrases (mostly non-matches, accidental aligned matches fine — both
-paths see them identically). Result parity is asserted row-exact at
-every size.
+Synthetic frames: the vocabulary is fixed-width tokens 'w'+5 digits.
+60% of indications are contiguous 2-word slices of a condition phrase
+(guaranteed matches), 40% are arbitrary 2-word phrases (mostly
+non-matches).
 
 Sizes: 20k×20k with a 2k-word vocabulary (400M NLJ comparisons) and
-100k×100k with a 20k-word vocabulary (10¹⁰ comparisons, 25×; vocab
-scaled with the corpus keeps per-token fan-out realistic). Timed
+100k×100k with a 20k-word vocabulary (10¹⁰ comparisons, 25×). Timed
 consumption is a checksum aggregate over EVERY output column — a
 bare count() lets Catalyst eliminate the final left join (key-unique
 aggregated right side, no referenced columns) and times nothing.
-Wall is one untimed warm-up then min-of-2 per path.
+Wall is one untimed warm-up then min-of-2.
 
 Run: `python tools/enrich_decade.py` (one JSON line to stdout).
 """
@@ -117,160 +106,6 @@ def _run(fn):
     return rows, matched, round(min(walls), 3)
 
 
-def _seam_frames(spark, n_conds, drugs_per_class):
-    """A corpus where every match is one of the prefilter's two
-    DOCUMENTED recall seams, plus an aligned control class.
-
-    Condition c (c < n_conds) is the two-token phrase
-    ``p%06da q%06db`` — de-spaced form ``p{c}aq{c}b``.  Drug classes
-    (drug j targets condition c = j mod n_conds; names carry the
-    class):
-
-      ALIGNED   indication = ``q%06db``  (the full second token):
-                shared token -> prefilter hit; recall must be 1.
-      SUBWORD   indication = ``p%06d``   (strict PREFIX of the first
-                token): substring of the de-spaced condition, but a
-                substring of one word is not a shared token ->
-                prefilter miss by design.
-      CROSSWORD indication = ``aq%06d``  (spans the word boundary):
-                contained only in the DE-SPACED condition, shares no
-                token -> prefilter miss by design.
-
-    The fixed-width digit construction makes each seam indication
-    match EXACTLY its one target condition under the exact predicate
-    ('p'/'aq' anchors occur nowhere else), so expected counts are
-    closed-form."""
-    ct = spark.range(n_conds).select(
-        F.format_string("NCT%07d", F.col("id")).alias("nct_id"),
-        F.format_string("p%06da q%06db", F.col("id"), F.col("id")).alias(
-            "conditions_clean"
-        ),
-        ((F.col("id") % 500) + 1).cast("double").alias("enrollment_count"),
-        (F.col("id") % 2 == 0).alias("is_completed"),
-    )
-    base = spark.range(drugs_per_class * 3)
-    cls = F.col("id") % 3  # 0 aligned, 1 subword, 2 crossword
-    c = (F.col("id") / 3).cast("long") % n_conds
-    fda = base.select(
-        F.format_string("R%08d", F.col("id")).alias("safetyreportid"),
-        F.concat(
-            F.element_at(
-                F.array(F.lit("ALIGNED"), F.lit("SUBWORD"), F.lit("CROSSWORD")),
-                (cls + 1).cast("int"),
-            ),
-            F.format_string("%06d", F.col("id")),
-        ).alias("drug_name_clean"),
-        F.when(cls == 0, F.format_string("q%06db", c))
-        .when(cls == 1, F.format_string("p%06d", c))
-        .otherwise(F.format_string("aq%06d", c))
-        .alias("drug_indication"),
-        ((F.col("id") % 7) + 1.0).alias("severity_score"),
-        (F.col("id") % 11 == 0).cast("long").alias("seriousnessdeath"),
-        (F.col("id") % 5 == 0).cast("long").alias("seriousnesshospitalization"),
-    )
-    return fda.localCheckpoint(), ct.localCheckpoint()
-
-
-def _seam_recall(spark, n_conds=2_000, drugs_per_class=2_000):
-    """Per-class recall of enrich_scalable vs exact enrich on the
-    seam corpus: matched-drug counts and trial-count mass by class."""
-    fda, ct = _seam_frames(spark, n_conds, drugs_per_class)
-    out = {}
-    exact = {r["drug_name"]: r for r in enrich.enrich(fda, ct).collect()}
-    approx = {
-        r["drug_name"]: r for r in enrich.enrich_scalable(fda, ct).collect()
-    }
-    assert exact.keys() == approx.keys()
-    for cls in ("ALIGNED", "SUBWORD", "CROSSWORD"):
-        keys = [k for k in exact if k.startswith(cls)]
-        e_matched = sum(1 for k in keys if exact[k]["trial_count"] > 0)
-        a_matched = sum(1 for k in keys if approx[k]["trial_count"] > 0)
-        e_mass = sum(exact[k]["trial_count"] for k in keys)
-        a_mass = sum(approx[k]["trial_count"] for k in keys)
-        diverged = sum(
-            1 for k in keys if tuple(exact[k]) != tuple(approx[k])
-        )
-        out[cls.lower()] = {
-            "drugs": len(keys),
-            "exact_matched": e_matched,
-            "scalable_matched": a_matched,
-            "recall_drugs": round(a_matched / e_matched, 4)
-            if e_matched
-            else None,
-            "recall_trial_mass": round(a_mass / e_mass, 4) if e_mass else None,
-            "rows_diverged": diverged,
-        }
-    # the control class must be row-exact; the seam classes are
-    # TOTAL losses for pairs whose only evidence is a seam match —
-    # that is the documented approximation, now a recorded number
-    assert out["aligned"]["rows_diverged"] == 0, out
-    assert out["aligned"]["recall_drugs"] == 1.0, out
-    assert out["subword"]["scalable_matched"] == 0, out
-    assert out["crossword"]["scalable_matched"] == 0, out
-    return out
-
-
-def _real_corpus_incidence(spark, sf_dir="/root/testdata/sf0.1"):
-    """Seam incidence on the realistic corpus: of all exact
-    containment pairs in the q02 part-derived indication/condition
-    frames, how many would the token-overlap prefilter miss?"""
-    from cloud_native_medical_data_etl_pipeline_spark.functions import (
-        medical as M,
-    )
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    indications = (
-        part.select(
-            F.col("p_brand").alias("drug_name"),
-            F.col("p_type").alias("indication"),
-            M.normalize_for_join("p_type").alias("indication_norm"),
-        )
-        .where(F.col("indication_norm") != "")
-        .distinct()
-    )
-    conditions = (
-        part.select(F.concat_ws(" ", "p_type", "p_brand").alias("condition"))
-        .distinct()
-        .withColumn("condition_norm", M.normalize_for_join("condition"))
-    )
-    pred = F.col("condition_norm").contains(
-        F.col("indication_norm")
-    ) | F.col("indication_norm").contains(F.col("condition_norm"))
-    exact_pairs = (
-        indications.select("drug_name", "indication_norm")
-        .join(F.broadcast(conditions), pred, "inner")
-        .select("drug_name", "condition")
-    )
-    tok = lambda col, src: F.explode(  # noqa: E731
-        F.array_distinct(F.split(F.lower(F.trim(F.col(src))), r"\s+"))
-    ).alias(col)
-    ind_tokens = indications.select("drug_name", "indication_norm", tok("token", "indication"))
-    cond_tokens = conditions.select("condition", "condition_norm", tok("token", "condition"))
-    prefilter_pairs = (
-        ind_tokens.join(cond_tokens, "token")
-        .where(
-            F.col("condition_norm").contains(F.col("indication_norm"))
-            | F.col("indication_norm").contains(F.col("condition_norm"))
-        )
-        .select("drug_name", "condition")
-        .distinct()
-    )
-    # materialize the NLJ result once: count() and the anti-join are
-    # two actions, and re-evaluating the containment NLJ is the
-    # dominant cost of this probe
-    exact_d = exact_pairs.distinct().localCheckpoint(eager=True)
-    n_exact = exact_d.count()
-    missed = exact_d.join(
-        prefilter_pairs, ["drug_name", "condition"], "left_anti"
-    )
-    n_missed = missed.count()
-    return {
-        "exact_pairs": n_exact,
-        "prefilter_missed": n_missed,
-        "recall": round(1.0 - n_missed / n_exact, 6) if n_exact else None,
-    }
-
-
 def main():
     spark = get_spark(master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
@@ -281,26 +116,14 @@ def main():
     ):
         fda, ct = _frames(spark, n, n, vocab)
         nlj_rows, matched, nlj_s = _run(lambda: enrich.enrich(fda, ct))
-        sc_rows, _, sc_s = _run(lambda: enrich.enrich_scalable(fda, ct))
-        assert nlj_rows == sc_rows, f"{label}: outputs diverge"
         results[label] = {
             "vocab": vocab,
             "nlj_comparisons": n * n,
             "enrich_nlj_sec": nlj_s,
-            "enrich_scalable_sec": sc_s,
-            "speedup": round(nlj_s / sc_s, 2) if sc_s else None,
             "out_rows": len(nlj_rows),
             "drugs_with_matches": matched,
-            "result_parity": "row-exact",
         }
         print(f"  {label}: {results[label]}", file=sys.stderr)
-    results["seam_recall"] = _seam_recall(spark)
-    print(f"  seam_recall: {results['seam_recall']}", file=sys.stderr)
-    results["real_corpus_incidence"] = _real_corpus_incidence(spark)
-    print(
-        f"  real_corpus_incidence: {results['real_corpus_incidence']}",
-        file=sys.stderr,
-    )
     print(json.dumps({"enrich_decade": results}))
 
 
