@@ -12,6 +12,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Driver JIT budget: one C1 and one C2 compiler thread. On 4 CPUs HotSpot
+# starts 1 C1 + 2 C2; a cold ETL day queues more hot methods (Janino,
+# Java serialization, py4j) than C2 can drain, so both C2 threads stay
+# busy to the end of a run and JIT CPU grows with C2 threads x wall
+# time. On a 4-CPU VM one C2 thread cut the JIT's CPU per warm ETL day
+# from 9.6 to 6.0 s and raised `etl_day_large` rows per CPU second by
+# 21 % (BASELINE.md, "Driver JIT budget"); the cost is that hot query
+# code reaches C2 later (the bench.py headline total got ~5 % slower).
+# On 2 CPUs this is already HotSpot's default. Not C1-only
+# (-XX:TieredStopAtLevel=1): in local mode tasks run in the driver JVM,
+# and the headline queries got 59 % slower.
+DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+
 
 def get_spark(
     app_name: str = "medical-etl-spark",
@@ -23,6 +36,15 @@ def get_spark(
 
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS or *]``.
+
+    ``DRIVER_JAVA_OPTIONS`` go in as ``spark.driver.extraJavaOptions``.
+    Builder conf only shapes a driver JVM that this call starts itself
+    (plain ``python``/``pytest``): once a JVM is running, as under
+    ``spark-submit`` or a Kubernetes driver pod, it is too late, and the
+    deployment must pass the same flag with
+    ``--driver-java-options "-XX:CICompilerCount=2"``. An ``extra_conf``
+    that sets ``spark.driver.extraJavaOptions`` replaces the default, so
+    it must repeat the flag to keep it.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -53,6 +75,7 @@ def get_spark(
         # Reasonable split size so huge parquet files parallelize.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         # keep catalog tables (bucketed writes) out of the repo cwd
         .config(
             "spark.sql.warehouse.dir",

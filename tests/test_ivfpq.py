@@ -2,9 +2,13 @@
 ivfpq_topk_indexed): cell-pruned ADC over a persisted code table —
 the 100 TB ANN layout (IVF prunes partitions, PQ shrinks the scan)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from cloud_native_medical_data_etl_pipeline_spark.operators._kmeans_np import (
+    round_spark,
+)
 from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     build_ivfpq_index,
     ivfpq_topk_indexed,
@@ -290,18 +294,37 @@ def test_build_engine_sql_matches_default(spark, tmp_path):
     assert codes_a == codes_b
 
 
+def _nearest(points, table):
+    """Row-wise lowest-index argmin of the 9dp-rounded squared L2
+    distance from each point to every row of ``table``, summed left to
+    right over the dimensions (the documented membership/code rule)."""
+    sq = (points[:, None, :] - table[None, :, :]) ** 2
+    d = round_spark(np.cumsum(sq, axis=2)[:, :, -1], 9)
+    return d.argmin(axis=1)  # first occurrence of the minimum
+
+
 def test_append_to_ivfpq_index_matches_full_rebuild_assignment(spark, tmp_path):
     """Appending a delta batch against the stored sidecars must encode
     it exactly as the build pass would have (same cell membership,
     same codes against the fixed codebooks), for both encodings; the
-    stored corpus is untouched."""
+    stored corpus is untouched.  The expectation restates the rule in
+    NumPy from the stored centroids and codebooks: nearest centroid,
+    then per subspace the nearest codeword to the vector (or to its
+    residual from that centroid), ties to the lowest index."""
     from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
+        _load_ivfpq_sidecars,
         append_to_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = emb.where(F.col("vec_id") % 10 == 0)
+    rows = sorted(
+        (r["vec_id"], r["embedding"])
+        for r in emb.where(F.col("embedding").isNotNull()).collect()
+    )
+    keys = [k for k, _ in rows]
+    vecs = np.array([v for _, v in rows], dtype=np.float64)
     for res in (False, True):
         p = str(tmp_path / f"idx{res}")
         build_ivfpq_index(corpus, p, num_cells=4, train_iters=1, m=4,
@@ -310,29 +333,29 @@ def test_append_to_ivfpq_index_matches_full_rebuild_assignment(spark, tmp_path):
         append_to_ivfpq_index(spark, batch, p)
         idx = spark.read.parquet(p)
         assert idx.count() == before + batch.count()
-        # the appended rows' codes equal what the shared expression
-        # path produces against the same stored sidecars
-        from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
-            _ivfpq_code_source,
-            _load_ivfpq_sidecars,
-            _pq_code_expr,
-        )
 
         cents, books, residual = _load_ivfpq_sidecars(spark, p)
-        centroids = [cents[i] for i in sorted(cents)]
-        src, col = _ivfpq_code_source(
-            batch, centroids, residual, "embedding", "vec_id"
+        assert residual is res
+        centroids = np.array([cents[i] for i in sorted(cents)])
+        cells = _nearest(vecs, centroids)
+        src = vecs - centroids[cells] if res else vecs
+        dsub = vecs.shape[1] // len(books)
+        codes = np.stack(
+            [
+                _nearest(src[:, s * dsub:(s + 1) * dsub], np.array(book))
+                for s, book in enumerate(books)
+            ],
+            axis=1,
         )
         want = sorted(
-            map(tuple,
-                src.select("key", _pq_code_expr(books, col)
-                           .alias("pq_code"), "cell_id").collect())
+            (k, [int(c) for c in code], int(cell))
+            for k, code, cell in zip(keys, codes, cells)
         )
         got = sorted(
-            map(tuple,
-                idx.where(F.col("key") % 10 == 0)
-                .select("key", "pq_code", "cell_id").collect())
+            (r["key"], list(r["pq_code"]), r["cell_id"])
+            for r in idx.select("key", "pq_code", "cell_id").collect()
         )
+        # every row, built or appended, carries the rule's cell and code
         assert got == want, f"residual={res}"
 
 

@@ -28,6 +28,20 @@ def scale_sf_dir():
     return SCALE_SF_DIR
 
 
+def _skip_if_scan_fills_slots(spark, sf_dir, table):
+    """The at-scale pins check a gate (dedup.rebalance_for_cpu /
+    repartition_key_for_cpu) that is a no-op once the scan already has
+    defaultParallelism partitions or more, so on such a host there is
+    nothing to pin."""
+    parts = entry_mod._t(spark, sf_dir, table).rdd.getNumPartitions()
+    slots = spark.sparkContext.defaultParallelism
+    if parts >= slots:
+        pytest.skip(
+            f"{table} scan has {parts} partitions >= defaultParallelism "
+            f"{slots}: the gate is a no-op here"
+        )
+
+
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -654,6 +668,7 @@ def test_q37_followups_pins_window_parallelism_at_scale(spark, scale_sf_dir):
     no-ops and the plan keeps the plain exchange
     (test_q37_followups_no_join_no_pair_rows covers that shape).
     Plan-only: nothing is executed."""
+    _skip_if_scan_fills_slots(spark, scale_sf_dir, "events")
     df = entry_mod.queries()["q37_event_followups"](spark, scale_sf_dir)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
@@ -669,6 +684,7 @@ def test_q30_sessionize_pins_window_parallelism_at_scale(spark, scale_sf_dir):
     0.53-0.64 s). hash(user_id) satisfies both window specs and the
     (user_id, session_id) aggregate, so the exchange count stays 1 on
     the session path. Plan-only: nothing is executed."""
+    _skip_if_scan_fills_slots(spark, scale_sf_dir, "events")
     df = entry_mod.queries()["q30_session_stats"](spark, scale_sf_dir)
     plan = _final_plan(df)
     assert "REPARTITION_BY_NUM" in plan, plan
@@ -688,6 +704,7 @@ def test_q15_rebalances_kernels_at_scale(spark, scale_sf_dir):
         release,
     )
 
+    _skip_if_scan_fills_slots(spark, scale_sf_dir, "documents")
     df = entry_mod.queries()["q15_text_stats"](spark, scale_sf_dir)
     plan = _executed_plan(df)
     assert "RoundRobinPartitioning" in plan, plan

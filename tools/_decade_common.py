@@ -1,5 +1,5 @@
-"""Shared Spark REST stage-metric scraping for the tools/*_decade.py
-evidence harnesses.
+"""Shared Spark REST stage-metric scraping, test data paths and the
+no-option command line for the tools/*_decade.py evidence harnesses.
 
 Every decade harness measures the same way: cumulative completed-stage
 metrics from the status REST API, deltas around a timed block.  One
@@ -9,8 +9,28 @@ counting failed stages, a new metric) lands everywhere at once.
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import urllib.request
+
+# Test data location, resolved as tests/conftest.py resolves it:
+# ORACLE_SF_DIR names the sf0.001 set, the other scale factors sit next
+# to it.
+ORACLE_SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+
+
+def sf_dir(name: str) -> str:
+    """The test data directory of scale factor ``name`` (e.g. "sf0.1")."""
+    return os.path.join(os.path.dirname(ORACLE_SF_DIR), name)
+
+
+def parse_cli(doc: str) -> None:
+    """The harnesses take no options: ``--help`` prints the module
+    docstring and exits before any Spark session starts."""
+    argparse.ArgumentParser(
+        description=doc, formatter_class=argparse.RawDescriptionHelpFormatter
+    ).parse_args()
 
 
 def api(spark, path):

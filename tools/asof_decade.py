@@ -25,11 +25,13 @@ Run: `python tools/asof_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -40,6 +42,7 @@ from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # no
 
 from _decade_common import (  # noqa: E402
     delta as _delta,
+    parse_cli,
     stage_totals as _stage_totals,
 )
 
@@ -118,4 +121,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

@@ -33,13 +33,15 @@ Run: `python tools/bm25_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -54,16 +56,17 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.ranking import (  # 
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
+from _decade_common import (  # noqa: E402
+    delta as _delta,
+    parse_cli,
+    sf_dir,
+    stage_totals as _stage_totals,
+)
+
+SF_DIR = sf_dir("sf0.1")
 TERMS = ["spark", "query", "join", "stream"]
 K = 20
 REPS = 3
-
-
-from _decade_common import (  # noqa: E402
-    delta as _delta,
-    stage_totals as _stage_totals,
-)
 
 
 def _measure(spark, fn):
@@ -191,4 +194,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

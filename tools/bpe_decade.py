@@ -20,10 +20,11 @@ Run: `python tools/bpe_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -33,7 +34,9 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (  # noqa
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
+from _decade_common import parse_cli, sf_dir  # noqa: E402
+
+SF_DIR = sf_dir("sf0.1")
 NUM_MERGES = 8
 REPS = 2
 
@@ -400,4 +403,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

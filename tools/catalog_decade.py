@@ -19,17 +19,20 @@ Run: `python tools/catalog_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 from cloud_native_medical_data_etl_pipeline_spark.sources import lake  # noqa: E402
+
+from _decade_common import parse_cli  # noqa: E402
 
 ROWS_PER_DATE = 500
 REPS = 3
@@ -116,4 +119,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

@@ -28,11 +28,13 @@ Run: `python tools/cc_decade.py` (writes one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -41,7 +43,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.components import ( 
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import stage_totals as _stage_totals  # noqa: E402
+from _decade_common import parse_cli, stage_totals as _stage_totals  # noqa: E402
 
 REPS = 3
 
@@ -126,4 +128,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

@@ -13,7 +13,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("PLANS_SF_DIR", "/root/testdata/sf0.01")
+from _decade_common import parse_cli, sf_dir  # noqa: E402
+
+SF_DIR = os.environ.get("PLANS_SF_DIR", sf_dir("sf0.01"))
 
 # query -> the scale property its plan demonstrates
 PICKS = {
@@ -100,4 +102,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

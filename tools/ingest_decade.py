@@ -30,13 +30,15 @@ Run: `python tools/ingest_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -45,15 +47,16 @@ from cloud_native_medical_data_etl_pipeline_spark.streaming.ingest import (  # n
     ingest_batch,
 )
 
-SF_DIR = "/root/testdata/sf0.1"
-BATCHES = 3
-BATCH_ROWS = 500
-
-
 from _decade_common import (  # noqa: E402
     delta as _delta,
+    parse_cli,
+    sf_dir,
     stage_totals as _stage_totals,
 )
+
+SF_DIR = sf_dir("sf0.1")
+BATCHES = 3
+BATCH_ROWS = 500
 
 
 def _retag(df, tag):
@@ -235,4 +238,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

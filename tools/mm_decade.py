@@ -27,11 +27,13 @@ Run: `python tools/mm_decade.py` (one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -41,6 +43,8 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.multimodal import ( 
     decode_features,
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
+
+from _decade_common import parse_cli  # noqa: E402
 
 REPS = 2
 SMALL_WH, LARGE_WH = 32, 192  # grayscale; 10% of images are large
@@ -224,4 +228,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

@@ -28,13 +28,15 @@ Run: `python tools/probe_decade.py` (writes one JSON line to stdout).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -44,16 +46,17 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (  #
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.1"
+from _decade_common import (  # noqa: E402
+    delta as _delta,
+    parse_cli,
+    sf_dir,
+    stage_totals as _stage_totals,
+)
+
+SF_DIR = sf_dir("sf0.1")
 REPS = 3
 NPROBE = 4
 M, K, PQ_ITERS, TRAIN_ITERS = 8, 16, 2, 2
-
-
-from _decade_common import (  # noqa: E402
-    delta as _delta,
-    stage_totals as _stage_totals,
-)
 
 
 def main():
@@ -141,4 +144,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()

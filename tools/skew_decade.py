@@ -31,11 +31,13 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -44,7 +46,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.skew import (  # noq
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import api as _api  # noqa: E402
+from _decade_common import api as _api, parse_cli  # noqa: E402
 
 REPS = 2
 HOT_SHARE = 0.9
@@ -194,4 +196,5 @@ def main():
 
 
 if __name__ == "__main__":
+    parse_cli(__doc__)
     main()
