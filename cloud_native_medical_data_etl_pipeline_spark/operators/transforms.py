@@ -19,16 +19,13 @@ from pyspark.sql import functions as F
 from ..functions import medical as M
 
 
-def transform_fda_events(
-    df: DataFrame, processed_ts=None, dedup_order: str | None = None
-) -> DataFrame:
+def transform_fda_events(df: DataFrame, processed_ts=None) -> DataFrame:
     """FDA adverse-event transform (drug_transformer.py:92-136).
 
     processed_ts: optional fixed literal for deterministic tests; the
     production default is current_timestamp() (per-query constant).
-    dedup_order: optional column giving the reference's keep='first'
-    order; without it dropDuplicates keeps an arbitrary row per key
-    (SURVEY.md §7.5.3).
+    The dedup keeps an arbitrary row per key, not the reference's
+    keep='first' (SURVEY.md §7.5.3).
     """
     cols = set(df.columns)
     out = df.withColumn(
@@ -67,13 +64,11 @@ def transform_fda_events(
     out = out.withColumn("is_complete", M.completeness_flag(required_present))
 
     if "safetyreportid" in cols:
-        out = _dedup(out, "safetyreportid", dedup_order)
+        out = out.dropDuplicates(["safetyreportid"])
     return out
 
 
-def transform_clinical_trials(
-    df: DataFrame, processed_ts=None, dedup_order: str | None = None
-) -> DataFrame:
+def transform_clinical_trials(df: DataFrame, processed_ts=None) -> DataFrame:
     """Clinical-trials transform (drug_transformer.py:138-187)."""
     cols = set(df.columns)
     out = df.withColumn(
@@ -100,21 +95,6 @@ def transform_clinical_trials(
     if "conditions" in cols:
         out = out.withColumn("conditions_clean", F.upper(F.col("conditions")))
     if "nct_id" in cols:
-        out = _dedup(out, "nct_id", dedup_order)
+        out = out.dropDuplicates(["nct_id"])
     return out
 
-
-def _dedup(df: DataFrame, key: str, order: str | None) -> DataFrame:
-    """dropDuplicates on key; with an order column, keep the true first
-    occurrence via a min-order anti-condition (scales as one shuffle on
-    the key, same as dropDuplicates)."""
-    if order is None:
-        return df.dropDuplicates([key])
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )

@@ -58,7 +58,6 @@ def run(
     clinical_trials: DataFrame | None,
     output_base: str,
     processed_ts=None,
-    validate: bool = True,
     quality_config: dict | None = None,
 ) -> RunResult:
     """Transform both inputs, enrich, write the processed partition and
@@ -105,20 +104,12 @@ def run(
         combined = parts[0]
         for p in parts[1:]:
             combined = combined.unionByName(p, allowMissingColumns=True)
-        if validate:
-            result.quality = quality.run_quality_checks(
-                combined, date, config=quality_config
-            )
-            counts = result.quality["record_counts"]
-            if not result.quality["overall_passed"]:
-                result.status = "quality_failed"
-        else:
-            counts = combined.agg(
-                F.count_if(F.col("data_source") == "FDA_OpenFDA").alias("fda"),
-                F.count_if(F.col("data_source") == "ClinicalTrials_gov").alias(
-                    "clinical_trials"
-                ),
-            ).first()
+        result.quality = quality.run_quality_checks(
+            combined, date, config=quality_config
+        )
+        counts = result.quality["record_counts"]
+        if not result.quality["overall_passed"]:
+            result.status = "quality_failed"
         result.fda_records = counts["fda"]
         result.ct_records = counts["clinical_trials"]
         return result

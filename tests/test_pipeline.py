@@ -83,22 +83,20 @@ def _count_queries(fda, ct) -> tuple[int, int, int]:
 
 
 @pytest.mark.parametrize("sources", ["both", "fda", "ct"])
-@pytest.mark.parametrize("validate", [True, False])
-def test_run_counts_match_count_queries(spark, tmp_path, sources, validate):
+def test_run_counts_match_count_queries(spark, tmp_path, sources):
     fda, ct = _inputs(spark, seed=1)
     fda = fda if sources in ("both", "fda") else None
     ct = ct if sources in ("both", "ct") else None
     expected = _count_queries(fda, ct)
 
     r = pipeline.run(
-        spark, "2024-01-15", fda, ct, str(tmp_path), processed_ts=PROCESSED_TS,
-        validate=validate,
+        spark, "2024-01-15", fda, ct, str(tmp_path), processed_ts=PROCESSED_TS
     )
     assert r.status == "success"
     assert (r.fda_records, r.ct_records, r.enriched_records) == expected
     # the dedup dropped the duplicates
     assert expected[:2] == (27 if fda is not None else 0, 12 if ct is not None else 0)
-    assert (r.quality != {}) == validate
+    assert r.quality != {}
 
 
 def test_run_counts_on_a_day_that_fails_the_quality_gate(spark, tmp_path):

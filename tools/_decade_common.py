@@ -1,5 +1,6 @@
 """Shared Spark REST stage-metric scraping, test data paths and the
-no-option command line for the tools/*_decade.py evidence harnesses.
+no-option command line for the tools/*_decade.py evidence harnesses
+(tools/ab.py and tools/plans.py use the test data paths).
 
 Every decade harness measures the same way: cumulative completed-stage
 metrics from the status REST API, deltas around a timed block.  One
@@ -23,6 +24,24 @@ ORACLE_SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
 def sf_dir(name: str) -> str:
     """The test data directory of scale factor ``name`` (e.g. "sf0.1")."""
     return os.path.join(os.path.dirname(ORACLE_SF_DIR), name)
+
+
+def data_dir(default: str) -> str:
+    """``$SPARK_GRAFT_SF_DIR`` (bench.py's test data variable) if set,
+    else the scale factor ``default`` next to ``ORACLE_SF_DIR``."""
+    return os.environ.get("SPARK_GRAFT_SF_DIR") or sf_dir(default)
+
+
+def export_repo_to_workers() -> None:
+    """Put the repo on the PYTHONPATH of a JVM not yet started.
+
+    Spark's Python workers start in the JVM's working directory; a tool
+    run from anywhere else must hand them the repo, or they cannot
+    unpickle the package's UDFs and Python data sources."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
 
 
 def parse_cli(doc: str) -> None:
