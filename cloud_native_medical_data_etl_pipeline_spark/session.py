@@ -9,6 +9,7 @@ partition count that AQE can shrink at runtime.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -23,7 +24,41 @@ from pyspark.sql import SparkSession
 # On 2 CPUs this is already HotSpot's default. Not C1-only
 # (-XX:TieredStopAtLevel=1): in local mode tasks run in the driver JVM,
 # and the headline queries got 59 % slower.
-DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
+
+# Driver heap collector: the parallel (throughput) collector. G1, the
+# JVM's default, grows its old generation with garbage up to its
+# marking threshold instead of collecting it: after five ETL days a
+# 2 GB driver had 760 MB of old generation committed for 308 MB in
+# use. The parallel collector runs a full collection when the old
+# generation fills and kept it at 178 MB. How much of that reaches RSS
+# depends on the young generation. Fixed at 256 MB (perfbench's
+# -Xmn256m), the driver's peak RSS on `etl_day_large` fell from 1624 to
+# 1037 MB in median (-36 %, 10 of 10 pairs on a 4-CPU VM). Left to the
+# collector's adaptive sizing, as in a 2-CPU driver pod with a 2 GB
+# heap, eden grows to ~630 MB and peak RSS fell only from 1243 to
+# 1163 MB (-6 %). CPU and wall time per day did not get worse. Not the
+# serial collector, though in that pod shape it held half the memory
+# at equal wall time: both stop the tasks for every collection, and the
+# serial one collects on one thread. At the product's 8 GB heap on
+# local[4] its pauses summed to 9.4 s against 3.8 s over a bench.py run
+# (BASELINE.md, "Driver heap collector").
+DRIVER_COLLECTOR = "-XX:+UseParallelGC"
+
+# The JVM reads these variables itself. A collector named there and a
+# second one on the command line make it refuse to start ("Multiple
+# garbage collectors selected"), so the environment's collector wins.
+_JVM_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "JDK_JAVA_OPTIONS")
+_COLLECTOR_FLAG = re.compile(r"-XX:[+-]Use\w+GC\b")
+
+
+def driver_java_options(environ=os.environ) -> str:
+    """The driver's JIT budget and collector, without the collector when
+    one of the JVM's own option variables in ``environ`` already names
+    one."""
+    if any(_COLLECTOR_FLAG.search(environ.get(name, "")) for name in _JVM_ENV_OPTIONS):
+        return DRIVER_JIT_OPTIONS
+    return f"{DRIVER_JIT_OPTIONS} {DRIVER_COLLECTOR}"
 
 
 def get_spark(
@@ -37,14 +72,14 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS or *]``.
 
-    ``DRIVER_JAVA_OPTIONS`` go in as ``spark.driver.extraJavaOptions``.
+    ``driver_java_options()`` go in as ``spark.driver.extraJavaOptions``.
     Builder conf only shapes a driver JVM that this call starts itself
     (plain ``python``/``pytest``): once a JVM is running, as under
     ``spark-submit`` or a Kubernetes driver pod, it is too late, and the
-    deployment must pass the same flag with
-    ``--driver-java-options "-XX:CICompilerCount=2"``. An ``extra_conf``
-    that sets ``spark.driver.extraJavaOptions`` replaces the default, so
-    it must repeat the flag to keep it.
+    deployment must pass the same flags with
+    ``--driver-java-options "-XX:CICompilerCount=2 -XX:+UseParallelGC"``.
+    An ``extra_conf`` that sets ``spark.driver.extraJavaOptions``
+    replaces the default, so it must repeat the flags to keep them.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -75,7 +110,7 @@ def get_spark(
         # Reasonable split size so huge parquet files parallelize.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
+        .config("spark.driver.extraJavaOptions", driver_java_options())
         # keep catalog tables (bucketed writes) out of the repo cwd
         .config(
             "spark.sql.warehouse.dir",

@@ -1,7 +1,10 @@
 """The measurement tools under tools/, checked without a Spark session:
 the plan-shape summary of tools/plans.py, the variant resolver of
-tools/ab.py, and that every tool answers --help without side effects."""
+tools/ab.py, that every tool answers --help without side effects, and
+that every tool that starts Spark hands the repo to its Python workers
+first."""
 
+import ast
 import glob
 import importlib.util
 import os
@@ -145,3 +148,45 @@ def test_tool_help_exits_cleanly(script, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert list(tmp_path.iterdir()) == []
+
+
+def _calls(tree):
+    """(enclosing function, called name, line) of every call by name."""
+    found = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                func = child.func
+                name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+                found.append((scope, name, child.lineno))
+            visit(child, scope)
+
+    visit(tree, "<module>")
+    return found
+
+
+def unexported_sessions(tools_dir):
+    """``script:line`` of every get_spark call in ``tools_dir/*.py`` that
+    no earlier export_repo_to_workers call in the same function precedes."""
+    bad = []
+    for path in sorted(glob.glob(os.path.join(tools_dir, "*.py"))):
+        with open(path) as fh:
+            calls = _calls(ast.parse(fh.read(), path))
+        for scope, name, line in calls:
+            if name == "get_spark" and not any(
+                s == scope and n == "export_repo_to_workers" and ln < line
+                for s, n, ln in calls
+            ):
+                bad.append(f"{os.path.basename(path)}:{line}")
+    return bad
+
+
+def test_tools_hand_the_repo_to_python_workers_before_starting_spark():
+    """Spark's Python workers start in the JVM's working directory, so a
+    tool run from outside the repo must export it first (see
+    _decade_common.export_repo_to_workers) or its UDFs cannot unpickle."""
+    assert unexported_sessions(TOOLS) == []

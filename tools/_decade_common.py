@@ -32,13 +32,14 @@ def data_dir(default: str) -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR") or sf_dir(default)
 
 
-def export_repo_to_workers() -> None:
-    """Put the repo on the PYTHONPATH of a JVM not yet started.
+def export_repo_to_workers(repo: str | None = None) -> None:
+    """Put ``repo`` (default: this repo) on the PYTHONPATH of a JVM not
+    yet started.
 
     Spark's Python workers start in the JVM's working directory; a tool
     run from anywhere else must hand them the repo, or they cannot
     unpickle the package's UDFs and Python data sources."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    repo = repo or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (repo, os.environ.get("PYTHONPATH")) if p
     )

@@ -42,6 +42,7 @@ from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # no
 
 from _decade_common import (  # noqa: E402
     delta as _delta,
+    export_repo_to_workers,
     parse_cli,
     stage_totals as _stage_totals,
 )
@@ -65,6 +66,7 @@ def _frames(spark, n_rows, rows_per_key):
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,

@@ -34,7 +34,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (  # noqa
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import parse_cli, sf_dir  # noqa: E402
+from _decade_common import export_repo_to_workers, parse_cli, sf_dir  # noqa: E402
 
 SF_DIR = sf_dir("sf0.1")
 NUM_MERGES = 8
@@ -152,6 +152,7 @@ def main():
     import shutil
     import tempfile
 
+    export_repo_to_workers()
     spark = get_spark(master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(

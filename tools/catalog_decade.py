@@ -32,7 +32,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 from cloud_native_medical_data_etl_pipeline_spark.sources import lake  # noqa: E402
 
-from _decade_common import parse_cli  # noqa: E402
+from _decade_common import export_repo_to_workers, parse_cli  # noqa: E402
 
 ROWS_PER_DATE = 500
 REPS = 3
@@ -49,6 +49,7 @@ def _timed(fn):
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="catalog_decade_")

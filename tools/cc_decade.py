@@ -43,7 +43,11 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.components import ( 
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import parse_cli, stage_totals as _stage_totals  # noqa: E402
+from _decade_common import (  # noqa: E402
+    export_repo_to_workers,
+    parse_cli,
+    stage_totals as _stage_totals,
+)
 
 REPS = 3
 
@@ -102,6 +106,7 @@ def _measure(spark, edges, expect_components):
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,

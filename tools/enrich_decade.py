@@ -36,7 +36,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from cloud_native_medical_data_etl_pipeline_spark.operators import enrich  # noqa: E402
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import parse_cli  # noqa: E402
+from _decade_common import export_repo_to_workers, parse_cli  # noqa: E402
 
 REPS = 2
 
@@ -110,6 +110,7 @@ def _run(fn):
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     results = {}

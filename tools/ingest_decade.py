@@ -49,6 +49,7 @@ from cloud_native_medical_data_etl_pipeline_spark.streaming.ingest import (  # n
 
 from _decade_common import (  # noqa: E402
     delta as _delta,
+    export_repo_to_workers,
     parse_cli,
     sf_dir,
     stage_totals as _stage_totals,
@@ -87,6 +88,7 @@ def _dir_bytes(path):
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,

@@ -44,7 +44,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.multimodal import ( 
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import parse_cli  # noqa: E402
+from _decade_common import export_repo_to_workers, parse_cli  # noqa: E402
 
 REPS = 2
 SMALL_WH, LARGE_WH = 32, 192  # grayscale; 10% of images are large
@@ -129,6 +129,7 @@ def main():
     import shutil
     import tempfile
 
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,

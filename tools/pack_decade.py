@@ -48,7 +48,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.packing import (  # 
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import parse_cli  # noqa: E402
+from _decade_common import export_repo_to_workers, parse_cli  # noqa: E402
 
 REPS = 2
 BUDGET = 2048
@@ -85,6 +85,7 @@ def main():
     import shutil
     import tempfile
 
+    export_repo_to_workers()
     spark = get_spark(master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="pack_decade_")

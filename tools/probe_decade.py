@@ -48,6 +48,7 @@ from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # no
 
 from _decade_common import (  # noqa: E402
     delta as _delta,
+    export_repo_to_workers,
     parse_cli,
     sf_dir,
     stage_totals as _stage_totals,
@@ -60,6 +61,7 @@ M, K, PQ_ITERS, TRAIN_ITERS = 8, 16, 2, 2
 
 
 def main():
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,

@@ -46,7 +46,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.skew import (  # noq
 )
 from cloud_native_medical_data_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-from _decade_common import api as _api, parse_cli  # noqa: E402
+from _decade_common import api as _api, export_repo_to_workers, parse_cli  # noqa: E402
 
 REPS = 2
 HOT_SHARE = 0.9
@@ -119,6 +119,7 @@ def main():
     import shutil
     import tempfile
 
+    export_repo_to_workers()
     spark = get_spark(
         master="local[32]",
         shuffle_partitions=32,
