@@ -601,7 +601,6 @@ def q17_minhash_near_dups(spark, sf_dir):
         num_hashes=_MH_H,
         bands=_MH_BANDS,
         jaccard_threshold=_MH_THRESH,
-        shingle_mode="word",
         ngram_n=_MH_N,
     )
 
@@ -6711,10 +6710,10 @@ d{r} AS MATERIALIZED (
 # oracle omits the empty-cell refill branch: at m=4, k=4 over dense
 # random embeddings every cell keeps members (any divergence would
 # fail this hash gate).  Registered r8 — window-seated per the r7
-# verdict (the one permitted registration).  r9: pq_train defaults to
-# the driver-side numpy engine (unit- and property-pinned EXACTLY
-# equal to the in-engine SQL spec this oracle unrolls), so this row
-# now evidences the production training path.
+# verdict (the one permitted registration).  r9: pq_train runs the
+# driver-side numpy engine while the pool fits its driver cap (unit-
+# and property-pinned EXACTLY equal to the in-engine SQL spec this
+# oracle unrolls), so this row evidences the production training path.
 # ---------------------------------------------------------------------------
 _PQ_M, _PQ_K, _PQ_ITERS, _PQ_TOPK = 4, 4, 2, 10
 _PQ_DSUB = 64 // _PQ_M  # fixed dim-64 embeddings tables
@@ -7529,9 +7528,9 @@ m0 AS (
 # ---------------------------------------------------------------------------
 # q144 — STAGED (written r15, unregistered; the r17 candidate per the
 # ledger): BPE ENCODE — the apply side of the tokenizer family, and
-# the first oracle path over the r15 `impl="arrow"` kernel (greedy-
-# minimum-rank with a broadcast rank table, proven token-identical to
-# the fold-chain spec in tests/test_bpe.py).  Train the staged-q143
+# the first oracle path over the r15 Arrow kernel (greedy-minimum-rank
+# with a broadcast rank table, proven token-identical to the
+# fold-chain spec in tests/test_bpe.py).  Train the staged-q143
 # 8-rule table, encode every document, and emit (doc_id,
 # n_bpe_tokens, encoded = space-joined tokens) — the DuckDB oracle
 # re-derives the SAME 8 rules (the q143 CTE chain), folds each
@@ -7552,7 +7551,7 @@ def q144_bpe_encode(spark, sf_dir):
         .orderBy("step")
         .collect()
     ]
-    enc = apply_bpe_merges(docs, merges, impl="arrow")
+    enc = apply_bpe_merges(docs, merges)
     return enc.select(
         "doc_id",
         "n_bpe_tokens",

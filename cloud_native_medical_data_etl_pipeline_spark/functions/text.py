@@ -60,15 +60,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Approximate subword token count: word-chunks plus digit runs and
-    punctuation each count separately (a BPE-ish regex heuristic).
-    regexp_count is JVM-side; ~chars/4 fallback intuition not used."""
-    c = F.col(text) if isinstance(text, str) else text
-    s = F.coalesce(c, F.lit(""))
-    return F.regexp_count(s, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]")).cast("long")
-
-
 def char_shingles(text: Column | str, k: int = 5) -> Column:
     """Distinct character k-shingles of the lowercased text as
     array<string>. Built with sequence+transform (higher-order

@@ -21,10 +21,10 @@ per kernel:
   which would itself be summation-order-sensitive.
 
 The PQ trainer additionally has a driver-side numpy executor
-(`_kmeans_np.pq_train_np`, the `engine="auto"` production path at
-large k) bound to the SAME contract: identical fold orders, roundings,
-and tiebreaks, unit- and property-pinned exactly equal to the
-in-engine loop.
+(`_kmeans_np.pq_train_np`, which it runs while the training pool fits
+`_kmeans_np.DRIVER_TRAIN_CAP`) bound to the SAME contract: identical
+fold orders, roundings, and tiebreaks, unit- and property-pinned
+exactly equal to the in-engine loop.
 """
 
 from __future__ import annotations

@@ -1,21 +1,21 @@
 """Driver-side numpy replica of the deterministic PQ trainer.
 
-`quantize.pq_train(engine="sql")` is the cross-engine SPEC: every
-arithmetic step (left-to-right squared-distance folds, 9dp-rounded
-distances and priorities, 6dp-rounded Lloyd means, md5-seeded D²
-races, lowest-index/min-key tiebreaks) is expressible in plain SQL,
+`quantize.pq_train`'s distributed loop (the path above
+`DRIVER_TRAIN_CAP`) is the cross-engine SPEC: every arithmetic step
+(left-to-right squared-distance folds, 9dp-rounded distances and
+priorities, 6dp-rounded Lloyd means, md5-seeded D² races,
+lowest-index/min-key tiebreaks) is expressible in plain SQL,
 and the DuckDB oracles replay it CTE-for-CTE (q137/q138).  But as an
 in-engine loop it costs k-1 driver round-trips whose expression
 batteries grow with the codebook — plan-compile-bound at the k=256
 regime PQ normally runs at, regardless of data size.
 
-This module is the PRODUCTION path for the same contract: codebooks
-are driver-side METADATA by construction, and training input is
-already capped by the deterministic md5 hash-sample
-(`_sampling.hash_sample`), so the sampled training frame is collected
-ONCE and seeding + Lloyd run here in numpy — O(1) Spark jobs, O(n·k·
-dsub) numpy work, identical results (unit-pinned against the SQL
-engine in tests/test_pq.py).
+This module is the path for the same contract while the pool fits
+the driver: codebooks are driver-side METADATA by construction, so the
+(optionally md5-hash-sampled, `_sampling.hash_sample`) training frame
+is collected ONCE and seeding + Lloyd run here in numpy — O(1) Spark
+jobs, O(n·k·dsub) numpy work, identical results (unit-pinned against
+the distributed loop in tests/test_pq.py).
 
 Rounding replicates Spark EXACTLY, not approximately: F.round on a
 double is HALF_UP over the value's SHORTEST DECIMAL REPR
@@ -56,10 +56,14 @@ def md5_uniform_py(key: object, salt: str = "") -> float:
 
 _MAGIC = 6755399441055744.0  # 1.5 * 2^52
 
-# Largest training pool `quantize.pq_train`'s driver-side engine will
-# gather without the caller explicitly opting into a sample cap (see
-# the call site).
+# What "fits the driver": the largest pool each operator collects and
+# runs here; above it the operator runs its distributed loop.
+# `quantize.pq_train`'s training pool (sampling stays the caller's
+# explicit choice, see the call site):
 DRIVER_TRAIN_CAP = 100_000
+# `similarity.kcenter_select`'s candidate pool (the selection is the
+# output, so it is never sampled):
+DRIVER_SELECT_CAP = 1_000_000
 
 
 # quantize() needs headroom over the default 28-digit context only in

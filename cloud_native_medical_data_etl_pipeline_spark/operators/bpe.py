@@ -159,18 +159,8 @@ def train_bpe_merges(
     )
 
 
-# The fold path chains ONE nested higher-order aggregate per merge:
-# plan depth (and Catalyst analysis cost) is linear in the merge
-# count, and each HOF level evaluates interpreted.  Measured fine at
-# oracle-scale tables (q143's 8 merges; 64 analyzes in ~1 s) but a
-# real tokenizer's 30k-50k merges would stall analysis long before
-# execution — past this ceiling apply_bpe_merges refuses and points
-# at impl="arrow", whose cost is independent of merge count.
-FOLD_MERGE_CEILING = 64
-
-
 def _validate_merge_table(merges: list[tuple[str, str]]) -> None:
-    """Well-formedness gate for the arrow encoder.  Two conditions,
+    """Well-formedness gate for the encoder.  Two conditions,
     together sufficient for greedy-minimum-rank == fold-chain-in-order
     (every symbol then has exactly ONE producing rank, so the rank-
     ordering argument in `_bpe_encode_udf`'s docstring is sound):
@@ -196,8 +186,7 @@ def _validate_merge_table(merges: list[tuple[str, str]]) -> None:
        later merge would need to OUTPUT l or r, which only an exact
        repeat — itself a no-op by induction — could), so the repeat
        is a provable fold no-op and the kernel's first-rank-wins
-       setdefault reproduces it exactly; refusing would strand
-       previously-valid >64-rule tables with no working impl.
+       setdefault reproduces it exactly.
 
     THIS package's trainers satisfy both by construction — a merge
     only ever creates adjacencies containing its output symbol, so
@@ -207,10 +196,8 @@ def _validate_merge_table(merges: list[tuple[str, str]]) -> None:
     hex workload, r16) — but a merge list from another tokenizer's
     trainer can carry duplicate outputs (e.g. ("ab","c") and
     ("a","bc") both in the list), and for such tables the greedy
-    kernel is semantically wrong on some probe text, so the arrow
-    path refuses rather than silently disagree.  The fold path
-    accepts any list (it IS the in-order spec, capped at
-    FOLD_MERGE_CEILING)."""
+    kernel is semantically wrong on some probe text, so the encoder
+    refuses rather than silently disagree."""
     seen_rules: set[tuple[str, str]] = set()
     seen_outputs: set[str] = set()
     for i, (left, right) in enumerate(merges):
@@ -219,21 +206,20 @@ def _validate_merge_table(merges: list[tuple[str, str]]) -> None:
         for side in (left, right):
             if len(side) > 1 and side not in seen_outputs:
                 raise ValueError(
-                    f"apply_bpe_merges(impl='arrow'): rule {i} "
+                    f"apply_bpe_merges: rule {i} "
                     f"({left!r}, {right!r}) references multi-char symbol "
                     f"{side!r} that no earlier rule produces — not a "
-                    "learned-order (rank-monotone) merge table; use "
-                    "impl='fold' for arbitrary rule lists"
+                    "learned-order (rank-monotone) merge table"
                 )
         out = left + right
         if out in seen_outputs:
             raise ValueError(
-                f"apply_bpe_merges(impl='arrow'): rule {i} "
+                f"apply_bpe_merges: rule {i} "
                 f"({left!r}, {right!r}) rebuilds {out!r}, already the "
                 "output of a DIFFERENT earlier rule — a duplicate "
                 "producer gives a symbol two producing ranks, where "
                 "greedy-minimum-rank provably diverges from the fold "
-                "spec on some inputs; use impl='fold' for this table"
+                "spec on some inputs"
             )
         seen_rules.add((left, right))
         seen_outputs.add(out)
@@ -325,47 +311,44 @@ def apply_bpe_merges(
     merges: list[tuple[str, str]],
     content_col: str = "text",
     key_col: str = "doc_id",
-    impl: str = "fold",
 ) -> DataFrame:
     """Encode documents with a learned merge list: (key_col, tokens
     array<string>, n_bpe_tokens long).  Merges apply in learned order
     within each whitespace word.
 
-    ``impl="fold"`` (default): pure JVM expression work — one chained
-    higher-order fold per merge, no Python worker; the byte-stable
-    form the DuckDB oracles replay.  Plan depth is LINEAR in the merge
-    count, so this path refuses above ``FOLD_MERGE_CEILING`` rules.
-
-    ``impl="arrow"``: the `_bpe_encode_udf` vectorized kernel —
-    token-identical by construction (unit-pinned + fuzzed), cost
-    independent of merge count, ZERO shuffle (one row per input row;
-    the fold path's posexplode/groupBy round-trip collapses duplicate
-    ``key_col`` values, the arrow path preserves them row-for-row) —
-    the encode lever for realistic 30k-50k-rule tokenizers.
+    The `_bpe_encode_udf` vectorized kernel: cost independent of merge
+    count (the lever for realistic 30k-50k-rule tokenizers), ZERO
+    shuffle, one output row per input row (duplicate ``key_col``
+    values stay separate rows).  Token-identical to the in-order fold
+    chain the DuckDB oracles replay (`_apply_bpe_fold`, unit-pinned
+    and fuzzed); tables where the two could differ are refused by
+    `_validate_merge_table`.
     """
-    if impl not in ("fold", "arrow"):
-        raise ValueError(f"impl must be 'fold' or 'arrow', got {impl!r}")
-    if impl == "arrow":
-        _validate_merge_table(merges)
-        # X.lower_tokens never yields NULL (tokens() coalesces NULL
-        # text to '' -> empty array), so the kernel sees a list per row
-        toks = X.lower_tokens(content_col)
-        return df.select(
-            F.col(key_col),
-            _bpe_encode_udf(merges)(toks).alias("tokens"),
-        ).select(
-            key_col,
-            "tokens",
-            F.size("tokens").cast("long").alias("n_bpe_tokens"),
-        )
-    if len(merges) > FOLD_MERGE_CEILING:
-        raise ValueError(
-            f"apply_bpe_merges(impl='fold'): {len(merges)} merges exceeds "
-            f"FOLD_MERGE_CEILING={FOLD_MERGE_CEILING} — the fold chain's "
-            "plan depth is linear in the merge count and Catalyst analysis "
-            "stalls at real vocabularies; use impl='arrow' (token-identical, "
-            "merge-count-independent)"
-        )
+    _validate_merge_table(merges)
+    # X.lower_tokens never yields NULL (tokens() coalesces NULL
+    # text to '' -> empty array), so the kernel sees a list per row
+    toks = X.lower_tokens(content_col)
+    return df.select(
+        F.col(key_col),
+        _bpe_encode_udf(merges)(toks).alias("tokens"),
+    ).select(
+        key_col,
+        "tokens",
+        F.size("tokens").cast("long").alias("n_bpe_tokens"),
+    )
+
+
+def _apply_bpe_fold(
+    df: DataFrame,
+    merges: list[tuple[str, str]],
+    content_col: str = "text",
+    key_col: str = "doc_id",
+) -> DataFrame:
+    """The in-order spec `apply_bpe_merges` is tested against: one
+    chained `_merge_fold` per merge, pure JVM expression work, for any
+    rule list.  Plan depth is linear in the merge count, so it suits
+    test-sized tables only.  Its posexplode/groupBy round-trip
+    collapses duplicate ``key_col`` values into one row."""
     word_syms = F.split(F.col("__w"), "")
     for left, right in merges:
         word_syms = _merge_fold(word_syms, F.lit(left), F.lit(right))

@@ -53,7 +53,6 @@ def curate(
         num_hashes=num_hashes,
         bands=bands,
         jaccard_threshold=jaccard_threshold,
-        shingle_mode="word",
         ngram_n=ngram_n,
     )
     # a doc is dropped iff it is the LARGER key of some near-dup pair

@@ -308,7 +308,8 @@ def _minhash_base_arrow(
     per-shingle md5 transforms dominate the pipeline; a tight Python
     loop over Arrow batches is several times faster (same trade as the
     vectorized all-pairs cosine in embedding_near_dups, measured there
-    30 s -> 0.8 s). Property tests assert both paths agree; the DuckDB
+    30 s -> 0.8 s). The expression path is the tests' reference (built
+    from those public functions and fed through ``base=``); the DuckDB
     oracle checks the Arrow path end-to-end.
 
     Docs with fewer than `ngram_n` tokens are dropped (mirrors
@@ -423,7 +424,11 @@ def minhash_base(
     functions of the text, so a stored base is bit-identical to a
     recomputed one. Docs producing no shingles (< ``ngram_n`` tokens)
     have no row. NOT persisted/cached here — callers decide (a
-    parquet-backed base needs no cache at all)."""
+    parquet-backed base needs no cache at all). ``num_hashes=0`` gives
+    just ``(k, sh)``: the word n-gram sets without any md5 work."""
+    # the repartition carries RAW text, so tokenization, shingling and
+    # signatures run post-shuffle across all slots; mapInPandas blocks
+    # pushdown by itself, so no persist barrier is needed
     pre = rebalance_for_cpu(
         df.select(F.col(key_col).alias("k"), F.col(content_col).alias("txt")),
         persist=False,
@@ -435,13 +440,10 @@ def minhash_lsh_pairs(
     df: DataFrame,
     content_col: str = "text",
     key_col: str = "doc_id",
-    shingle_k: int = 5,
     num_hashes: int = 8,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    shingle_mode: str = "word",
     ngram_n: int = 3,
-    engine: str = "arrow",
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
@@ -455,62 +457,28 @@ def minhash_lsh_pairs(
       * candidates come from an equi-join on the band bucket, deduped,
         then verified by exact Jaccard via two narrow key joins.
 
-    shingle_mode='word' (n-gram) is the scale default: char shingles
-    over a small vocabulary give every doc pair high baseline Jaccard,
-    which floods the LSH buckets with candidates (the classic
-    stop-gram problem); word n-grams keep unrelated docs out of each
-    other's buckets. shingle_mode='char' remains for short-string
-    workloads. engine='arrow' (word mode only) computes the shingle +
-    signature base frame in one Arrow mapInPandas pass —
-    bit-identical output, several times faster than the interpreted
-    higher-order-function path, which remains as engine='sql' and is
-    cross-checked against the Arrow path by property tests. Returns
-    (key_a, key_b, jaccard), key_a < key_b.
+    Shingles are word n-grams: char shingles over a small vocabulary
+    give every doc pair high baseline Jaccard, which floods the LSH
+    buckets with candidates (the classic stop-gram problem); word
+    n-grams keep unrelated docs out of each other's buckets. The
+    shingle + signature base frame is :func:`minhash_base`'s Arrow
+    pass. Returns (key_a, key_b, jaccard), key_a < key_b.
     """
-    # barrier carries RAW text: tokenization + shingling + signatures
-    # (the CPU-bound kernels) then run post-shuffle across all slots
-    # instead of map-side on the scan's partitions. The Arrow engine
-    # needs no persist barrier — mapInPandas itself blocks pushdown.
     # base= (a minhash_base product, possibly parquet-backed) skips the
     # signature computation entirely.
-    if base is not None:
-        verified = _minhash_verify_pairs(
-            base, num_hashes, bands, jaccard_threshold
-        )
-        return _with_cached_deps(verified, base)
-    use_arrow = shingle_mode == "word" and engine == "arrow"
-    pre = rebalance_for_cpu(
-        df.select(F.col(key_col).alias("k"), F.col(content_col).alias("txt")),
-        persist=not use_arrow,
-    )
-    # ONE persisted frame carries both the shingle sets (for the exact-
-    # Jaccard verification joins) and the signature columns (for band
-    # bucketing): a single cache-materialization pass does all the md5
-    # work. The band explode is NOT persisted — each self-join side
-    # re-derives it from this cache with a cheap concat+explode over
-    # already-computed mh columns, which beats building and scanning a
-    # second cache.
-    if use_arrow:
-        base = _minhash_base_arrow(pre, ngram_n, num_hashes).persist()
-    else:
-        if shingle_mode == "word":
-            shingled = pre.select(
-                "k",
-                X.word_ngrams_from_tokens(
-                    X.lower_tokens("txt"), ngram_n
-                ).alias("sh"),
-            )
-        else:
-            shingled = pre.select(
-                "k", X.char_shingles("txt", shingle_k).alias("sh")
-            )
-        base = (
-            shingled.where(F.size("sh") > 0)
-            .select("k", "sh", *minhash_signature(F.col("sh"), num_hashes))
-            .persist()
-        )
+    if base is None:
+        # ONE persisted frame carries both the shingle sets (for the
+        # exact-Jaccard verification joins) and the signature columns
+        # (for band bucketing): a single cache-materialization pass
+        # does all the md5 work. The band explode is NOT persisted —
+        # each self-join side re-derives it from this cache with a
+        # cheap concat+explode over already-computed mh columns, which
+        # beats building and scanning a second cache.
+        base = minhash_base(
+            df, content_col, key_col, num_hashes, ngram_n
+        ).persist()
     verified = _minhash_verify_pairs(base, num_hashes, bands, jaccard_threshold)
-    return _with_cached_deps(verified, base, pre)
+    return _with_cached_deps(verified, base)
 
 
 def _minhash_verify_pairs(
@@ -750,7 +718,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     jaccard_threshold: float = 0.4,
     min_df_prune: int = 50,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs by word n-gram Jaccard.
 
@@ -762,28 +729,12 @@ def ngram_jaccard_pairs(
     discovered — pairs sharing only ultra-common n-grams score low and
     sit below any useful threshold anyway.
     """
-    use_arrow = engine == "arrow"
-    pre = rebalance_for_cpu(
-        df.select(F.col(key_col).alias("k"), F.col(content_col).alias("txt")),
-        persist=not use_arrow,
+    # the n-gram sets come from the minhash base pass with no hashes
+    grams = (
+        minhash_base(df, content_col, key_col, num_hashes=0, ngram_n=n)
+        .withColumnRenamed("sh", "g")
+        .persist()  # reused by candidate explode + both verification joins
     )
-    if use_arrow:
-        # num_hashes=0 -> the Arrow pass emits just (k, sh): shared
-        # tokenize+ngram kernel with the minhash path, no md5 work
-        grams = (
-            _minhash_base_arrow(pre, n, 0)
-            .withColumnRenamed("sh", "g")
-            .persist()  # reused by candidate explode + both verification joins
-        )
-    else:
-        grams = (
-            pre.select(
-                "k",
-                X.word_ngrams_from_tokens(X.lower_tokens("txt"), n).alias("g"),
-            )
-            .where(F.size("g") > 0)
-            .persist()
-        )
     exploded = grams.select("k", F.explode("g").alias("gram")).persist()
     rare = exploded.groupBy("gram").count().where(F.col("count") <= min_df_prune)
     cand_grams = exploded.join(rare.select("gram"), "gram")
@@ -805,7 +756,7 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("key_a", "key_b", "jaccard")
     )
-    return _with_cached_deps(out, grams, exploded, pre)
+    return _with_cached_deps(out, grams, exploded)
 
 
 def _banded_embedding_near_dups(

@@ -124,11 +124,6 @@ def _fold_sq(sub: Column, cw: Column) -> Column:
     )
 
 
-def _sq_to_lit(sub: Column, cent: list[float]) -> Column:
-    """`_fold_sq` against one literal codeword."""
-    return _fold_sq(sub, _lit_subvec(cent))
-
-
 def _book_lit(codebook: list[list[float]]) -> Column:
     """One codebook as a literal array-of-arrays column — k·dsub
     literal DATA leaves that Catalyst constant-folds into a single
@@ -203,14 +198,14 @@ def _kmeanspp_seed_books(
     a stale seed-time copy that could drift from codeword 0 and steal
     its assignments.
 
-    Cost note: this is the in-engine SPEC path (`engine="sql"`) — k-1
-    driver round-trips, one aggregate scan each.  The per-hop distance
-    battery is a single fold over the constant-folded literal codebook
-    (`_dist_battery`), so plan size is O(k·dsub) literal data, not
-    O(k) unrolled fold code; the round-trip COUNT is what the
-    `engine="numpy"` production path removes at the k=256 regime
-    (`_kmeans_np.pq_train_np` — identical algorithm on the collected
-    hash-sample, unit-pinned equal).
+    Cost note: this is the distributed SPEC path `pq_train` takes above
+    `_kmeans_np.DRIVER_TRAIN_CAP` — k-1 driver round-trips, one
+    aggregate scan each.  The per-hop distance battery is a single
+    fold over the constant-folded literal codebook (`_dist_battery`),
+    so plan size is O(k·dsub) literal data, not O(k) unrolled fold
+    code; the round-trip COUNT is what the driver-side trainer removes
+    at the k=256 regime (`_kmeans_np.pq_train_np` — identical
+    algorithm on the collected pool, unit-pinned equal).
     """
     seed = base.orderBy(F.col("key").asc()).limit(1).collect()[0]
     books = [[[float(x) for x in seed[f"v{s}"]]] for s in range(m)]
@@ -261,29 +256,25 @@ def pq_train(
     iters: int = 4,
     round_dp: int = 6,
     train_sample_mod: int | None = None,
-    engine: str = "auto",
     max_train_rows: int | None = None,
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks: returns m lists of k codewords of
     dim/m doubles each.
 
-    ``engine`` picks the executor for the SAME deterministic
-    algorithm — the two produce identical codebooks (unit-pinned in
-    tests/test_pq.py):
+    The training pool's size picks the executor for the SAME
+    deterministic algorithm — the two produce identical codebooks
+    (unit-pinned in tests/test_pq.py):
 
-    * ``"numpy"`` (what ``"auto"`` resolves to): collect the
+    * up to `_kmeans_np.DRIVER_TRAIN_CAP` rows: collect the
       (hash-sampled) training frame ONCE and run seeding + Lloyd
       driver-side (`_kmeans_np.pq_train_np`).  Codebooks are
-      driver-side metadata by construction and the input is bounded by
-      ``train_sample_mod`` — set it at corpus scale; the collect IS
-      the sample, so nothing distributed changes.  O(1) Spark jobs
-      instead of k-1 seeding round-trips + iters Lloyd rounds — the
-      production path at the k=256 regime, where the in-engine loop is
+      driver-side metadata by construction.  O(1) Spark jobs instead
+      of k-1 seeding round-trips + iters Lloyd rounds — the path at
+      the k=256 regime, where the distributed loop is
       round-trip-bound regardless of data size.
-    * ``"sql"``: the in-engine literal-battery loop below — the
-      cross-engine SPEC that the DuckDB oracles unroll CTE-for-CTE
-      (q137/q138), and the path for callers that must not collect even
-      the sampled frame.
+    * above it: the distributed literal-battery loop below, on the
+      FULL pool — the cross-engine SPEC that the DuckDB oracles unroll
+      CTE-for-CTE (q137/q138).
 
     Init is deterministic k-means++ D²-sampled seeding per subspace
     (`_kmeanspp_seed_books`).  Each Lloyd iteration runs ONE map pass
@@ -306,29 +297,20 @@ def pq_train(
     sample (and therefore the codebook) is reproducible across
     layouts, re-runs, and engines — then encode the full corpus with
     `pq_encode`.  k·dsub parameters per subspace saturate at ~10⁴-10⁵
-    rows; the same cap is what bounds the numpy engine's driver-side
-    collect (the classifier's `train_sample_mod` contract, applied
-    here).
+    rows, so a sampled pool usually fits the driver-side trainer (the
+    classifier's `train_sample_mod` contract, applied here).
 
     ``max_train_rows`` is the same lever expressed as a target row
     count instead of a modulus: when set and the pool is larger, it
     auto-derives ``mod = ceil(n / max_train_rows)`` — the same
-    deterministic md5 sample, applied BEFORE engine dispatch so the
-    numpy collect and the sql in-engine loop keep training on
-    byte-identical frames.  BOTH caps default to None (train on the
-    whole pool — the exact spec the q137/q138 oracles unroll; a
-    default cap would silently diverge from them above the cap,
-    ADVICE r10).  The driver collect is still never unguarded:
-    ``engine="auto"`` (the default) runs numpy only while the pool
-    fits `_kmeans_np.DRIVER_TRAIN_CAP` and falls back to the
-    distributed sql loop on the FULL pool above it, and an explicit
-    ``engine="numpy"`` REFUSES an over-cap pool rather than sampling
-    it — sampling is always the caller's explicit choice.
+    deterministic md5 sample, applied BEFORE the size selection so
+    both executors train on byte-identical frames.  BOTH caps default
+    to None (train on the whole pool — the exact spec the q137/q138
+    oracles unroll; a default cap would silently diverge from them
+    above the cap, ADVICE r10): sampling is always the caller's
+    explicit choice, and the driver collect stays bounded by the size
+    selection.
     """
-    if engine not in ("auto", "numpy", "sql"):
-        raise ValueError(
-            f"engine must be 'auto', 'numpy', or 'sql', got {engine!r}"
-        )
     probe = df.where(F.col(vec_col).isNotNull()).select(vec_col).first()
     if probe is None:
         return []
@@ -342,7 +324,7 @@ def pq_train(
     # seeding order, md5 uniforms, and tiebreaks are all functions of
     # the key, none of which is defined for NULL (Spark would sort a
     # NULL key first and race it with a null priority; the numpy
-    # engine's driver sort would reject it outright)
+    # trainer's driver sort would reject it outright)
     pool = df.where(
         F.col(vec_col).isNotNull() & F.col(key_col).isNotNull()
     )
@@ -370,33 +352,18 @@ def pq_train(
         F.col(key_col).alias("key"),
         *[slices[s].alias(f"v{s}") for s in range(m)],
     )
-    if engine != "sql":
-        from ._kmeans_np import DRIVER_TRAIN_CAP
+    from ._kmeans_np import DRIVER_TRAIN_CAP, pq_train_np
 
-        # over-cap gate without a full scan (ADVICE r11): reuse the
-        # exact count when the max_train_rows branch already measured
-        # the (unsampled) pool; otherwise scan at most CAP+1 rows —
-        # the dispatch only needs "more than CAP?", never n itself,
-        # and min(n, CAP+1) > CAP iff n > CAP
-        if exact_n is not None:
-            over_cap = exact_n > DRIVER_TRAIN_CAP
-        else:
-            over_cap = (
-                proj.limit(DRIVER_TRAIN_CAP + 1).count() > DRIVER_TRAIN_CAP
-            )
-        if over_cap:
-            if engine == "numpy":
-                raise ValueError(
-                    f"pq_train(engine='numpy') refuses a training pool "
-                    f"over {DRIVER_TRAIN_CAP} rows: pass "
-                    "train_sample_mod/max_train_rows to opt into the "
-                    "deterministic hash-sample, or use engine='sql'/"
-                    "'auto'"
-                )
-            engine = "sql"  # auto: distributed loop on the full pool
-    if engine != "sql":
-        from ._kmeans_np import pq_train_np
-
+    # over-cap gate without a full scan (ADVICE r11): reuse the exact
+    # count when the max_train_rows branch already measured the
+    # (unsampled) pool; otherwise scan at most CAP+1 rows — the
+    # selection only needs "more than CAP?", never n itself, and
+    # min(n, CAP+1) > CAP iff n > CAP
+    if exact_n is not None:
+        over_cap = exact_n > DRIVER_TRAIN_CAP
+    else:
+        over_cap = proj.limit(DRIVER_TRAIN_CAP + 1).count() > DRIVER_TRAIN_CAP
+    if not over_cap:
         return pq_train_np(proj.collect(), m, k, dsub, iters, round_dp)
     base = proj.localCheckpoint()
     from ._iterate import iterate_fixed
@@ -695,7 +662,6 @@ def build_ivfpq_index(
     pq_iters: int = 4,
     train_sample_mod: int | None = None,
     residual: bool = False,
-    engine: str = "auto",
 ) -> None:
     """Materialize the IVF-PQ index: the 100 TB ANN layout.
 
@@ -714,13 +680,9 @@ def build_ivfpq_index(
     Lloyd scans run on the same deterministic 1/mod key-sample — the
     100 TB lever (SCALING.md's documented mitigation for the k-1
     seeding round-trips): with it set, the only full-corpus work left
-    is the single unavoidable encode+write pass.  ``engine`` is the
-    `pq_train` executor switch (``"auto"`` → the driver-side numpy
-    trainer: identical codebooks, no per-hop round-trips — the k=256
-    production regime; ``"sql"`` keeps codebook training fully
-    in-engine).  NULL-embedding rows are dropped once up
-    front, so a NULL among the smallest keys cannot crash centroid
-    init.
+    is the single unavoidable encode+write pass.  NULL-embedding rows
+    are dropped once up front, so a NULL among the smallest keys
+    cannot crash centroid init.
 
     Metric consistency: ADC ranks by squared L2, so cell MEMBERSHIP
     and cell PROBING are both squared L2 too (`_assign_cell_l2` /
@@ -781,7 +743,6 @@ def build_ivfpq_index(
         key_col="key",
         iters=pq_iters,
         train_sample_mod=train_sample_mod,
-        engine=engine,
     )
     code_src.select(
         "key",

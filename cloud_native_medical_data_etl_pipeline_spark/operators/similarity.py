@@ -771,8 +771,6 @@ def kcenter_select(
     key_col: str = "vec_id",
     dist_dp: int = 9,
     round_dp: int = 6,
-    engine: str = "auto",
-    max_driver_rows: int = 1_000_000,
 ) -> DataFrame:
     """Greedy k-center (farthest-point traversal) coreset selection:
     ``(sel_rank, key, radius)`` — the k most mutually-distant vectors,
@@ -803,26 +801,17 @@ def kcenter_select(
     very large k switch to batched variants (pick per-partition
     farthest candidates first), documented rather than implemented.
 
-    ``engine`` picks the EXECUTION strategy for the same algorithm —
-    identical output either way (unit-pinned), so the switch is pure
-    strategy, unlike the trainers there is no sampling involved:
-
-    * ``"auto"`` (default): when the candidate pool fits the driver
-      (≤ ``max_driver_rows``, known from the count this function
-      already takes), collect (key, vec) ONCE and run the whole
-      greedy traversal in numpy (`_kmeans_np.kcenter_np`) — k
-      round-trips and k localCheckpoint materializations collapse to
-      one job (measured: 8.9 s → <0.5 s at k=32, sf0.1); larger
-      pools fall back to the distributed loop automatically.
-    * ``"numpy"`` / ``"sql"`` force the respective path ("numpy"
-      raises if the pool exceeds ``max_driver_rows`` — selection is
-      the OUTPUT here, so silently sampling would change results;
-      pre-sample upstream or use the sql engine).
+    The candidate pool's size picks the EXECUTION strategy for the
+    same algorithm — identical output either way (unit-pinned), and no
+    sampling is involved, since the selection is the output: when the
+    pool fits the driver (≤ `_kmeans_np.DRIVER_SELECT_CAP`, known from
+    the count this function already takes), collect (key, vec) ONCE
+    and run the whole greedy traversal in numpy
+    (`_kmeans_np.kcenter_np`) — k round-trips and k localCheckpoint
+    materializations collapse to one job (measured: 8.9 s → <0.5 s at
+    k=32, sf0.1); larger pools run the distributed loop below.
     """
-    if engine not in ("auto", "numpy", "sql"):
-        raise ValueError(
-            f"engine must be 'auto', 'numpy', or 'sql', got {engine!r}"
-        )
+    from ._kmeans_np import DRIVER_SELECT_CAP, kcenter_np
 
     def _hop_dist(center: list[float]):
         return F.round(
@@ -846,16 +835,7 @@ def kcenter_select(
         # k < 1 must not emit a phantom seed row (a computed selection
         # budget can legitimately hit zero)
         return df.sparkSession.createDataFrame([], out_schema)
-    if engine == "numpy" and n > max_driver_rows:
-        raise ValueError(
-            f"kcenter_select(engine='numpy') refuses {n} rows > "
-            f"max_driver_rows={max_driver_rows}: selection is the "
-            "output, so sampling here would change results — "
-            "pre-sample upstream or use engine='sql'"
-        )
-    if engine != "sql" and n <= max_driver_rows:
-        from ._kmeans_np import kcenter_np
-
+    if n <= DRIVER_SELECT_CAP:
         keys, X = _gather_vectors(
             base.select(
                 "key", F.col("vec").cast("array<double>").alias("vec")

@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -21,6 +22,67 @@ def spark():
         shuffle_partitions=int(os.environ.get("TEST_SHUFFLE_PARTITIONS", "4")),
     )
     yield s
+
+
+# ---------------------------------------------------------------------------
+# References the single product paths are checked against.
+
+
+@contextlib.contextmanager
+def distributed_loops():
+    """Run `quantize.pq_train` and `similarity.kcenter_select` on their
+    distributed loops.  Both take the driver-side numpy path while the
+    pool fits a `_kmeans_np` cap, so caps of 0 force the other side."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 0)
+        mp.setattr(_kmeans_np, "DRIVER_SELECT_CAP", 0)
+        yield
+
+
+def minhash_reference_base(df, ngram_n=3, num_hashes=8):
+    """`dedup.minhash_base(df, ...)` rebuilt from public Column
+    expressions (lowercased tokens -> distinct word n-grams -> md5-lane
+    signature), sharing no code with its Arrow pass.  ``num_hashes=0``
+    gives just ``(k, sh)``."""
+    from pyspark.sql import functions as F
+
+    from cloud_native_medical_data_etl_pipeline_spark.functions import text as X
+    from cloud_native_medical_data_etl_pipeline_spark.operators import dedup
+
+    sh = X.word_ngrams_from_tokens(X.lower_tokens("text"), ngram_n)
+    return (
+        df.select(F.col("doc_id").alias("k"), sh.alias("sh"))
+        .where(F.size("sh") > 0)
+        .select("k", "sh", *dedup.minhash_signature(F.col("sh"), num_hashes))
+    )
+
+
+def ngram_jaccard_bruteforce(grams, threshold, min_df_prune=50):
+    """`dedup.ngram_jaccard_pairs` over ``grams`` ({key: n-gram list})
+    in plain Python: every key pair sharing an n-gram found in at most
+    ``min_df_prune`` documents, scored by exact Jaccard rounded the way
+    Spark's F.round does -> sorted (key_a, key_b, jaccard)."""
+    from collections import Counter
+
+    from cloud_native_medical_data_etl_pipeline_spark.operators._kmeans_np import (
+        round_spark_scalar,
+    )
+
+    sets = {k: set(g) for k, g in grams.items()}
+    df_count = Counter(g for s in sets.values() for g in s)
+    keys = sorted(sets)
+    out = []
+    for i, a in enumerate(keys):
+        for b in keys[i + 1 :]:
+            sa, sb = sets[a], sets[b]
+            if not any(df_count[g] <= min_df_prune for g in sa & sb):
+                continue
+            j = round_spark_scalar(len(sa & sb) / len(sa | sb), 6)
+            if j >= threshold:
+                out.append((a, b, j))
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -111,8 +173,6 @@ _SLOW_TESTS = {
     ("test_bpe.py", "test_q143_bpe_oracle_shape"),
     ("test_bpe.py", "test_q144_bpe_encode_oracle_shape"),
     ("test_classifier.py", "test_end_to_end_beats_majority_class"),
-    ("test_classifier.py", "test_kcenter_all_nan_candidates_no_duplicate_picks"),
-    ("test_classifier.py", "test_kcenter_nan_lanes_lose_to_real_distances"),
     ("test_classifier.py", "test_sampled_training_scores_everyone"),
     ("test_components.py", "test_pagerank_zero_outweight_node_is_dangling"),
     ("test_dedup_similarity.py", "test_ivf_append_lands_in_trained_cells"),
@@ -130,8 +190,6 @@ _SLOW_TESTS = {
     ("test_ivfpq.py", "test_residual_encoding_near_exact_on_clustered_data"),
     ("test_medical_functions.py", "test_age_bins_right_closed"),
     ("test_pq.py", "test_pq_train_auto_caps_unbounded_collect"),
-    ("test_pq.py", "test_pq_train_null_keys_excluded_both_engines"),
-    ("test_pq.py", "test_pq_train_overcap_gate_boundary_and_exact_n_reuse"),
     ("test_properties.py", "test_apply_cdc_matches_python_model"),
     ("test_properties.py", "test_binned_interval_join_matches_bruteforce"),
     ("test_properties.py", "test_blocked_fuzzy_join_matches_bruteforce_within_blocks"),

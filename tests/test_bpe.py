@@ -7,6 +7,7 @@ from collections import Counter
 import pytest
 
 from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (
+    _apply_bpe_fold,
     apply_bpe_merges,
     train_bpe_merges,
 )
@@ -112,10 +113,13 @@ def test_apply_bpe_preserves_document_word_order(spark):
         [(1, "zz yy xx ww vv uu tt ss rr qq pp oo nn mm ll kk")],
         "doc_id long, text string",
     ).repartition(7)
-    enc = apply_bpe_merges(df, [("z", "z")]).collect()[0]
-    assert enc["tokens"][0] == "zz"  # merged first word stays first
-    assert enc["tokens"][1:3] == ["y", "y"]
-    assert enc["n_bpe_tokens"] == 1 + 15 * 2
+    # the fold reference regroups words after a shuffle: its order
+    # must be the document's too
+    for encode in (apply_bpe_merges, _apply_bpe_fold):
+        enc = encode(df, [("z", "z")]).collect()[0]
+        assert enc["tokens"][0] == "zz"  # merged first word stays first
+        assert enc["tokens"][1:3] == ["y", "y"]
+        assert enc["n_bpe_tokens"] == 1 + 15 * 2
 
 
 def test_bpe_rejects_bad_args(spark):
@@ -156,31 +160,30 @@ def test_apply_bpe_keeps_empty_documents(spark):
         [(1, "ab ab"), (2, ""), (3, None), (4, "   ")],
         "doc_id long, text string",
     )
-    rows = {
-        r["doc_id"]: r for r in apply_bpe_merges(df, [("a", "b")]).collect()
-    }
-    assert set(rows) == {1, 2, 3, 4}
-    assert rows[1]["tokens"] == ["ab", "ab"]
-    for k in (2, 3, 4):
-        assert rows[k]["tokens"] == [] and rows[k]["n_bpe_tokens"] == 0
+    for encode in (apply_bpe_merges, _apply_bpe_fold):
+        rows = {r["doc_id"]: r for r in encode(df, [("a", "b")]).collect()}
+        assert set(rows) == {1, 2, 3, 4}
+        assert rows[1]["tokens"] == ["ab", "ab"]
+        for k in (2, 3, 4):
+            assert rows[k]["tokens"] == [] and rows[k]["n_bpe_tokens"] == 0
 
 
 # ---------------------------------------------------------------------------
-# impl="arrow": the scale encoder (r15) — greedy-minimum-rank with a
-# broadcast rank table must be token-identical to the fold-chain spec
-# path, and the fold path must refuse past its plan-depth ceiling.
+# apply_bpe_merges, the Arrow scale encoder (r15): greedy-minimum-rank
+# with a broadcast rank table must be token-identical to the in-order
+# fold-chain spec (_apply_bpe_fold).
 # ---------------------------------------------------------------------------
 
 
 def _both_impls(spark, rows, merges):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {}
-    for impl in ("fold", "arrow"):
-        out[impl] = {
+    return tuple(
+        {
             r["doc_id"]: (list(r["tokens"]), r["n_bpe_tokens"])
-            for r in apply_bpe_merges(df, merges, impl=impl).collect()
+            for r in encode(df, merges).collect()
         }
-    return out["fold"], out["arrow"]
+        for encode in (_apply_bpe_fold, apply_bpe_merges)
+    )
 
 
 def test_apply_bpe_arrow_matches_fold_on_learned_merges(spark):
@@ -213,30 +216,6 @@ def test_apply_bpe_arrow_overlapping_runs(spark):
     )
     assert fold == arrow
     assert arrow[1][0] == ["aaaa", "aaa", "aa", "a"]
-
-
-def test_apply_bpe_fold_refuses_past_ceiling(spark):
-    from cloud_native_medical_data_etl_pipeline_spark.operators import bpe
-
-    df = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-    # a chain of DISTINCT rank-monotone rules
-    too_many = [("a", "b")] + [
-        ("a" + "b" * k, "b") for k in range(1, bpe.FOLD_MERGE_CEILING + 1)
-    ]
-    assert len(too_many) == bpe.FOLD_MERGE_CEILING + 1
-    with pytest.raises(ValueError, match="FOLD_MERGE_CEILING"):
-        apply_bpe_merges(df, too_many, impl="fold")
-    # arrow is merge-count-independent: same table encodes fine
-    got = apply_bpe_merges(df, too_many, impl="arrow").collect()[0]
-    assert got["tokens"] == ["ab"]
-    # EXACT repeated pairs past the ceiling stay arrow-encodable too
-    # (the original >64-rule acceptance case: repeats are provable
-    # fold no-ops, skipped by the gate — not duplicate producers)
-    repeats = [("a", "b")] * (bpe.FOLD_MERGE_CEILING + 1)
-    got = apply_bpe_merges(df, repeats, impl="arrow").collect()[0]
-    assert got["tokens"] == ["ab"]
-    with pytest.raises(ValueError, match="impl"):
-        apply_bpe_merges(df, [("a", "b")], impl="pandas")
 
 
 def test_apply_bpe_arrow_fuzz_vs_fold(spark):
@@ -273,7 +252,7 @@ def test_apply_bpe_arrow_fuzz_vs_fold(spark):
             # rather than crash the parity check below.
             df = spark.createDataFrame(rows, "doc_id long, text string")
             with pytest.raises(ValueError, match="duplicate producer"):
-                apply_bpe_merges(df, merges, impl="arrow")
+                apply_bpe_merges(df, merges)
             return
         fold, arrow = _both_impls(spark, rows, merges)
         assert fold == arrow
@@ -294,10 +273,10 @@ def test_apply_bpe_arrow_refuses_duplicate_producers(spark):
     ]
     df = spark.createDataFrame([(1, "abac")], "doc_id long, text string")
     with pytest.raises(ValueError, match="duplicate producer"):
-        apply_bpe_merges(df, merges, impl="arrow")
-    # the fold path (the in-order spec) accepts it and pins the
+        apply_bpe_merges(df, merges)
+    # the fold reference (the in-order spec) accepts it and pins the
     # in-order answer greedy would have gotten wrong
-    got = apply_bpe_merges(df, merges, impl="fold").collect()[0]
+    got = _apply_bpe_fold(df, merges).collect()[0]
     assert got["tokens"] == ["aba", "c"]
 
 
@@ -311,16 +290,22 @@ def test_apply_bpe_arrow_accepts_exact_repeated_pairs(spark):
     fold, arrow = _both_impls(spark, rows, merges)
     assert fold == arrow
     assert fold[1] == (["abc", "ab", "ab"], 3)
+    # the encoder's cost is independent of merge count: long tables of
+    # distinct rank-monotone rules and of exact repeats encode as well
+    df = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
+    chain = [("a", "b")] + [("a" + "b" * k, "b") for k in range(1, 65)]
+    for table in (chain, [("a", "b")] * 65):
+        assert apply_bpe_merges(df, table).collect()[0]["tokens"] == ["ab"]
 
 
 def test_q144_bpe_encode_oracle_shape(spark):
     """The staged BPE ENCODE registration candidate (q144, written in
     r15, unregistered — the r17 candidate; r16's seat belongs to
     q143): train the 8-rule table, encode every document through the
-    r15 impl="arrow" kernel, and the full (doc_id, n_bpe_tokens,
-    encoded) set must match DuckDB's word-level fold chain reassembled
-    by document position.  Pins the staged probe + SQL pair so it
-    cannot rot before its window seat."""
+    r15 Arrow kernel (apply_bpe_merges), and the full (doc_id,
+    n_bpe_tokens, encoded) set must match DuckDB's word-level fold
+    chain reassembled by document position.  Pins the staged probe +
+    SQL pair so it cannot rot before its window seat."""
     import duckdb
 
     import __spark_entry__ as E
@@ -383,25 +368,23 @@ def test_apply_bpe_arrow_refuses_non_learned_order(spark):
     df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
     bad = [("ab", "c"), ("a", "b")]
     with pytest.raises(ValueError, match="learned-order"):
-        apply_bpe_merges(df, bad, impl="arrow")
-    # the fold spec path accepts it: rule 0 is a no-op (no 'ab' symbol
-    # exists yet), rule 1 merges — [ab, c], NOT [abc]
-    got = apply_bpe_merges(df, bad, impl="fold").collect()[0]
+        apply_bpe_merges(df, bad)
+    # the fold spec reference accepts it: rule 0 is a no-op (no 'ab'
+    # symbol exists yet), rule 1 merges — [ab, c], NOT [abc]
+    got = _apply_bpe_fold(df, bad).collect()[0]
     assert got["tokens"] == ["ab", "c"]
 
 
 def test_apply_bpe_impls_duplicate_key_cardinality_contract(spark):
-    """Documented divergence pin: fold's posexplode/groupBy collapses
-    duplicate key values into one interleaved row; arrow emits one
-    row per input row.  Keyed input is expected unique — this test
-    records the behavior either way so a silent change fails."""
+    """Documented pin: apply_bpe_merges emits one row per input row,
+    so duplicate key values stay separate rows.  Keyed input is
+    expected unique — this test records the behavior so a silent
+    change fails."""
     df = spark.createDataFrame(
         [(1, "aa bb"), (1, "cc")], "doc_id long, text string"
     )
-    fold = apply_bpe_merges(df, [("a", "a")], impl="fold").collect()
-    arrow = apply_bpe_merges(df, [("a", "a")], impl="arrow").collect()
+    arrow = apply_bpe_merges(df, [("a", "a")]).collect()
     # 'aa bb' -> [aa] + [b,b] = 3 tokens, 'cc' -> [c,c] = 2
-    assert len(fold) == 1 and fold[0]["n_bpe_tokens"] == 5
     assert len(arrow) == 2 and sorted(
         r["n_bpe_tokens"] for r in arrow
     ) == [2, 3]

@@ -17,7 +17,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.similarity import (
     kcenter_select,
 )
 
-from conftest import ORACLE_SF_DIR
+from conftest import ORACLE_SF_DIR, distributed_loops
 
 
 def _docs(spark, rows):
@@ -251,72 +251,46 @@ def test_sampled_training_rejects_bad_mod(spark):
         quality_classifier_scores(df, train_sample_mod=0)
 
 
+def _both_sides(df, k):
+    """kcenter_select's (rank, key, radius) rows on the driver-side
+    numpy traversal (what it runs while the pool fits
+    `DRIVER_SELECT_CAP`) and on the distributed loop."""
+    a = sorted(tuple(r) for r in kcenter_select(df, k=k).collect())
+    with distributed_loops():
+        b = sorted(tuple(r) for r in kcenter_select(df, k=k).collect())
+    return a, b
+
+
 def test_kcenter_engines_agree(spark):
-    """Both execution paths — the distributed sql loop (the
-    DuckDB-oracle spec) and the engine="numpy" driver-side traversal
-    that engine="auto" dispatches to when the pool fits — must produce
-    IDENTICAL picks, ranks, and radii, including the ascending-key
-    argmax tiebreaks (exact fold replay + Spark-exact rounding)."""
+    """Both execution paths — the distributed loop (the DuckDB-oracle
+    spec) and the driver-side numpy traversal — must produce IDENTICAL
+    picks, ranks, and radii, including the ascending-key argmax
+    tiebreaks (exact fold replay + Spark-exact rounding)."""
     emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
-    a = sorted(
-        tuple(r) for r in kcenter_select(emb, k=8, engine="sql").collect()
-    )
-    c = sorted(
-        tuple(r) for r in kcenter_select(emb, k=8, engine="numpy").collect()
-    )
-    d = sorted(tuple(r) for r in kcenter_select(emb, k=8).collect())
-    assert a == c == d and len(a) == 8
+    a, c = _both_sides(emb, 8)
+    assert a == c and len(a) == 8
     # all-duplicate corpus: ties everywhere, distinct keys every path
     rows = [(i, [1.0, 2.0]) for i in range(6)]
-    dup = [
-        sorted(
-            tuple(r)
-            for r in kcenter_select(_emb(spark, rows), k=4, **kw).collect()
-        )
-        for kw in ({"engine": "sql"}, {"engine": "numpy"}, {})
-    ]
-    assert dup[0] == dup[1] == dup[2]
+    a, c = _both_sides(_emb(spark, rows), 4)
+    assert a == c
     # element-level NULLs null-propagate identically (NULL distance
     # never overwrites dmin, NULL radius rows sort last)
     en = [(1, [0.0, 0.0]), (2, [None, 1.0]), (3, [5.0, 5.0]), (4, [1.0, 9.0])]
-    across = [
-        sorted(
-            tuple(r)
-            for r in kcenter_select(_emb(spark, en), k=3, **kw).collect()
-        )
-        for kw in ({"engine": "sql"}, {"engine": "numpy"})
-    ]
-    assert across[0] == across[1]
-    with pytest.raises(ValueError, match="engine"):
-        kcenter_select(_emb(spark, rows), k=2, engine="simd")
-    # the numpy engine refuses a pool over the driver cap (selection
-    # is the output — sampling would change results); auto falls back
-    with pytest.raises(ValueError, match="max_driver_rows"):
-        kcenter_select(_emb(spark, rows), k=2, engine="numpy", max_driver_rows=3)
-    e = sorted(
-        tuple(r)
-        for r in kcenter_select(
-            _emb(spark, rows), k=4, max_driver_rows=3
-        ).collect()
-    )
-    assert e == dup[0]
+    a, c = _both_sides(_emb(spark, en), 3)
+    assert a == c
 
 
 def test_kcenter_all_nan_candidates_no_duplicate_picks(spark):
     # ADVICE r10: when every remaining candidate's dmin is NaN (all
     # carry NULL elements), the numpy argmax used to tie alive and
     # dead lanes at -inf and re-pick the seed — duplicate keys and
-    # fabricated 0.0 radii.  Both engines must pick the smallest alive
+    # fabricated 0.0 radii.  Both paths must pick the smallest alive
     # key with a NULL radius (desc-nulls-last + ascending-key), and
-    # the sql loop must not TypeError on float(NULL dmin).
+    # the distributed loop must not TypeError on float(NULL dmin).
     rows = [(1, [1.0, 1.0]), (2, [None, 2.0]), (3, [3.0, None])]
-    for engine in ("numpy", "sql", "auto"):
-        out = sorted(
-            kcenter_select(_emb(spark, rows), k=3, engine=engine).collect(),
-            key=lambda r: r["sel_rank"],
-        )
-        assert [r["key"] for r in out] == [1, 2, 3], engine
-        assert [r["radius"] for r in out] == [None, None, None], engine
+    for out in _both_sides(_emb(spark, rows), 3):
+        assert [r[1] for r in out] == [1, 2, 3], out
+        assert [r[2] for r in out] == [None, None, None], out
 
 
 def test_kcenter_nan_lanes_lose_to_real_distances(spark):
@@ -328,14 +302,10 @@ def test_kcenter_nan_lanes_lose_to_real_distances(spark):
         (3, [4.0, 0.0]),
         (4, [0.0, 3.0]),
     ]
-    for engine in ("numpy", "sql"):
-        out = sorted(
-            kcenter_select(_emb(spark, rows), k=4, engine=engine).collect(),
-            key=lambda r: r["sel_rank"],
-        )
-        assert [r["key"] for r in out] == [1, 3, 4, 2], engine
-        assert out[1]["radius"] == 16.0 and out[2]["radius"] == 9.0, engine
-        assert out[3]["radius"] is None, engine
+    for out in _both_sides(_emb(spark, rows), 4):
+        assert [r[1] for r in out] == [1, 3, 4, 2], out
+        assert out[1][2] == 16.0 and out[2][2] == 9.0, out
+        assert out[3][2] is None, out
 
 
 def test_kcenter_engines_agree_on_null_element_centers(spark):
@@ -349,16 +319,5 @@ def test_kcenter_engines_agree_on_null_element_centers(spark):
         (4, [0.0, 3.0]),
         (5, [None, None]),
     ]
-    a = sorted(
-        tuple(r)
-        for r in kcenter_select(
-            _emb(spark, rows), k=5, engine="sql"
-        ).collect()
-    )
-    c = sorted(
-        tuple(r)
-        for r in kcenter_select(
-            _emb(spark, rows), k=5, engine="numpy"
-        ).collect()
-    )
+    a, c = _both_sides(_emb(spark, rows), 5)
     assert a == c

@@ -12,7 +12,11 @@ from cloud_native_medical_data_etl_pipeline_spark.operators import (
     similarity,
 )
 
-from conftest import ORACLE_SF_DIR
+from conftest import (
+    ORACLE_SF_DIR,
+    minhash_reference_base,
+    ngram_jaccard_bruteforce,
+)
 
 SF = ORACLE_SF_DIR
 
@@ -108,21 +112,30 @@ def test_minhash_lsh_join_matches_pairs_semantics(spark):
     assert got == cross
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_minhash_arrow_equals_sql_engine(spark):
-    """The Arrow mapInPandas base path must be bit-identical to the
-    expression path — same pairs, same jaccard — on real corpus text."""
+    """The Arrow mapInPandas base pass must be bit-identical to the SQL
+    expression path — same base rows, same pairs, same jaccard — on
+    real corpus text; its n-gram sets must give exactly the Python
+    brute-force n-gram Jaccard pairs."""
     docs = (
         spark.read.parquet(f"{SF}/documents.parquet")
         .limit(300)
         .select("doc_id", "text")
     )
-    arrow = dedup.minhash_lsh_pairs(docs, engine="arrow").collect()
-    sql = dedup.minhash_lsh_pairs(docs, engine="sql").collect()
-    assert sorted(map(tuple, arrow)) == sorted(map(tuple, sql))
+    ref_base = minhash_reference_base(docs)
+    assert _rows(dedup.minhash_base(docs)) == _rows(ref_base)
+    arrow = _rows(dedup.minhash_lsh_pairs(docs))
+    assert arrow == _rows(dedup.minhash_lsh_pairs(docs, base=ref_base))
     assert len(arrow) > 0  # corpus has planted near-dups
-    ja = dedup.ngram_jaccard_pairs(docs, engine="arrow").collect()
-    js = dedup.ngram_jaccard_pairs(docs, engine="sql").collect()
-    assert sorted(map(tuple, ja)) == sorted(map(tuple, js))
+    ref_grams = _rows(minhash_reference_base(docs, num_hashes=0))
+    assert _rows(dedup.minhash_base(docs, num_hashes=0)) == ref_grams
+    assert _rows(dedup.ngram_jaccard_pairs(docs)) == ngram_jaccard_bruteforce(
+        dict(ref_grams), 0.4
+    )
 
 
 def test_simhash_pairs(spark):
@@ -1098,9 +1111,11 @@ def test_minhash_arrow_equals_sql_on_unicode_edge_whitespace(spark):
         (3, "alpha beta gamma delta epsilon zeta"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    arrow = dedup.minhash_lsh_pairs(docs, engine="arrow", jaccard_threshold=0.3).collect()
-    sql = dedup.minhash_lsh_pairs(docs, engine="sql", jaccard_threshold=0.3).collect()
-    assert sorted(map(tuple, arrow)) == sorted(map(tuple, sql))
+    ref_base = minhash_reference_base(docs)
+    assert _rows(dedup.minhash_base(docs)) == _rows(ref_base)
+    arrow = _rows(dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.3))
+    ref = _rows(dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.3, base=ref_base))
+    assert arrow == ref
 
 
 def test_embedding_near_dups_string_keys_group_verify(spark):

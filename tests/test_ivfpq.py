@@ -17,7 +17,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     pq_train,
 )
 
-from conftest import ORACLE_SF_DIR
+from conftest import ORACLE_SF_DIR, distributed_loops
 
 
 @pytest.fixture(scope="module")
@@ -248,8 +248,8 @@ def test_q138_params_never_trigger_refill_on_residuals(spark, tmp_path):
     branch: at num_cells=4 / m=4 / k=4 over the RESIDUAL vectors of
     the driver embeddings, no Lloyd round empties a codeword.  Pin it
     as an invariant so a data/kernel change fails here, not as a
-    driver hash mismatch.  Also pins that the default build engine is
-    the numpy trainer (the spy hooks the numpy refill path)."""
+    driver hash mismatch.  Also pins that the build trains on the
+    numpy trainer at this size (the spy hooks the numpy refill path)."""
     from cloud_native_medical_data_etl_pipeline_spark.operators import (
         _kmeans_np as K,
     )
@@ -276,14 +276,16 @@ def test_q138_params_never_trigger_refill_on_residuals(spark, tmp_path):
 
 
 def test_build_engine_sql_matches_default(spark, tmp_path):
-    # the engine switch rides through build_ivfpq_index: identical
-    # codebook sidecars and codes either way
+    # a build whose codebooks come from pq_train's distributed loop
+    # writes the same codebook sidecars and codes as the default
+    # (driver-side) build
     df = _clustered_df(spark)
     pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
     build_ivfpq_index(df, pa, num_cells=2, train_iters=1, m=2, k=4,
                       pq_iters=2, residual=True)
-    build_ivfpq_index(df, pb, num_cells=2, train_iters=1, m=2, k=4,
-                      pq_iters=2, residual=True, engine="sql")
+    with distributed_loops():
+        build_ivfpq_index(df, pb, num_cells=2, train_iters=1, m=2, k=4,
+                          pq_iters=2, residual=True)
     books_a = sorted(map(tuple, spark.read.parquet(pa + "/_pq_codebooks")
                          .select("s", "code", "codeword").collect()))
     books_b = sorted(map(tuple, spark.read.parquet(pb + "/_pq_codebooks")

@@ -491,15 +491,16 @@ def test_q15_tokenizes_once(spark):
 
 def test_bpe_arrow_encode_is_shuffle_free(spark):
     """The r15 scale encoder's plan contract: one scan + one Arrow
-    eval, ZERO Exchange — the fold path's posexplode/groupBy regroup
-    is gone, so encode cost is pure map-side work at any corpus size.
+    eval, ZERO Exchange — no posexplode/groupBy regroup (the fold
+    reference's shape), so encode cost is pure map-side work at any
+    corpus size.
     (The merge table rides in the UDF closure, not a join.)"""
     from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (
         apply_bpe_merges,
     )
 
     df = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
-    enc = apply_bpe_merges(df, [("a", "b"), ("ab", "c")], impl="arrow")
+    enc = apply_bpe_merges(df, [("a", "b"), ("ab", "c")])
     plan = _executed_plan(enc)
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan or "BatchEvalPython" in plan, plan

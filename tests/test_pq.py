@@ -13,7 +13,7 @@ from cloud_native_medical_data_etl_pipeline_spark.operators.quantize import (
     pq_train,
 )
 
-from conftest import ORACLE_SF_DIR
+from conftest import ORACLE_SF_DIR, distributed_loops
 
 
 def _emb(spark, rows):
@@ -222,28 +222,45 @@ def test_q137_params_never_trigger_refill_on_real_embeddings(spark):
     K._refill_empty = spy
     try:
         emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
-        # default engine — the exact call q137 makes; engine equality
-        # (pinned elsewhere in this file) carries the invariant to the
-        # SQL spec path the oracle unrolls
+        # the exact call q137 makes (the driver-side trainer at this
+        # size); trainer equality (pinned elsewhere in this file)
+        # carries the invariant to the SQL spec path the oracle unrolls
         Q.pq_train(emb, m=4, k=4, iters=2)
     finally:
         K._refill_empty = orig
     assert calls and all(not c for c in calls), calls
 
 
-# --- engine equality: the numpy production path IS the SQL spec path ------
+# --- trainer equality: the driver-side numpy path IS the SQL spec path -----
+
+
+def _driver_side_calls(monkeypatch):
+    """Record each run of the driver-side trainer, so a test can tell
+    which side pq_train's size selection took."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
+
+    calls = []
+    orig = _kmeans_np.pq_train_np
+
+    def spy(*args):
+        calls.append(len(args[0]))
+        return orig(*args)
+
+    monkeypatch.setattr(_kmeans_np, "pq_train_np", spy)
+    return calls
 
 
 def test_pq_train_engines_agree_on_real_embeddings(spark):
-    """The r9 contract: `engine="numpy"` (the "auto" production path —
-    driver-side seeding+Lloyd over the collected sample) produces
-    codebooks EXACTLY equal to `engine="sql"` (the literal-battery
-    in-engine loop the DuckDB oracles unroll).  Every rounding in
-    `_kmeans_np` mirrors the Spark expression it replaces, so equality
-    is exact, not approximate."""
+    """The r9 contract: the driver-side numpy trainer (seeding+Lloyd
+    over the collected pool, what pq_train runs while the pool fits
+    `DRIVER_TRAIN_CAP`) produces codebooks EXACTLY equal to the
+    distributed literal-battery loop the DuckDB oracles unroll.  Every
+    rounding in `_kmeans_np` mirrors the Spark expression it replaces,
+    so equality is exact, not approximate."""
     emb = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
-    b_sql = pq_train(emb, m=8, k=16, iters=2, engine="sql")
-    b_np = pq_train(emb, m=8, k=16, iters=2, engine="numpy")
+    b_np = pq_train(emb, m=8, k=16, iters=2)
+    with distributed_loops():
+        b_sql = pq_train(emb, m=8, k=16, iters=2)
     assert b_np == b_sql
 
 
@@ -253,27 +270,24 @@ def test_pq_train_engines_agree_on_pads_and_refills(spark):
     pad = _emb(
         spark, [(i, [1.0, 2.0]) for i in range(3)] + [(10, [5.0, 6.0])]
     )
-    assert pq_train(pad, m=1, k=8, iters=2, engine="numpy") == pq_train(
-        pad, m=1, k=8, iters=2, engine="sql"
-    )
     dup = _emb(
         spark, [(i, [float(i % 3), float(i % 2)]) for i in range(40)]
     )
-    assert pq_train(dup, m=2, k=4, iters=3, engine="numpy") == pq_train(
-        dup, m=2, k=4, iters=3, engine="sql"
-    )
+    np_books = [
+        pq_train(pad, m=1, k=8, iters=2), pq_train(dup, m=2, k=4, iters=3)
+    ]
+    with distributed_loops():
+        assert np_books == [
+            pq_train(pad, m=1, k=8, iters=2), pq_train(dup, m=2, k=4, iters=3)
+        ]
 
 
-def test_pq_train_auto_is_numpy_and_partition_invariant(spark):
+def test_pq_train_auto_is_numpy_and_partition_invariant(spark, monkeypatch):
+    calls = _driver_side_calls(monkeypatch)
     df = _emb(spark, _clustered())
     auto = pq_train(df, m=2, k=4, iters=2)
-    assert auto == pq_train(df.repartition(16), m=2, k=4, iters=2, engine="numpy")
-
-
-def test_pq_train_rejects_unknown_engine(spark):
-    df = _emb(spark, _clustered())
-    with pytest.raises(ValueError, match="engine"):
-        pq_train(df, m=2, k=4, engine="pandas")
+    assert auto == pq_train(df.repartition(16), m=2, k=4, iters=2)
+    assert calls == [40, 40]  # a 40-row pool fits the driver
 
 
 def test_pq_train_k256_production_regime(spark):
@@ -325,10 +339,11 @@ def test_pq_train_null_keys_excluded_both_engines(spark):
         spark,
         [(None, [9.0, 9.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0]), (3, [8.0, 1.0])],
     )
-    a = pq_train(df, m=1, k=2, iters=2, engine="numpy")
-    b = pq_train(df, m=1, k=2, iters=2, engine="sql")
+    a = pq_train(df, m=1, k=2, iters=2)
     keep = _emb(spark, [(1, [0.0, 0.0]), (2, [5.0, 5.0]), (3, [8.0, 1.0])])
-    c = pq_train(keep, m=1, k=2, iters=2, engine="sql")
+    with distributed_loops():
+        b = pq_train(df, m=1, k=2, iters=2)
+        c = pq_train(keep, m=1, k=2, iters=2)
     assert a == b == c
 
 
@@ -414,9 +429,9 @@ def test_pq_train_auto_caps_unbounded_collect(spark):
     ADVICE r10: a default cap silently diverged from the q137/q138
     oracle spec above 100k rows): when set it auto-derives the
     deterministic md5 sample — equal to passing the derived mod
-    explicitly and identical across engines.  The driver collect is
-    bounded by the engine="auto" sql fallback instead (see
-    test_pq_train_numpy_refuses_overcap_auto_falls_back)."""
+    explicitly and identical on both trainers.  The driver collect is
+    bounded by the size selection instead (see
+    test_pq_train_overcap_falls_back_to_distributed_loop)."""
     rows = [
         (i, [float((i * 13 + d * 7) % 11), float((i * 5 + d) % 9)])
         for i in range(40)
@@ -426,10 +441,9 @@ def test_pq_train_auto_caps_unbounded_collect(spark):
     capped = pq_train(df, m=1, k=3, iters=2, max_train_rows=10)
     explicit = pq_train(df, m=1, k=3, iters=2, train_sample_mod=4)
     assert capped == explicit
-    # engine parity survives the auto-derived sample
-    capped_sql = pq_train(
-        df, m=1, k=3, iters=2, max_train_rows=10, engine="sql"
-    )
+    # trainer parity survives the auto-derived sample
+    with distributed_loops():
+        capped_sql = pq_train(df, m=1, k=3, iters=2, max_train_rows=10)
     assert capped == capped_sql
     # explicit opt-out trains on everything, as before
     full = pq_train(df, m=1, k=3, iters=2, max_train_rows=None)
@@ -450,54 +464,46 @@ def test_pq_train_default_is_uncapped_oracle_spec(spark):
     assert default == spec
 
 
-def test_pq_train_numpy_refuses_overcap_auto_falls_back(spark, monkeypatch):
-    # engine="numpy" REFUSES a pool over DRIVER_TRAIN_CAP instead of
-    # silently sampling; engine="auto" (the default) falls back to the
-    # sql loop on the FULL pool with identical codebooks
+def test_pq_train_overcap_falls_back_to_distributed_loop(spark, monkeypatch):
+    # a pool over DRIVER_TRAIN_CAP is never sampled and never collected:
+    # pq_train runs the distributed loop on the FULL pool, with the
+    # codebooks the driver-side trainer gives when the pool fits
     from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
 
     emb = spark.read.parquet(
         f"{ORACLE_SF_DIR}/embeddings.parquet"
     ).limit(12)
+    fits = pq_train(emb, m=2, k=3, iters=1)
+    calls = _driver_side_calls(monkeypatch)
     monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 5)
-    with pytest.raises(ValueError, match="refuses"):
-        pq_train(emb, m=2, k=3, iters=1, engine="numpy")
-    auto = pq_train(emb, m=2, k=3, iters=1, engine="auto")
-    sql = pq_train(emb, m=2, k=3, iters=1, engine="sql")
-    assert auto == sql
+    assert pq_train(emb, m=2, k=3, iters=1) == fits
+    assert calls == []
 
 
 def test_pq_train_overcap_gate_boundary_and_exact_n_reuse(spark, monkeypatch):
-    # ADVICE r11: the over-cap dispatch gate must not run a full count
-    # of the training frame — it scans at most CAP+1 rows, or reuses
-    # the exact count the max_train_rows branch already took.  The
-    # DECISION must be unchanged: pool == CAP stays on numpy, CAP+1
-    # falls back / refuses, and the reused-count path agrees.
+    # ADVICE r11: the over-cap selection must not run a full count of
+    # the training frame — it scans at most CAP+1 rows, or reuses the
+    # exact count the max_train_rows branch already took.  The
+    # DECISION must be unchanged: pool == CAP stays on the driver,
+    # CAP+1 runs the distributed loop, and the reused-count path agrees.
     from cloud_native_medical_data_etl_pipeline_spark.operators import _kmeans_np
 
     emb = spark.read.parquet(
         f"{ORACLE_SF_DIR}/embeddings.parquet"
     ).limit(12)
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 12)
-    # exactly at the cap: numpy accepted, identical to sql
-    at_cap_np = pq_train(emb, m=2, k=3, iters=1, engine="numpy")
-    at_cap_sql = pq_train(emb, m=2, k=3, iters=1, engine="sql")
-    assert at_cap_np == at_cap_sql
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 11)
-    # one over: numpy refuses, auto falls back to the identical sql loop
-    with pytest.raises(ValueError, match="refuses"):
-        pq_train(emb, m=2, k=3, iters=1, engine="numpy")
-    assert pq_train(emb, m=2, k=3, iters=1, engine="auto") == at_cap_sql
-    # exact-count reuse: an unsampled max_train_rows pool (12 <= 1000)
-    # knows n without the limit scan and must gate identically
-    with pytest.raises(ValueError, match="refuses"):
-        pq_train(emb, m=2, k=3, iters=1, engine="numpy", max_train_rows=1000)
-    assert (
-        pq_train(emb, m=2, k=3, iters=1, engine="auto", max_train_rows=1000)
-        == at_cap_sql
-    )
-    monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", 12)
-    assert (
-        pq_train(emb, m=2, k=3, iters=1, engine="numpy", max_train_rows=1000)
-        == at_cap_sql
-    )
+    with distributed_loops():
+        spec = pq_train(emb, m=2, k=3, iters=1)
+    calls = _driver_side_calls(monkeypatch)
+    for cap, max_train_rows, on_driver in (
+        (12, None, True),  # exactly at the cap
+        (11, None, False),  # one over
+        # exact-count reuse: an unsampled max_train_rows pool
+        # (12 <= 1000) knows n without the limit scan
+        (11, 1000, False),
+        (12, 1000, True),
+    ):
+        monkeypatch.setattr(_kmeans_np, "DRIVER_TRAIN_CAP", cap)
+        calls.clear()
+        got = pq_train(emb, m=2, k=3, iters=1, max_train_rows=max_train_rows)
+        assert got == spec, (cap, max_train_rows)
+        assert calls == ([12] if on_driver else []), (cap, max_train_rows)

@@ -16,7 +16,12 @@ from pyspark.sql import functions as F
 from cloud_native_medical_data_etl_pipeline_spark.functions import medical as M
 from cloud_native_medical_data_etl_pipeline_spark.functions import text as X
 
-from conftest import SF_0_01_DIR
+from conftest import (
+    SF_0_01_DIR,
+    distributed_loops,
+    minhash_reference_base,
+    ngram_jaccard_bruteforce,
+)
 
 AGE_BINS = [0, 18, 30, 50, 65, 100]
 # reference labels: drug_transformer.py:119
@@ -921,8 +926,9 @@ def test_pq_train_engines_agree_property(spark, rows, k, iters):
         [(key, vec) for key, vec in rows],
         "vec_id long, embedding array<double>",
     )
-    a = pq_train(df, m=2, k=k, iters=iters, engine="numpy")
-    b = pq_train(df, m=2, k=k, iters=iters, engine="sql")
+    a = pq_train(df, m=2, k=k, iters=iters)
+    with distributed_loops():
+        b = pq_train(df, m=2, k=k, iters=iters)
     assert a == b
 
 
@@ -957,23 +963,20 @@ def test_kcenter_engines_agree_under_null_elements(spark, rows, k):
         [(key, vec) for key, vec in rows],
         "vec_id long, embedding array<double>",
     )
-    a = sorted(
-        tuple(r) for r in kcenter_select(df, k=k, engine="numpy").collect()
-    )
-    b = sorted(
-        tuple(r) for r in kcenter_select(df, k=k, engine="sql").collect()
-    )
+    a = sorted(tuple(r) for r in kcenter_select(df, k=k).collect())
+    with distributed_loops():
+        b = sorted(tuple(r) for r in kcenter_select(df, k=k).collect())
     assert a == b
 
 
-# minhash / n-gram-Jaccard arrow-vs-sql engine parity, randomized-text
-# form: dedup.py's docstring claims the Arrow mapInPandas signature
-# path is "bit-identical ... cross-checked by property tests", but the
-# existing cross-checks run on the fixed driver corpus only.  This is
-# the randomized form: adversarial text (unicode, digits, punctuation,
-# whitespace runs, tab/newline, empty, NULL) through BOTH engines,
-# exact pair equality demanded.  Low thresholds so candidate pairs
-# actually emit.
+# minhash / n-gram-Jaccard parity of the Arrow base pass with its
+# references, randomized-text form: the fixed-corpus cross-checks in
+# test_dedup_similarity.py run on the driver corpus only.  This feeds
+# adversarial text (unicode, digits, punctuation, whitespace runs,
+# tab/newline, empty, NULL) through the Arrow pass and through the SQL
+# expression reference (conftest.minhash_reference_base) or a Python
+# brute force, exact equality demanded.  Low thresholds so candidate
+# pairs actually emit.
 _tx_chars = "ab1 .,-\t\né中"
 _tx_word = st.text(alphabet=_tx_chars, min_size=0, max_size=24)
 _tx_docs = st.lists(
@@ -993,13 +996,15 @@ def test_minhash_engines_agree_on_random_text(spark, docs, ngram_n):
         [(k, t) for k, t in docs], "doc_id long, text string"
     )
     kw = dict(ngram_n=ngram_n, jaccard_threshold=0.1, num_hashes=8, bands=4)
-    a = sorted(
-        tuple(r)
-        for r in dedup.minhash_lsh_pairs(df, engine="arrow", **kw).collect()
+    ref_base = minhash_reference_base(df, ngram_n)
+    base = dedup.minhash_base(df, ngram_n=ngram_n)
+    assert sorted(map(tuple, base.collect())) == sorted(
+        map(tuple, ref_base.collect())
     )
+    a = sorted(tuple(r) for r in dedup.minhash_lsh_pairs(df, **kw).collect())
     b = sorted(
         tuple(r)
-        for r in dedup.minhash_lsh_pairs(df, engine="sql", **kw).collect()
+        for r in dedup.minhash_lsh_pairs(df, base=ref_base, **kw).collect()
     )
     assert a == b
 
@@ -1012,19 +1017,16 @@ def test_ngram_jaccard_engines_agree_on_random_text(spark, docs):
     df = spark.createDataFrame(
         [(k, t) for k, t in docs], "doc_id long, text string"
     )
+    grams = sorted(
+        map(tuple, minhash_reference_base(df, num_hashes=0).collect())
+    )
+    got = sorted(map(tuple, dedup.minhash_base(df, num_hashes=0).collect()))
+    assert got == grams
     a = sorted(
         tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            df, engine="arrow", jaccard_threshold=0.1
-        ).collect()
+        for r in dedup.ngram_jaccard_pairs(df, jaccard_threshold=0.1).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            df, engine="sql", jaccard_threshold=0.1
-        ).collect()
-    )
-    assert a == b
+    assert a == ngram_jaccard_bruteforce(dict(grams), 0.1)
 
 
 # salted_join output-invariance, randomized form: the fixed-case units

@@ -11,8 +11,10 @@ Two claims under test:
    vocabulary unchanged — so the merge SEQUENCE must be identical
    with counts ×10 (asserted mechanically: greedy argmax is
    scale-invariant), and train wall must grow far slower than 10×.
-2. APPLY (encoding) is a map-side JVM fold chain: throughput in
-   encoded tokens/s holds across the decade (per-doc work only).
+2. APPLY (encoding, `apply_bpe_merges`' Arrow kernel) is per-doc
+   map-side work: throughput in encoded tokens/s holds across the
+   decade.  The in-order fold-chain reference (`_apply_bpe_fold`) is
+   timed next to it and must match it token for token.
 
 Run: `python tools/bpe_decade.py` (one JSON line to stdout).
 """
@@ -29,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (  # noqa: E402
+    _apply_bpe_fold,
     apply_bpe_merges,
     train_bpe_merges,
 )
@@ -178,9 +181,9 @@ def main():
             reduce(lambda a, b: a.unionByName(b), parts).write.mode(
                 "overwrite"
             ).parquet(corpus_path)
-            # repartition before the CPU-bound stages: the interpreted
-            # higher-order fold chain (apply) and the tokenize+explode
-            # (train's word count) inherit the scan's split count, and
+            # repartition before the CPU-bound stages: the encoders
+            # (apply) and the tokenize+explode (train's word count)
+            # inherit the scan's split count, and
             # a compact corpus arrives as few splits — the same lever
             # tools/mm_decade.py measures for the decode path
             corpus = spark.read.parquet(corpus_path).repartition(32)
@@ -196,11 +199,11 @@ def main():
             merge_tables[label] = merges
             rules = [(m[1], m[2]) for m in merges]
 
-            def run_apply(impl, c=corpus, rules=rules):
+            def run_apply(encode, c=corpus, rules=rules):
                 # token-content checksum (not just counts): the
-                # fold-vs-arrow parity below compares real tokens
+                # kernel-vs-fold parity below compares real tokens
                 row = (
-                    apply_bpe_merges(c, rules, impl=impl)
+                    encode(c, rules)
                     .agg(
                         F.count(F.lit(1)).alias("docs"),
                         F.sum("n_bpe_tokens").alias("toks"),
@@ -215,25 +218,25 @@ def main():
                 return int(row["docs"]), int(row["toks"]), int(row["c"])
 
             apply_wall, (docs_out, toks, chk) = _timed(
-                lambda: run_apply("fold")
+                lambda: run_apply(apply_bpe_merges)
             )
-            arrow_wall, (docs_a, toks_a, chk_a) = _timed(
-                lambda: run_apply("arrow")
+            fold_wall, (docs_f, toks_f, chk_f) = _timed(
+                lambda: run_apply(_apply_bpe_fold)
             )
             assert docs_out == n1 * factor, (label, docs_out)
             # the r15 parity contract, held on the REAL corpus at both
             # scales: identical docs, token totals, and content hash
-            assert (docs_a, toks_a, chk_a) == (docs_out, toks, chk), (
-                label, (docs_a, toks_a, chk_a), (docs_out, toks, chk),
+            assert (docs_f, toks_f, chk_f) == (docs_out, toks, chk), (
+                label, (docs_f, toks_f, chk_f), (docs_out, toks, chk),
             )
             results[label] = {
                 "docs": n1 * factor,
                 "train_wall_sec": train_wall,
                 "apply_wall_sec": apply_wall,
-                "apply_arrow_wall_sec": arrow_wall,
+                "fold_reference_wall_sec": fold_wall,
                 "encoded_tokens": toks,
                 "encoded_tokens_per_sec": round(toks / apply_wall),
-                "arrow_tokens_per_sec": round(toks / arrow_wall),
+                "fold_reference_tokens_per_sec": round(toks / fold_wall),
             }
             print(f"  {label}: {results[label]}", file=sys.stderr)
 
@@ -268,16 +271,12 @@ def main():
         # apply measurement derives a deterministic hex workload —
         # md5(doc_id) split into eight 4-char words (vocabulary up to
         # 16^4).  The merge table comes from the incremental driver
-        # trainer above (tooling); the MEASURED paths are the engine's:
-        # impl="arrow" must hold its throughput at 1k rules across the
-        # decade, and impl="fold" must REFUSE (plan depth linear in
-        # merges — FOLD_MERGE_CEILING).
+        # trainer above (tooling); the MEASURED path is the engine's:
+        # apply_bpe_merges must hold its throughput at 1k rules across
+        # the decade.  The fold reference is not timed here (its plan
+        # depth is linear in the merge count).
         # ------------------------------------------------------------------
         from collections import Counter
-
-        from cloud_native_medical_data_etl_pipeline_spark.operators.bpe import (
-            FOLD_MERGE_CEILING,
-        )
 
         hex_text = F.trim(
             F.regexp_replace(
@@ -295,7 +294,7 @@ def main():
         big_table = _train_merges_fast(dict(vocab), 10000)
         n_rules = len(big_table)
         assert n_rules >= 10000, n_rules
-        # the arrow gate refuses duplicate-producer tables (r15 ADVICE)
+        # the encoder refuses duplicate-producer tables (r15 ADVICE)
         # — this trainer never learns one on this workload (global
         # in-rank-order rewrites keep groupings consistent), asserted
         # so a workload change that breaks the property fails HERE,
@@ -311,15 +310,9 @@ def main():
         assert fast[: len(ref)] == ref, (fast[:5], ref[:5])
         big_rules = [(l, r) for _, l, r, _ in big_table]
 
-        try:
-            apply_bpe_merges(docs, big_rules, impl="fold")
-            raise AssertionError("fold must refuse >FOLD_MERGE_CEILING")
-        except ValueError as e:
-            assert "FOLD_MERGE_CEILING" in str(e)
-
         def run_hex(c, rules):
             row = (
-                apply_bpe_merges(c, rules, impl="arrow")
+                apply_bpe_merges(c, rules)
                 .agg(
                     F.count(F.lit(1)).alias("docs"),
                     F.sum("n_bpe_tokens").alias("toks"),
@@ -393,8 +386,6 @@ def main():
             hk["10x"]["tokens_per_sec"] > 0.5 * hk["1x"]["tokens_per_sec"]
         ), hk
         results["realistic_merges"] = {
-            "fold_ceiling": FOLD_MERGE_CEILING,
-            "fold_refused_at": n_rules,
             "rule_count_sweep_1x": sweep,
             **{f"hex_{k}": v for k, v in hk.items()},
         }
