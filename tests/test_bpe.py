@@ -325,7 +325,7 @@ def test_q144_bpe_encode_oracle_shape(spark):
 
 
 def test_incremental_trainer_matches_reference_fuzz():
-    """tools/bpe_decade._train_merges_fast (the >=1k-rule table
+    """tools/decade._train_merges_fast (the >=1k-rule table
     generator for the realistic-merge-count apply measurement) must
     replay the brute-force full-recount reference merge-for-merge —
     lazy-heap invalidation and incremental pair bookkeeping are easy
@@ -339,7 +339,7 @@ def test_incremental_trainer_matches_reference_fuzz():
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
     )
-    from bpe_decade import _seq_reference, _train_merges_fast
+    from decade import _seq_reference, _train_merges_fast
 
     word = st.text(alphabet="abcd", min_size=1, max_size=8)
 

@@ -1,8 +1,9 @@
-"""The measurement tools under tools/, checked without a Spark session:
-the plan-shape summary of tools/plans.py, the variant resolver of
+"""The measurement tools under tools/.  Without a Spark session: the
+plan-shape summary of tools/plans.py, the variant resolver of
 tools/ab.py, that every tool answers --help without side effects, and
 that every tool that starts Spark hands the repo to its Python workers
-first."""
+first and takes get_spark()'s default master with the UI off.  With
+one: the status-store stage reader of tools/decade.py."""
 
 import ast
 import glob
@@ -132,15 +133,34 @@ def test_ab_resolves_registered_names_and_builder_files(tmp_path):
         ab.resolve(f"{variant}:missing", registry)
 
 
+# the choices a tool's --help must list, one per line
+HELP_LISTS = {
+    "decade.py": (
+        "asof", "bm25", "bpe", "catalog", "cc", "enrich",
+        "ingest", "mm", "pack", "probe", "skew",
+    ),
+}
+
+
+# the per-operator scripts folded into decade.py: each is now the case
+# of that name there, and its --help is decade.py's with the case named
+FOLDED = {f"{case}_decade.py": case for case in HELP_LISTS["decade.py"]}
+
+
 @pytest.mark.parametrize(
     "script",
-    sorted(os.path.basename(p) for p in glob.glob(os.path.join(TOOLS, "*.py"))),
+    sorted(
+        [os.path.basename(p) for p in glob.glob(os.path.join(TOOLS, "*.py"))]
+        + list(FOLDED)
+    ),
 )
 def test_tool_help_exits_cleanly(script, tmp_path):
     """--help prints usage and exits 0 from any working directory,
-    without starting Spark or writing files."""
+    without starting Spark or writing files, and lists the tool's
+    choices."""
+    argv = ["decade.py", FOLDED[script]] if script in FOLDED else [script]
     proc = subprocess.run(
-        [sys.executable, os.path.join(TOOLS, script), "--help"],
+        [sys.executable, os.path.join(TOOLS, argv[0]), *argv[1:], "--help"],
         cwd=tmp_path,
         capture_output=True,
         text=True,
@@ -148,10 +168,13 @@ def test_tool_help_exits_cleanly(script, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert list(tmp_path.iterdir()) == []
+    choices = (FOLDED[script],) if script in FOLDED else HELP_LISTS.get(script, ())
+    for choice in choices:
+        assert f"\n  {choice} " in proc.stdout, choice
 
 
 def _calls(tree):
-    """(enclosing function, called name, line) of every call by name."""
+    """(enclosing function, called name, call node) of every call by name."""
     found = []
 
     def visit(node, scope):
@@ -162,26 +185,53 @@ def _calls(tree):
             if isinstance(child, ast.Call):
                 func = child.func
                 name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
-                found.append((scope, name, child.lineno))
+                found.append((scope, name, child))
             visit(child, scope)
 
     visit(tree, "<module>")
     return found
 
 
+def _trees(tools_dir):
+    for path in sorted(glob.glob(os.path.join(tools_dir, "*.py"))):
+        with open(path) as fh:
+            yield os.path.basename(path), ast.parse(fh.read(), path)
+
+
 def unexported_sessions(tools_dir):
     """``script:line`` of every get_spark call in ``tools_dir/*.py`` that
     no earlier export_repo_to_workers call in the same function precedes."""
     bad = []
-    for path in sorted(glob.glob(os.path.join(tools_dir, "*.py"))):
-        with open(path) as fh:
-            calls = _calls(ast.parse(fh.read(), path))
-        for scope, name, line in calls:
+    for script, tree in _trees(tools_dir):
+        calls = _calls(tree)
+        for scope, name, node in calls:
             if name == "get_spark" and not any(
-                s == scope and n == "export_repo_to_workers" and ln < line
-                for s, n, ln in calls
+                s == scope and n == "export_repo_to_workers" and c.lineno < node.lineno
+                for s, n, c in calls
             ):
-                bad.append(f"{os.path.basename(path)}:{line}")
+                bad.append(f"{script}:{node.lineno}")
+    return bad
+
+
+def fixed_sessions(tools_dir):
+    """``script:line what`` of every place in ``tools_dir/*.py`` that
+    passes ``master=`` to get_spark, names ``spark.ui.enabled`` or
+    imports urllib."""
+    bad = []
+    for script, tree in _trees(tools_dir):
+        for _, name, node in _calls(tree):
+            if name == "get_spark" and any(k.arg == "master" for k in node.keywords):
+                bad.append(f"{script}:{node.lineno} master")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and node.value == "spark.ui.enabled":
+                bad.append(f"{script}:{node.lineno} ui")
+            names = (
+                [a.name for a in node.names] if isinstance(node, ast.Import)
+                else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            if any(n.split(".")[0] == "urllib" for n in names):
+                bad.append(f"{script}:{node.lineno} urllib")
     return bad
 
 
@@ -190,3 +240,28 @@ def test_tools_hand_the_repo_to_python_workers_before_starting_spark():
     tool run from outside the repo must export it first (see
     _decade_common.export_repo_to_workers) or its UDFs cannot unpickle."""
     assert unexported_sessions(TOOLS) == []
+
+
+def test_tools_take_the_default_master_without_the_ui_or_http():
+    """Every tool runs at get_spark()'s default master, so its numbers
+    carry the host's core count, and reads Spark metrics in process:
+    no fixed master, no Spark UI, no HTTP."""
+    assert fixed_sessions(TOOLS) == []
+
+
+def test_decade_stage_reader_counts_a_run_without_the_ui(spark, tmp_path):
+    """tools/decade.py reads stage metrics from the in-process status
+    store through calls that are private[spark] in Scala; this pins
+    them, and their meaning, against a PySpark upgrade."""
+    from pyspark.sql import functions as F
+
+    n = 5000
+    path = str(tmp_path / "rows")
+    spark.range(n).write.parquet(path)
+    df = spark.read.parquet(path).groupBy((F.col("id") % 7).alias("k")).count()
+
+    rows, m = _load("decade").run_once(spark, df.collect)
+    assert spark.sparkContext.uiWebUrl is None
+    assert sum(r["count"] for r in rows) == n
+    assert m["input_records"] == n
+    assert m["shuffle_bytes"] > 0
