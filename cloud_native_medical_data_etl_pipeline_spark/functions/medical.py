@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Severity weights (reference drug_transformer.py:310-321 and
 # pipeline_config.yaml:21-24).
@@ -59,14 +60,14 @@ def severity_score(
     ):
         if c is not None:
             col = F.col(c) if isinstance(c, str) else c
-            score = score + F.coalesce(col.cast("double"), F.lit(0.0)) * w
+            score = score + F.coalesce(col.cast(T.DoubleType()), F.lit(0.0)) * w
     return score
 
 
 def _cut(col: Column, bins: list[tuple[float, float, str]]) -> Column:
     """pandas.cut semantics: left-open/right-closed intervals, null
     outside all bins and on null input (SURVEY.md §7.5.1)."""
-    expr = F.lit(None).cast("string")
+    expr = F.lit(None).cast(T.StringType())
     # Build the when-ladder from the last bin backwards so the first
     # matching interval wins, exactly like an if/elif chain.
     for lo, hi, label in reversed(bins):
@@ -82,14 +83,14 @@ def age_group(age: Column | str = "patient_age") -> Column:
     """Age bucket with pd.cut right-closed semantics: age 18 ->
     'Pediatric', age 0 or >100 -> null (drug_transformer.py:115-120)."""
     col = F.col(age) if isinstance(age, str) else age
-    return _cut(col.cast("double"), AGE_BINS)
+    return _cut(col.cast(T.DoubleType()), AGE_BINS)
 
 
 def study_size_category(enrollment: Column | str = "enrollment_count") -> Column:
     """Study-size bucket: enrollment 50 -> 'Small', 0 -> null
     (drug_transformer.py:164-169)."""
     col = F.col(enrollment) if isinstance(enrollment, str) else enrollment
-    return _cut(col.cast("double"), STUDY_SIZE_BINS)
+    return _cut(col.cast(T.DoubleType()), STUDY_SIZE_BINS)
 
 
 def phase_numeric(phase: Column | str = "phase") -> Column:
@@ -101,7 +102,7 @@ def phase_numeric(phase: Column | str = "phase") -> Column:
     'PHASE 1'. Null/empty/unknown -> 0.0.
     """
     col = F.col(phase) if isinstance(phase, str) else phase
-    p = F.upper(col.cast("string"))
+    p = F.upper(col.cast(T.StringType()))
     return (
         F.when(p.isNull() | (p == ""), F.lit(0.0))
         .when(p.contains("PHASE 4") | p.contains("PHASE IV"), F.lit(4.0))
@@ -151,7 +152,7 @@ def normalize_for_join(col: Column | str) -> Column:
     (reference normalize(), drug_transformer.py:237-243)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.replace(
-        F.lower(_strip_ws(F.coalesce(c.cast("string"), F.lit("")))),
+        F.lower(_strip_ws(F.coalesce(c.cast(T.StringType()), F.lit("")))),
         F.lit(" "),
         F.lit(""),
     )

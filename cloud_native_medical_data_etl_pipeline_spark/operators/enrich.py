@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import medical as M
 
@@ -38,10 +39,10 @@ def fda_summary(fda_t: DataFrame) -> DataFrame:
         F.count("safetyreportid").alias("adverse_event_count"),
         F.avg("severity_score").alias("avg_severity_score"),
         F.coalesce(F.sum("seriousnessdeath"), F.lit(0))
-        .cast("long")
+        .cast(T.LongType())
         .alias("death_count"),
         F.coalesce(F.sum("seriousnesshospitalization"), F.lit(0))
-        .cast("long")
+        .cast(T.LongType())
         .alias("hospitalization_count"),
     )
 
@@ -53,10 +54,10 @@ def ct_summary(ct_t: DataFrame) -> DataFrame:
     return ct_t.groupBy(F.col("conditions_clean").alias("condition")).agg(
         F.count("nct_id").alias("trial_count"),
         F.coalesce(F.sum("enrollment_count"), F.lit(0))
-        .cast("double")
+        .cast(T.DoubleType())
         .alias("total_enrollment"),
-        F.coalesce(F.sum(F.col("is_completed").cast("int")), F.lit(0))
-        .cast("long")
+        F.coalesce(F.sum(F.col("is_completed").cast(T.IntegerType())), F.lit(0))
+        .cast(T.LongType())
         .alias("completed_trials"),
     )
 
@@ -140,11 +141,11 @@ def enrich(fda_t: DataFrame | None, ct_t: DataFrame | None) -> DataFrame:
         "avg_severity_score",
         "death_count",
         "hospitalization_count",
-        F.coalesce(F.col("trial_count"), F.lit(0)).cast("long").alias("trial_count"),
+        F.coalesce(F.col("trial_count"), F.lit(0)).cast(T.LongType()).alias("trial_count"),
         F.coalesce(F.col("total_enrollment"), F.lit(0.0))
-        .cast("double")
+        .cast(T.DoubleType())
         .alias("total_enrollment"),
         F.coalesce(F.col("completed_trials"), F.lit(0))
-        .cast("long")
+        .cast(T.LongType())
         .alias("completed_trials"),
     )

@@ -16,9 +16,10 @@ Decode tiers behind the `fake=` switch:
 
 At scale the pattern is: keep payloads in their own parquet column
 (Parquet stores binary contiguously; column pruning means metadata-only
-queries never read the bytes), repartition by size before decode so
-Arrow batches stay bounded, and run decode as mapInPandas so each
-Python worker sees columnar batches, not rows.
+queries never read the bytes), repartition to the session's slot
+count before decode so Arrow batches stay bounded and every slot
+decodes, and run decode as mapInPandas so each Python worker sees
+columnar batches, not rows.
 """
 
 from __future__ import annotations

@@ -170,7 +170,7 @@ def run_quality_checks(
     for c in ("receivedate", "start_date", "completion_date"):
         if c in cols:
             aggs.append(
-                _cnt(F.col(c).cast("timestamp") > F.current_timestamp()).alias(
+                _cnt(F.col(c).cast(T.TimestampType()) > F.current_timestamp()).alias(
                     f"future_{c}"
                 )
             )
@@ -346,16 +346,16 @@ def pii_report(
     )
     aggs = []
     for name in class_counts:
-        aggs.append(F.sum(f"n_{name}").cast("long").alias(f"n_{name}"))
+        aggs.append(F.sum(f"n_{name}").cast(T.LongType()).alias(f"n_{name}"))
         aggs.append(
-            F.count_if(F.col(f"n_{name}") > 0).cast("long").alias(f"docs_{name}")
+            F.count_if(F.col(f"n_{name}") > 0).cast(T.LongType()).alias(f"docs_{name}")
         )
     aggs.append(
         F.count_if(
             sum((F.col(f"n_{n}") for n in class_counts), F.lit(0)) > 0
         )
-        .cast("long")
+        .cast(T.LongType())
         .alias("docs_any_pii")
     )
-    aggs.append(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    aggs.append(F.count(F.lit(1)).cast(T.LongType()).alias("n_docs"))
     return counted.groupBy(F.col("grp").alias(group_col)).agg(*aggs)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import medical as M
 
@@ -32,7 +33,7 @@ def transform_fda_events(df: DataFrame, processed_ts=None) -> DataFrame:
         "processed_date",
         # `is not None`: a falsy-but-valid fixed stamp (epoch 0) must
         # not silently fall back to nondeterministic current_timestamp
-        F.lit(processed_ts).cast("timestamp")
+        F.lit(processed_ts).cast(T.TimestampType())
         if processed_ts is not None
         else F.current_timestamp(),
     ).withColumn("data_source", F.lit("FDA_OpenFDA"))
@@ -73,7 +74,7 @@ def transform_clinical_trials(df: DataFrame, processed_ts=None) -> DataFrame:
     cols = set(df.columns)
     out = df.withColumn(
         "processed_date",
-        F.lit(processed_ts).cast("timestamp")
+        F.lit(processed_ts).cast(T.TimestampType())
         if processed_ts is not None
         else F.current_timestamp(),
     ).withColumn("data_source", F.lit("ClinicalTrials_gov"))

@@ -127,6 +127,21 @@ def get_spark(
         # current_timestamp() literal. Static conf: it takes effect in
         # the first session of a JVM.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Case mapping on the JVM, not ICU. The ICU path of
+        # upper/lower/initcap first builds a title-case table by
+        # ICU-title-casing all 1,114,112 code points
+        # (CollationAwareUTF8String's static initialiser): ~1 s of
+        # CPU and ~0.7 s of JIT in a bare JVM, paid once per process
+        # inside a task of the first upper stage, so a fresh pod's
+        # cold ETL day paid all of it. Off, and with the day-path
+        # modules casting to type instances (no SQL parser), a cold
+        # `etl_day_large` day fell from 15.5 to 13.9 CPU s on a 4-CPU
+        # VM (BASELINE.md, "A cold day without Spark's one-time ICU
+        # table and SQL parser"). ASCII strings map to the same bytes
+        # on both paths, which share one ASCII fast path; other text
+        # follows the JVM's Unicode tables (README.md, "Session SQL
+        # settings"). A session conf, so it holds under spark-submit.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -41,3 +41,54 @@ def test_other_jvm_environment_options_keep_the_collector():
     expected = "-XX:CICompilerCount=2 -XX:+UseParallelGC"
     assert session.driver_java_options(environ) == expected
     assert session.driver_java_options({}) == expected
+
+
+ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+
+# (input, upper, lower, initcap); initcap's ICU result is given where it
+# differs from the JVM's. ASCII first, then a fixed non-ASCII sample:
+# the sharp s, a Greek word ending in capital sigma (lower case ends
+# in the final sigma), an accented capital, a CJK ideograph, Greek
+# lower case and the dotted capital I.
+CASE_SAMPLES = [
+    ("hello world", "HELLO WORLD", "hello world", "Hello World"),
+    ("o'neil mcdonald-smith", "O'NEIL MCDONALD-SMITH", "o'neil mcdonald-smith",
+     "O'neil Mcdonald-smith"),
+    ("  Phase 2/3\tEARLY_PHASE1 ", "  PHASE 2/3\tEARLY_PHASE1 ",
+     "  phase 2/3\tearly_phase1 ", "  Phase 2/3\tearly_phase1 "),
+    ("123abc x9Y", "123ABC X9Y", "123abc x9y", "123abc X9y"),
+    # the JVM title-cases one code point to one, ICU to a full mapping
+    ("ß", "SS", "ß", {"false": "ß", "true": "Ss"}),
+    ("ΟΔΟΣ", "ΟΔΟΣ", "οδος", "Οδος"),
+    ("É", "É", "é", "É"),
+    ("中", "中", "中", "中"),
+    ("δζ", "ΔΖ", "δζ", "Δζ"),
+    # lower case keeps the dot as U+0307; the JVM title-cases the
+    # lowered pair, ICU maps the letter back to U+0130 whole
+    ("\u0130", "\u0130", "i\u0307", {"false": "I\u0307", "true": "\u0130"}),
+]
+
+
+def test_sessions_map_case_on_the_jvm(spark):
+    # get_spark's session skips ICU case mapping's one-time table
+    assert spark.conf.get(ICU_CASE_MAPPINGS) == "false"
+
+
+def test_icu_and_jvm_case_mappings_agree_on_the_sample(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(s[0],) for s in CASE_SAMPLES], "s string")
+    got = {}
+    try:
+        for value in ("true", "false"):
+            spark.conf.set(ICU_CASE_MAPPINGS, value)
+            rows = df.select("s", F.upper("s"), F.lower("s"), F.initcap("s")).collect()
+            got[value] = {r[0]: tuple(r[1:]) for r in rows}
+    finally:
+        spark.conf.set(ICU_CASE_MAPPINGS, "false")
+    for value in ("true", "false"):
+        expected = {
+            s: (up, low, cap[value] if isinstance(cap, dict) else cap)
+            for s, up, low, cap in CASE_SAMPLES
+        }
+        assert got[value] == expected, value

@@ -1081,9 +1081,11 @@ def mm(spark, root):
     1. A compact parquet media corpus arrives as FEW input splits (tens
        of MB compressed << spark.sql.files.maxPartitionBytes), so the
        decode stage (CPU-bound Python, not IO) inherits almost no
-       parallelism from the scan.  Repartitioning before the decode
-       spreads payloads across all slots: the difference between a
-       single-task straggler and a balanced stage.
+       parallelism from the scan.  Repartitioning to the session's
+       slot count before the decode spreads payloads across all slots:
+       the difference between a single-task straggler and a balanced
+       stage.  Wider than the slots, the extra shuffle costs more than
+       it spreads (at 4 slots a 32-way split lost to the straggler).
     2. Decode throughput (decoded bytes/s) is corpus-size-independent:
        the 10x corpus decodes at the same per-byte rate, so the
        operator scales linearly with executors (no cross-row state).
@@ -1174,6 +1176,7 @@ def mm(spark, root):
         # would pass a divergence that preserves lengths
         return int(row["n"]), int(row["b"]), int(row["c"])
 
+    slots = spark.sparkContext.defaultParallelism
     results = {}
     for label, n in (("1x_2k_png", 2_000), ("10x_20k_png", 20_000)):
         path = f"{root}/{label}"
@@ -1184,7 +1187,7 @@ def mm(spark, root):
         parity = set()
         for mode, df in (
             ("as_written", media),
-            ("size_repartitioned", media.repartition(32)),
+            ("size_repartitioned", media.repartition(slots)),
         ):
             (cnt, dec_bytes, csum), m = timed(spark, lambda d=df: run(d))
             parity.add((cnt, dec_bytes, csum))
@@ -1201,7 +1204,7 @@ def mm(spark, root):
         results[label] = cfg
 
     # the repartition lever: on the 10x corpus (compact parquet -> few
-    # scan splits) the 32-way repartition must beat the as-written
+    # scan splits) the slot-wide repartition must beat the as-written
     # decode, and per-byte throughput must hold within 2x across corpus
     # sizes (linear scaling)
     a = results["1x_2k_png"]["size_repartitioned"]
@@ -1217,7 +1220,7 @@ def mm(spark, root):
     # WAV leg: PCM decode throughput through the same mapInPandas
     # plumbing (samples/s; payloads ~8 KB each)
     wav_corpus(2_000, f"{root}/wav")
-    wav = spark.read.parquet(f"{root}/wav").repartition(32)
+    wav = spark.read.parquet(f"{root}/wav").repartition(slots)
 
     def run_wav():
         row = (

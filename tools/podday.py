@@ -8,11 +8,13 @@ is what one day's batch job pays in a driver pod sized like the
 reference's (2 CPUs, at most 2 GiB): a fresh Python process, pinned
 with ``taskset -c 0,1`` and started with ``SPARK_GRAFT_CPUS=2`` and a
 2 GB driver heap, imports the checkout's package, starts a session
-with ``get_spark`` (``local[2]``, 2 shuffle partitions, every other
-setting the product default) and pushes one raw day through
-``pipeline.backfill``.  The day is perfbench's ``etl_day_large`` day,
-generated once by ``perfbench/gen.py``, so both sides read the same
-bytes.
+with ``get_spark`` (``local[2]``, 2 shuffle partitions through
+``SPARK_SHUFFLE_PARTITIONS``, the warehouse in the run's directory,
+every other setting the product default) and runs the pod's entry
+point on one raw day: ``cli.main(["transform", ...])``, its two
+``take(1)`` probes of the raw partitions included.  The day is
+perfbench's ``etl_day_large`` day, generated once by
+``perfbench/gen.py``, so both sides read the same bytes.
 
 Each pair runs A and B once; the side that runs first alternates from
 pair to pair, so host drift hits both alike.  Per run it prints
@@ -28,6 +30,8 @@ status ``success`` exits the tool with code 1.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import shutil
@@ -45,7 +49,6 @@ sys.path.insert(0, TOOLS)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 import gen  # noqa: E402
-import probe  # noqa: E402
 import procstat  # noqa: E402
 from _decade_common import export_repo_to_workers  # noqa: E402
 from run import WORKLOADS  # noqa: E402
@@ -63,34 +66,29 @@ FIELDS = (
 )
 
 
-def child(checkout: str, raw: str, date: str, out: str) -> None:
+def child(checkout: str, input_base: str, date: str, out: str) -> None:
     """One run: set-up and the cold day in this fresh process."""
     sys.path.insert(0, checkout)
     export_repo_to_workers(checkout)
-    from cloud_native_medical_data_etl_pipeline_spark import schemas
-    from cloud_native_medical_data_etl_pipeline_spark.plans import pipeline
+    from cloud_native_medical_data_etl_pipeline_spark import cli
     from cloud_native_medical_data_etl_pipeline_spark.session import get_spark
-    from cloud_native_medical_data_etl_pipeline_spark.sources import lake
 
-    spark = get_spark(app_name="podday", shuffle_partitions=2, extra_conf=probe.session_conf(out))
+    # the session `cli transform` asks for, started here so that set-up
+    # ends before the day; the CLI's own get_spark call gets it back
+    spark = get_spark(app_name=f"transform-{date}")
     spark.sparkContext.setLogLevel("ERROR")
     t1 = time.perf_counter()
     cpu1 = procstat.tree_cpu_s(os.getpid())
-
-    def load(spark, date):
-        return (
-            lake.read_partition(spark, f"{raw}/fda", date, schema=schemas.FDA_EVENTS, fmt="json"),
-            lake.read_partition(
-                spark, f"{raw}/clinicaltrials", date, schema=schemas.CLINICAL_TRIALS, fmt="json"
-            ),
-        )
-
-    (result,) = pipeline.backfill(spark, [date], load, os.path.join(out, "lake"))
+    argv = ["transform", "--date", date, "--input-base", input_base]
+    argv += ["--output-base", os.path.join(out, "lake")]
+    with contextlib.redirect_stdout(io.StringIO()) as printed:
+        cli.main(argv)
+    result = json.loads(printed.getvalue().strip().splitlines()[-1])
     t2 = time.perf_counter()
     cpu2 = procstat.tree_cpu_s(os.getpid())
     jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     sample = {
-        "status": result.status,
+        "status": result["status"],
         "setup_s": t1 - T_START,
         "cold_s": t2 - t1,
         "total_s": t2 - T_START,
@@ -103,7 +101,7 @@ def child(checkout: str, raw: str, date: str, out: str) -> None:
     spark.stop()
 
 
-def run_side(checkout: str, raw: str, date: str, work: str) -> dict:
+def run_side(checkout: str, input_base: str, date: str, work: str) -> dict:
     """One fresh pinned process for ``checkout``; its sample."""
     out = tempfile.mkdtemp(prefix="run-", dir=work)
     env = dict(os.environ)
@@ -111,13 +109,15 @@ def run_side(checkout: str, raw: str, date: str, work: str) -> dict:
     os.makedirs(tmp)
     env.update(
         SPARK_GRAFT_CPUS="2",
+        SPARK_SHUFFLE_PARTITIONS="2",
         SPARK_DRIVER_MEMORY="2g",
+        SPARK_WAREHOUSE_DIR=os.path.join(out, "warehouse"),
         TMPDIR=tmp,
         SPARK_LOCAL_DIRS=tmp,
         PYSPARK_PYTHON=sys.executable,
     )
     cmd = ["taskset", "-c", CPUS, sys.executable, os.path.abspath(__file__)]
-    cmd += ["--child", checkout, raw, date, out]
+    cmd += ["--child", checkout, input_base, date, out]
     host0 = procstat.host_cpu_ticks()
     try:
         proc = subprocess.run(cmd, env=env, cwd=out, capture_output=True, text=True, timeout=600)
@@ -163,14 +163,13 @@ def main() -> int:
     samples: dict[str, list[dict]] = {"A": [], "B": []}
     try:
         date = gen.write_day(work, SEED, 0, WORKLOADS[WORKLOAD].size)
-        raw = os.path.join(work, "raw")
         print(f"# {WORKLOAD} seed {SEED}, day {date}; taskset -c {CPUS}, local[2], 2g driver")
         for name, path in sides.items():
             print(f"# {name} = {path}")
         for pair in range(args.pairs):
             order = ("A", "B") if pair % 2 == 0 else ("B", "A")
             for name in order:
-                sample = run_side(sides[name], raw, date, work)
+                sample = run_side(sides[name], work, date, work)
                 samples[name].append(sample)
                 print(_line(f"pair {pair + 1} {name}", sample), flush=True)
     finally:
