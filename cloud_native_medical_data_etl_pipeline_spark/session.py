@@ -100,6 +100,19 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Let AQE size cached frames too. Off (Spark's default), a
+        # persist() keeps the width of its last shuffle,
+        # spark.sql.shuffle.partitions, whatever its bytes: every stage
+        # that reads it runs that many tasks, and an ETL day's three
+        # caches (both transforms, the enriched frame) wrote that many
+        # files into each day partition. On, a warm `etl_day_large`
+        # day ran 23 tasks instead of 68, wrote one file per partition
+        # and gained 20 % rows per CPU second on a 4-CPU VM
+        # (BASELINE.md, "AQE sizes a day's cached frames"). A consumer
+        # that relied on a cache's hash partitioning may now need one
+        # more exchange. REPARTITION_BY_NUM caches (dedup's
+        # rebalance_for_cpu) are never coalesced.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for any pandas_udf / toPandas interchange (vector ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep non-ANSI coercion semantics: cast/to_date yield null on

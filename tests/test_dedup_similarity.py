@@ -879,6 +879,28 @@ def test_rebalance_stats_probe_failure_fails_open(spark, monkeypatch):
     assert out.count() == 100
 
 
+def test_rebalance_cache_keeps_every_slot_once_built(spark):
+    """The cache barrier rebalance_for_cpu returns is a round-robin
+    repartition(n), which AQE may not coalesce even though the session
+    lets it size cached frames
+    (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning): the
+    built cache still spreads the kernels over every slot."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators import dedup as D
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("one slot: rebalance_for_cpu has nothing to spread")
+    df = spark.range(100_000).coalesce(1)
+    assert D._plan_size_bytes(df) > D._REBALANCE_MIN_STATS_BYTES
+    out = D.rebalance_for_cpu(df)
+    try:
+        assert out.is_cached
+        assert out.count() == 100_000  # builds the cache
+        assert out.rdd.getNumPartitions() == target
+    finally:
+        D.release(out)
+
+
 def test_resize_images_null_payload_passthrough(spark):
     """NULL payloads pass through as NULL resized payloads on BOTH the
     fake and the real decode path (matching decode_features): a missing

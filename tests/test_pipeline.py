@@ -7,6 +7,7 @@ warm day reuses the classes generated for the day before it.
 """
 
 import datetime as dt
+from pathlib import Path
 
 import pytest
 from pyspark.sql import DataFrame
@@ -147,3 +148,23 @@ def test_warm_day_reuses_generated_classes(spark, tmp_path):
     assert pipeline.run(spark, "2024-01-16", fda, ct, out).status == "success"
     compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
     assert compiled <= 2, f"warm day compiled {compiled} classes"
+
+
+def test_a_small_day_writes_one_file_per_partition(spark, tmp_path):
+    """AQE sizes the day's cached frames by bytes (session.get_spark sets
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning), so a
+    small day's processed and summary partitions each hold one file,
+    like the reference's one pandas file per partition, instead of one
+    per shuffle partition."""
+    from cloud_native_medical_data_etl_pipeline_spark.sources import lake
+
+    out = tmp_path / "lake"
+    fda, ct = _inputs(spark, seed=6)
+    r = pipeline.run(
+        spark, "2024-01-15", fda, ct, str(out), processed_ts=PROCESSED_TS
+    )
+    assert r.status == "success"
+    processed = lake.partition_path(str(out / "processed"), r.date)
+    summary = lake.partition_path(str(out / "summary"), r.date)
+    assert len(list(Path(processed).glob("part-*.parquet"))) == 1
+    assert len(list(Path(summary).glob("part-*.csv"))) == 1

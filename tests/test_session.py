@@ -44,6 +44,7 @@ def test_other_jvm_environment_options_keep_the_collector():
 
 
 ICU_CASE_MAPPINGS = "spark.sql.icu.caseMappings.enabled"
+CACHED_PLAN_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 # (input, upper, lower, initcap); initcap's ICU result is given where it
 # differs from the JVM's. ASCII first, then a fixed non-ASCII sample:
@@ -72,6 +73,12 @@ CASE_SAMPLES = [
 def test_sessions_map_case_on_the_jvm(spark):
     # get_spark's session skips ICU case mapping's one-time table
     assert spark.conf.get(ICU_CASE_MAPPINGS) == "false"
+
+
+def test_sessions_let_aqe_size_cached_frames(spark):
+    # get_spark's session lets AQE coalesce a persisted frame's last
+    # shuffle (a tiny day writes one file per partition)
+    assert spark.conf.get(CACHED_PLAN_PARTITIONING) == "true"
 
 
 def test_icu_and_jvm_case_mappings_agree_on_the_sample(spark):
