@@ -730,20 +730,22 @@ LIMIT 10
 # per-band hyperplane bucket, never an all-pairs scan or a driver
 # gather; a pair is a candidate if ANY of the 12 independent 4-plane
 # bands agrees, then every candidate is verified with the exact
-# cosine).  Measured recall vs the exact all-pairs path: 51/59 true
+# cosine).  Measured recall vs the exact all-pairs answer: 51/59 true
 # pairs (86%) at sf0.01 and 838/920 (91%) at sf0.1 — up from 11/59
 # (19%) with the old single band.  The oracle mirrors the identical
 # banding with the SAME float64 plane literals, so it verifies
 # Spark<->SQL CONSISTENCY of the approximation hash-exactly; recall
-# vs exact is measured separately (tests/test_dedup_similarity.py).
+# vs a NumPy brute force is measured separately
+# (tests/test_dedup_similarity.py::test_banded_lsh_recall_vs_exact).
 #
 # SCALE ROUTING (r4): threshold 0.4 is intrinsically near-quadratic
 # for ANY LSH family (rho~0.67) — at 100 TB, low-threshold similarity
 # search belongs on IVF (similarity.ivf_topk / q23); this banded
-# instance exercises the fat-bucket GEMM path, whose per-task memory
-# is now BOUNDED by the operator's chunk_cap hot-bucket split
-# (default 32768 vectors/task), so a skewed bucket can no longer
-# exceed executor memory.  The sub-quadratic banded regime (r=12,
+# instance's r=4 bands run the fat-bucket GEMM verify kernel (the
+# operator picks it from the planes per band), whose per-task memory
+# is BOUNDED by the operator's hot-bucket split (dedup.CHUNK_CAP =
+# 32768 vectors/task), so a skewed bucket can no longer exceed
+# executor memory.  The sub-quadratic banded regime (r=12,
 # threshold 0.9) is demonstrated hash-exactly by q20b below.
 # ---------------------------------------------------------------------------
 _COS_THRESH = 0.4
@@ -863,17 +865,16 @@ def q20b_embedding_near_dups_hi(spark, sf_dir):
             F.array(F.col("v")[0] + F.lit(0.2)), F.slice("v", 2, _EMB_DIM)
         ).alias("v"),
     )
-    # verify="pairs": at r=12 the band buckets are mostly singletons,
-    # so candidate volume is already sub-quadratic and per-pair JVM
-    # verification beats paying Arrow per-group overhead on thousands
-    # of one-vector groups (see _banded_embedding_near_dups docstring)
+    # r=12 >= dedup.PAIR_VERIFY_MIN_PLANES: the band buckets are mostly
+    # singletons, so the operator verifies per pair in the JVM instead
+    # of paying Arrow per-group overhead on thousands of one-vector
+    # groups (see _banded_embedding_near_dups docstring)
     return D.embedding_near_dups(
         base.unionByName(pert),
         vec_col="v",
         key_col="vec_id",
         threshold=_COS_HI,
         plane_bands=_HP_BANDS_HI,
-        verify="pairs",
     )
 
 
@@ -2511,7 +2512,7 @@ def q60_contamination(spark, sf_dir):
     left-semi join — operators/dedup.py:ngram_contamination."""
     docs = _t(spark, sf_dir, "documents")
     probe = docs.where(F.col("doc_id") % 100 == 0)
-    return D.ngram_contamination(docs, probe, ngram_n=8, hash_fn="md5")
+    return D.ngram_contamination(docs, probe, ngram_n=8)
 
 
 _Q60_N = 8
@@ -4471,9 +4472,7 @@ _SSM_N = 8
 
 def q98_source_similarity(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return D.source_similarity_matrix(
-        docs, group_col="source", ngram_n=_SSM_N, hash_fn="md5"
-    )
+    return D.source_similarity_matrix(docs, group_col="source", ngram_n=_SSM_N)
 
 
 Q98_SQL = f"""
@@ -5593,7 +5592,7 @@ def q120_ngram_novelty(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     probe = docs.where(F.col("doc_id") % 100 == 0)
     corpus = docs.where(F.col("doc_id") % 100 != 0)
-    return D.ngram_novelty(corpus, probe, ngram_n=_NV_N, hash_fn="md5")
+    return D.ngram_novelty(corpus, probe, ngram_n=_NV_N)
 
 
 Q120_SQL = f"""

@@ -759,21 +759,26 @@ def ngram_jaccard_pairs(
     return _with_cached_deps(out, grams, exploded)
 
 
+# Hot-bucket bound of the banded group-verify kernel: a band bucket
+# holding more vectors than this is verified in chunk-pair groups, so
+# no applyInPandas group holds more than ~2 * CHUNK_CAP vectors.
+CHUNK_CAP = 32768
+# Planes per band from which banded verification runs as a JVM
+# per-pair join instead of one GEMM per bucket (crossover r ~ 10).
+PAIR_VERIFY_MIN_PLANES = 10
+
+
 def _banded_embedding_near_dups(
     df: DataFrame,
     vec_col: str,
     key_col: str,
     threshold: float,
     plane_bands: list[list[list[float]]],
-    chunk_cap: int | None = 32768,
-    verify: str = "group",
 ) -> DataFrame:
     """OR-amplified banded sign-LSH candidate generation: each of the B
     independent plane sets buckets every vector ("band#code"), and
-    verification runs GROUP-LOCALLY inside each band bucket (one GEMM
-    per bucket emits only the pairs that clear the threshold) — there
-    is no pair self-join and no pair-level dropDuplicates before
-    verification; the cross-band dedup runs on the tiny surviving set.
+    every candidate that shares a band bucket is verified with the
+    exact cosine; the cross-band dedup runs on the surviving set.
 
     Scale shape: each vector ships once per band as a (key, vector,
     bucket) row — never once per candidate pair — and in-bucket work is
@@ -783,49 +788,46 @@ def _banded_embedding_near_dups(
     ANY LSH family (rho ~ 0.67 at cosine 0.4) and IVF (similarity.py)
     is the better tool there.
 
-    ``chunk_cap`` bounds PER-TASK memory on hot buckets: a bucket with
-    occupancy b > chunk_cap is hash-split into K = ceil(b/chunk_cap)
-    chunks and verified as K*(K+1)/2 chunk-pair groups, each holding at
-    most ~2*chunk_cap vectors — same emitted pairs exactly (every
-    (a, b) pair lands in precisely the group of its own chunk pair),
-    ~2x the flops on split buckets only, and no single applyInPandas
-    group can exceed ~2*chunk_cap*dim*8 bytes however skewed the
-    bucket. None disables splitting (single group per bucket).
+    The verify kernel follows from r = len(plane_bands[0]); both emit
+    the SAME pairs:
+      * r < PAIR_VERIFY_MIN_PLANES — per-bucket GEMM via applyInPandas.
+        Buckets are FAT: one matrix multiply replaces ~b^2/2 per-pair
+        dots and vectors never ship per candidate (q20, r=4: 5.3 s ->
+        1.4 s at sf0.1 against the pair-join form).
+      * r >= PAIR_VERIFY_MIN_PLANES — narrow (key, bucket) self-join ->
+        distinct candidate pairs -> JVM zip_with dot per pair. Buckets
+        are mostly singletons, so the group kernel would pay per-group
+        Arrow/pandas overhead on groups that cannot emit a pair, while
+        candidate volume ~B*N^2/2^r is already sub-quadratic (q20b,
+        r=12: 17.4 s -> 4.0 s at sf0.01 against the group kernel).
+    The crossover recorded between the two is r ~ 10.
 
-    ``verify`` picks the verification physical shape — both emit the
-    SAME pairs:
-      * "group" (default): per-bucket GEMM via applyInPandas. Wins when
-        buckets are FAT (small r): one matrix multiply replaces ~b^2/2
-        per-pair dots and vectors never ship per-candidate.
-      * "pairs": narrow (key, bucket) self-join -> distinct candidate
-        pairs -> JVM zip_with dot per pair. Wins when buckets are TINY
-        (r >= ~10): with mostly-singleton buckets the group path pays
-        per-group Arrow/pandas overhead for groups that cannot emit a
-        pair, while candidate volume ~B*N^2/2^r is already sub-
-        quadratic, so per-pair verification is cheap and stays fully
-        JVM-side. NOTE: ``chunk_cap`` does not apply here — the pairs
-        path has no grouped-materialization step to bound (its memory
-        shape is ordinary join spill), so the cap is a group-path
-        knob only.
+    ``CHUNK_CAP`` bounds PER-TASK memory of the group kernel on hot
+    buckets: a bucket with occupancy b > CHUNK_CAP is hash-split into
+    K = ceil(b/CHUNK_CAP) chunks and verified as K*(K+1)/2 chunk-pair
+    groups, each holding at most ~2*CHUNK_CAP vectors — same emitted
+    pairs exactly (every (a, b) pair lands in precisely the group of
+    its own chunk pair), ~2x the flops on split buckets only, and no
+    single applyInPandas group can exceed ~2*CHUNK_CAP*dim*8 bytes
+    however skewed the bucket. The pair kernel has no grouped
+    materialization to bound (its memory shape is ordinary join
+    spill), so the cap does not apply there.
     """
     import numpy as np
     import pandas as pd
 
-    if verify not in ("group", "pairs"):
-        raise ValueError(
-            f"verify must be 'group' or 'pairs', got {verify!r}"
-        )
-
-    # verify="group" ships the STORED vector type (float32 for the
+    n_bands, r_planes = len(plane_bands), len(plane_bands[0])
+    pair_verify = r_planes >= PAIR_VERIFY_MIN_PLANES
+    # the group kernel ships the STORED vector type (float32 for the
     # embeddings corpus): every consumer of `v` on that path is a
     # NumPy kernel that widens to float64 itself (np.float64(float32)
     # is exact, the same doubles the JVM cast produced), so the
     # interpreted per-element cast bought nothing and doubled the
     # bytes of the banded explode's shuffle — the operator's dominant
-    # byte mover (r17, guide §2.3 "narrower types"). verify="pairs"
+    # byte mover (r17, guide §2.3 "narrower types"). The pair kernel
     # keeps the JVM-side double cast: its zip_with dot runs in the
     # JVM, where float accumulation would diverge from the oracle.
-    if verify == "pairs":
+    if pair_verify:
         vec_in = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     else:
         vec_in = F.col(vec_col)
@@ -842,9 +844,8 @@ def _banded_embedding_near_dups(
     # Sign decisions agree with the oracle's list_dot_product up to
     # summation-order ulps; a Gaussian plane dot sits ~|sqrt(dim)| from
     # zero, so a flipped sign needs |dot| within an ulp of 0 (~1e-13
-    # odds per dot) — the same fp-consistency budget the brute-force
-    # BLAS path has carried since r1.
-    n_bands, r_planes = len(plane_bands), len(plane_bands[0])
+    # odds per dot) — the same fp-consistency budget the group
+    # kernel's verify GEMM carries.
     plane_mat = np.array(
         [p for band in plane_bands for p in band], dtype=np.float64
     )  # (B*r, dim)
@@ -863,7 +864,7 @@ def _banded_embedding_near_dups(
     _buckets_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
     _buckets = F.pandas_udf(_buckets_fn, "array<string>")
 
-    if verify == "pairs":
+    if pair_verify:
         from ..functions import vectors as V
 
         # base feeds the (narrow) band explode AND the two vector-side
@@ -913,27 +914,25 @@ def _banded_embedding_near_dups(
     banded = base.select("k", "v", F.explode(_buckets("v")).alias("bucket"))
 
     cached: list[DataFrame] = []
-    if chunk_cap is not None and df.count() <= chunk_cap:
-        # A bucket can never hold more rows than the corpus: when the
-        # WHOLE input fits under the cap, the memory bound holds
-        # trivially and the split machinery (cache + occupancy pass)
-        # would be pure overhead. The count is one cheap column-less
-        # scan job, paid only when chunk_cap is armed; at 100 TB the
-        # corpus exceeds any sane cap and this gate falls through.
-        chunk_cap = None
-    if chunk_cap is not None:
-        # Hot-bucket split: persist the exploded (key, vector, bucket)
-        # frame ONCE (MEMORY_AND_DISK — its byte volume is the same
-        # N*B vector rows the verify groupBy is about to shuffle, so
-        # the spillable cache costs one extra shuffle-sized write, not
-        # a new asymptotic term; recomputing instead would run the
-        # bucket GEMM stage twice, measured +0.9 s at sf0.1), count
-        # band-bucket occupancy from it, and check the max. The max is
-        # ONE scalar (bounded driver action, same class as the IVF
-        # centroid collect): when no bucket exceeds the cap — every
-        # non-adversarial corpus — the split machinery short-circuits
-        # to literal group columns with NO join and NO explode, so the
-        # unskewed path pays only the cache materialization.
+    max_occ = None
+    # A bucket can never hold more rows than the corpus: when the WHOLE
+    # input fits under the cap, the memory bound holds trivially and
+    # the split machinery (cache + occupancy pass) would be pure
+    # overhead. The count is one cheap column-less scan job; at 100 TB
+    # the corpus exceeds the cap and the occupancy pass runs.
+    if df.count() > CHUNK_CAP:
+        # Persist the exploded (key, vector, bucket) frame ONCE
+        # (MEMORY_AND_DISK — its byte volume is the same N*B vector
+        # rows the verify groupBy is about to shuffle, so the spillable
+        # cache costs one extra shuffle-sized write, not a new
+        # asymptotic term; recomputing instead would run the bucket
+        # GEMM stage twice, measured +0.9 s at sf0.1), count band-bucket
+        # occupancy from it, and check the max. The max is ONE scalar
+        # (bounded driver action, same class as the IVF centroid
+        # collect): when no bucket exceeds the cap — every
+        # non-adversarial corpus — the split short-circuits to literal
+        # group columns with NO join and NO explode, so the unskewed
+        # path pays only the cache materialization.
         from pyspark import StorageLevel
 
         banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
@@ -944,50 +943,39 @@ def _banded_embedding_near_dups(
             .agg(F.count(F.lit(1)).alias("__bn"))
         )
         max_occ = sizes.agg(F.max("__bn")).first()[0]
-        if max_occ is not None and max_occ > chunk_cap:
-            # Broadcast the tiny size table back (#buckets <= B * 2^r
-            # rows) and explode each hot bucket's rows to its
-            # chunk-pair groups. K = 1 for every bucket under the cap,
-            # so only skewed buckets replicate.
-            k_col = F.ceil(F.col("__bn") / F.lit(chunk_cap)).cast("int")
-            grouped = (
-                banded.join(F.broadcast(sizes), "bucket")
-                .withColumn(
-                    "__ci", F.pmod(F.xxhash64("k"), k_col).cast("int")
-                )
-                .select(
-                    "k",
-                    "v",
-                    "bucket",
-                    "__ci",
-                    F.explode(
-                        F.transform(
-                            F.sequence(F.lit(0), k_col - 1),
-                            lambda j: F.struct(
-                                F.least(F.col("__ci"), j).alias("i"),
-                                F.greatest(F.col("__ci"), j).alias("j"),
-                            ),
-                        )
-                    ).alias("__g"),
-                )
-                .select(
-                    "k",
-                    "v",
-                    "bucket",
-                    "__ci",
-                    F.col("__g.i").alias("__gi"),
-                    F.col("__g.j").alias("__gj"),
-                )
-            )
-        else:
-            grouped = banded.select(
+    if max_occ is not None and max_occ > CHUNK_CAP:
+        # Hot-bucket split: broadcast the tiny size table back
+        # (#buckets <= B * 2^r rows) and explode each hot bucket's rows
+        # to its chunk-pair groups. K = 1 for every bucket under the
+        # cap, so only skewed buckets replicate.
+        k_col = F.ceil(F.col("__bn") / F.lit(CHUNK_CAP)).cast("int")
+        grouped = (
+            banded.join(F.broadcast(sizes), "bucket")
+            .withColumn("__ci", F.pmod(F.xxhash64("k"), k_col).cast("int"))
+            .select(
                 "k",
                 "v",
                 "bucket",
-                F.lit(0).alias("__ci"),
-                F.lit(0).alias("__gi"),
-                F.lit(0).alias("__gj"),
+                "__ci",
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(0), k_col - 1),
+                        lambda j: F.struct(
+                            F.least(F.col("__ci"), j).alias("i"),
+                            F.greatest(F.col("__ci"), j).alias("j"),
+                        ),
+                    )
+                ).alias("__g"),
             )
+            .select(
+                "k",
+                "v",
+                "bucket",
+                "__ci",
+                F.col("__g.i").alias("__gi"),
+                F.col("__g.j").alias("__gj"),
+            )
+        )
     else:
         grouped = banded.select(
             "k",
@@ -1006,11 +994,10 @@ def _banded_embedding_near_dups(
     # the cross-band dedup runs on the tiny surviving pair set. A pair
     # is scored only in the group matching its own (sorted) chunk pair,
     # so split buckets emit each pair exactly once. np.round(...,6)
-    # absorbs GEMM-vs-sequential summation ulps (the brute-force path's
-    # oracle-match precedent since r1).
-    # key handling adapts to the frame's key type (the block_col and
-    # verify='pairs' paths already accept any orderable key; hardcoded
-    # int64 here crashed string-keyed corpora inside the worker)
+    # absorbs GEMM-vs-sequential summation ulps.
+    # key handling adapts to the frame's key type (the block_col path
+    # and the pair kernel accept any orderable key; hardcoded int64
+    # here crashed string-keyed corpora inside the worker)
     key_sql = banded.schema["k"].dataType.simpleString()
     key_integral = key_sql in ("bigint", "int", "smallint", "tinyint")
     key_np = "int64" if key_integral else "object"
@@ -1076,160 +1063,74 @@ def embedding_near_dups(
     key_col: str = "vec_id",
     threshold: float = 0.95,
     block_col: str | None = None,
-    planes: list[list[float]] | None = None,
     plane_bands: list[list[list[float]]] | None = None,
-    allow_driver_gather: bool = False,
-    max_gather_rows: int = 2_000_000,
-    chunk_cap: int | None = 32768,
-    verify: str = "group",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (key_a, key_b, cosine)
     with cosine >= threshold.
 
-    The DEFAULT scale path is blocked candidate generation: pass either
-    ``block_col`` (a precomputed bucket column), ``planes`` (ONE set of
-    sign-LSH hyperplanes, see similarity.random_hyperplane_bucket), or
-    ``plane_bands`` (SEVERAL independent plane sets — OR-amplified
-    banded LSH: a pair is a candidate if it shares the bucket of ANY
-    band, recall 1-(1-p^r)^B for per-plane agreement p, r planes per
-    band, B bands). Candidate pairs come from an equi-join on the
-    bucket — never all-pairs, never a driver gather — and every
-    candidate is verified with the exact cosine, so blocking affects
-    RECALL only, never precision. The exact all-pairs scan
-    (broadcast-matrix BLAS) is gated behind ``allow_driver_gather=True``
-    plus a row-count guard: it collects every vector to the driver,
-    which is a deliberate "index fits in memory" baseline, not a
-    100 TB plan.
+    Candidates come from blocking, so pass either ``block_col`` (a
+    precomputed bucket column) or ``plane_bands`` (independent sets of
+    sign-LSH hyperplanes — OR-amplified banded LSH: a pair is a
+    candidate if it shares the bucket of ANY band, recall
+    1-(1-p^r)^B for per-plane agreement p, r planes per band, B bands;
+    one plane set is ``plane_bands=[planes]``). Candidate pairs come
+    from an equi-join on the bucket — never all-pairs, never a driver
+    gather — and every candidate is verified with the exact cosine, so
+    blocking affects RECALL only, never precision. Exact search over a
+    whole table is similarity.cosine_topk (per query) or IVF
+    (similarity.build_ivf_index).
     """
     from ..functions import vectors as V
 
     if plane_bands is not None:
         return _banded_embedding_near_dups(
-            df,
-            vec_col,
-            key_col,
-            threshold,
-            plane_bands,
-            chunk_cap=chunk_cap,
-            verify=verify,
+            df, vec_col, key_col, threshold, plane_bands
+        )
+    if not block_col:
+        raise ValueError(
+            "embedding_near_dups needs block_col or plane_bands: it only "
+            "verifies blocked candidates, never all pairs"
         )
 
-    if planes is not None and block_col is None:
-        from .similarity import random_hyperplane_bucket
+    # Candidate sets are small post-blocking: per-ROW prep (cast to
+    # double[] once, precompute the L2 norm once), then ONE
+    # zip_with+aggregate dot per pair — fp-identical to V.cosine
+    # (same doubles, same sequential accumulation), JVM-side.
+    # The prep frame is computed ONCE and persisted; both join
+    # sides are renamed projections of the SAME cache — two
+    # unpersisted projections would run the cast/norm twice over the
+    # corpus.  Caller releases (the caller-unpersists contract).
+    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    prep = df.select(
+        F.col(key_col).alias("__key"),
+        vd.alias("__v"),
+        V.norm(vd).alias("__n"),
+        F.col(block_col),
+    ).persist()
 
-        df = df.withColumn("__hp_bucket", random_hyperplane_bucket(vec_col, planes))
-        block_col = "__hp_bucket"
-
-    if block_col:
-        # Candidate sets are small post-blocking: per-ROW prep (cast to
-        # double[] once, precompute the L2 norm once), then ONE
-        # zip_with+aggregate dot per pair — fp-identical to V.cosine
-        # (same doubles, same sequential accumulation), JVM-side.
-        # The prep frame is computed ONCE and persisted; both join
-        # sides are renamed projections of the SAME cache — two
-        # unpersisted projections would run the cast/norm (and, via
-        # planes=, the whole bucket expression battery) twice over the
-        # corpus.  Caller releases (the caller-unpersists contract).
-        vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        prep = df.select(
-            F.col(key_col).alias("__key"),
-            vd.alias("__v"),
-            V.norm(vd).alias("__n"),
+    def _side(suffix: str) -> DataFrame:
+        return prep.select(
+            F.col("__key").alias(f"key_{suffix}"),
+            F.col("__v").alias(f"v_{suffix}"),
+            F.col("__n").alias(f"n_{suffix}"),
             F.col(block_col),
-        ).persist()
-
-        def _side(suffix: str) -> DataFrame:
-            return prep.select(
-                F.col("__key").alias(f"key_{suffix}"),
-                F.col("__v").alias(f"v_{suffix}"),
-                F.col("__n").alias(f"n_{suffix}"),
-                F.col(block_col),
-            )
-
-        joined = _side("a").join(_side("b"), block_col)
-        dot = F.aggregate(
-            F.zip_with("v_a", "v_b", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
         )
-        out = (
-            joined.where(F.col("key_a") < F.col("key_b"))
-            .withColumn(
-                "cosine", F.round(dot / (F.col("n_a") * F.col("n_b")), 6)
-            )
-            .where(F.col("cosine") >= threshold)
-            .select("key_a", "key_b", "cosine")
-        )
-        return _with_cached_deps(out, prep)
 
-    # All-pairs scan: interpreted HOF evaluation over |df|^2 pairs is
-    # the one hot loop built-in expressions genuinely can't carry (no
-    # codegen for higher-order functions), so this is the sanctioned
-    # Pandas-UDF case: broadcast the index side as a float64 matrix,
-    # stream the probe side through mapInPandas, and let BLAS do
-    # A @ B.T in one fused pass per Arrow batch. Same formula as the
-    # HOF path (dot / (|a||b|), round 6dp, >= threshold); BLAS
-    # summation order differs only in final ulps, absorbed by the 6dp
-    # rounding. At scale the broadcast side is the "index fits in
-    # executor memory" brute-force baseline — beyond that, IVF
-    # (similarity.build_ivf_index) is the path.
-    import numpy as np
-    import pandas as pd
-
-    if not allow_driver_gather:
-        raise ValueError(
-            "embedding_near_dups without block_col/planes is an exact "
-            "all-pairs scan that gathers every vector to the driver. "
-            "Pass planes= (sign-LSH blocking) for the distributed path, "
-            "or opt in explicitly with allow_driver_gather=True."
-        )
-    spark = df.sparkSession
-    n_rows = df.count()
-    if n_rows > max_gather_rows:
-        raise ValueError(
-            f"brute-force gather refused: {n_rows} rows > "
-            f"max_gather_rows={max_gather_rows}; use planes= blocking "
-            "or similarity.build_ivf_index instead"
-        )
-    key_sql = df.schema[key_col].dataType.simpleString()
-    key_np = (
-        "int64"
-        if key_sql in ("bigint", "int", "smallint", "tinyint")
-        else "object"
+    joined = _side("a").join(_side("b"), block_col)
+    dot = F.aggregate(
+        F.zip_with("v_a", "v_b", lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
-    gathered = df.select(key_col, vec_col).toPandas()  # Arrow path
-    keys = gathered[key_col].to_numpy(dtype=key_np)
-    mat = np.array(list(gathered[vec_col]), dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((keys, mat, norms))
-
-    def gen(batches):
-        b_keys, b_mat, b_norms = bc.value
-        for pdf in batches:
-            a_keys = pdf[key_col].to_numpy(dtype=key_np)
-            a_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            sims = np.round(
-                (a_mat @ b_mat.T) / np.outer(a_norms, b_norms), 6
-            )
-            ia, ib = np.nonzero(
-                (sims >= threshold) & (a_keys[:, None] < b_keys[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "key_a": a_keys[ia],
-                    "key_b": b_keys[ib],
-                    "cosine": sims[ia, ib],
-                }
-            )
-
-    # persist=False: a cache barrier before a single-consumer
-    # mapInPandas is wasted work, and the persisted frame could never
-    # be released (the returned frame records no deps)
-    probe = rebalance_for_cpu(df.select(key_col, vec_col), persist=False)
-    return probe.mapInPandas(
-        gen, f"key_a {key_sql}, key_b {key_sql}, cosine double"
+    out = (
+        joined.where(F.col("key_a") < F.col("key_b"))
+        .withColumn(
+            "cosine", F.round(dot / (F.col("n_a") * F.col("n_b")), 6)
+        )
+        .where(F.col("cosine") >= threshold)
+        .select("key_a", "key_b", "cosine")
     )
+    return _with_cached_deps(out, prep)
 
 
 def winnow_fingerprints(
@@ -1253,10 +1154,15 @@ def winnow_fingerprints(
     Docs with fewer grams than ``window`` contribute min-of-all; docs
     with no grams contribute nothing.
 
-    Scale shape: pure per-row expression work, NO shuffle — the
+    Scale shape: pure per-row expression work, NO key shuffle — the
     portable polynomial hash keeps the oracle exact, and only the
-    8-byte fingerprints (never gram text) leave the map stage.
+    8-byte fingerprints (never gram text) leave the map stage. An
+    input scanned as fewer partitions than the cluster has slots is
+    spread first (rebalance_for_cpu: one parquet file of documents
+    otherwise winnows on one core); call :func:`release` on the result
+    when done with it.
     """
+    pre = rebalance_for_cpu(df.select(key_col, content_col))
     toks = X.lower_tokens(content_col)
     grams = X.word_ngrams_ordered(toks, ngram_n)
     hashes = F.transform(grams, lambda g: _poly_hash(g, seed))
@@ -1270,10 +1176,11 @@ def winnow_fingerprints(
             F.array().cast("array<long>")
         )
     )
-    return df.select(
+    out = pre.select(
         F.col(key_col),
         F.explode(F.array_distinct(fps)).alias("fingerprint"),
     )
+    return _with_cached_deps(out, pre)
 
 
 def winnow_overlap_pairs(
@@ -1325,48 +1232,58 @@ def winnow_overlap_pairs(
     return _with_cached_deps(out, fps)
 
 
+def _gram_hash_rows(
+    df: DataFrame,
+    key: Column,
+    content_col: str,
+    ngram_n: int,
+    key_name: str,
+    gram: str = "g",
+    hashed: str = "gh",
+) -> DataFrame:
+    """Distinct ``(key_name, hashed)`` rows: ``key`` beside the md5 of
+    each of its lower-cased word ``ngram_n``-grams (``gram`` names the
+    exploded text column). The hash, never the gram text, rides the
+    shuffle; md5 keeps the operators oracle-checkable (DuckDB has md5,
+    not xxhash64), and no operator outputs it."""
+    return (
+        df.select(
+            key.alias(key_name),
+            F.explode(
+                X.word_ngrams_from_tokens(X.lower_tokens(content_col), ngram_n)
+            ).alias(gram),
+        )
+        .select(key_name, F.md5(gram).alias(hashed))
+        .dropDuplicates()
+    )
+
+
 def ngram_contamination(
     corpus: DataFrame,
     probe: DataFrame,
     content_col: str = "text",
     key_col: str = "doc_id",
     ngram_n: int = 8,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Train/eval contamination check: corpus keys that share ANY
     length-``ngram_n`` word n-gram with the probe (benchmark/eval) set.
 
-    Scale shape: each side explodes to distinct (key, hash(gram)) rows
+    Scale shape: each side explodes to distinct (key, md5(gram)) rows
     — the hash, never the gram text, rides the shuffle — and detection
     is a left-semi equi-join on the hash. The probe side (eval sets are
     small) broadcasts under AQE; corpus-side work is one map pass + one
     semi-join, the same plan at 100 TB.
 
-    hash_fn: "xxhash64" (default — 8-byte rows, collision odds ~2^-64)
-    or "md5" (32-byte hex, SQL-portable: DuckDB has md5 but not
-    xxhash64, which is what makes the operator oracle-checkable).
-
     Returns distinct contaminated corpus keys as column ``key_col``.
     """
-    hasher = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-
-    def grams(df: DataFrame, out: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(key_col).alias(out),
-                F.explode(
-                    X.word_ngrams_from_tokens(
-                        X.lower_tokens(content_col), ngram_n
-                    )
-                ).alias("g"),
-            )
-            .select(out, hasher("g").alias("gh"))
-            .dropDuplicates()
-        )
-
-    probe_hashes = grams(probe, "pk").select("gh").dropDuplicates()
+    key = F.col(key_col)
+    probe_hashes = (
+        _gram_hash_rows(probe, key, content_col, ngram_n, "pk")
+        .select("gh")
+        .dropDuplicates()
+    )
     return (
-        grams(corpus, key_col)
+        _gram_hash_rows(corpus, key, content_col, ngram_n, key_col)
         .join(probe_hashes, "gh", "left_semi")
         .select(key_col)
         .dropDuplicates()
@@ -1444,7 +1361,6 @@ def source_similarity_matrix(
     group_col: str = "source",
     content_col: str = "text",
     ngram_n: int = 8,
-    hash_fn: str = "xxhash64",
     round_dp: int = 6,
 ) -> DataFrame:
     """Corpus-LEVEL overlap diagnostics: pairwise n-gram Jaccard
@@ -1457,31 +1373,17 @@ def source_similarity_matrix(
     group_a < group_b, over each group's DISTINCT gram-hash set.
 
     Scale shape: the corpus reduces map-side to distinct
-    (group, hash(gram)) rows — hashes ride the shuffle, never text;
+    (group, md5(gram)) rows — hashes ride the shuffle, never text;
     per-group set sizes are one grouped count; the intersection
     self-join is keyed on the gram hash, where each gram shared by k
     groups emits C(k,2) pairs — bounded by |groups|² per gram, and
     |groups| is mixture-sized (tens), never corpus-sized.
-    ``hash_fn='md5'`` is the SQL-portable oracle mode (the
-    ngram_contamination switch).
     """
     from ._common import col_ref
 
-    hasher = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-    g = col_ref(group_col)
-    grams = (
-        df.select(
-            g.alias("__g"),
-            F.explode(
-                X.word_ngrams_from_tokens(
-                    X.lower_tokens(content_col), ngram_n
-                )
-            ).alias("__gram"),
-        )
-        .select("__g", hasher("__gram").alias("__gh"))
-        .dropDuplicates()
-        .persist()
-    )
+    grams = _gram_hash_rows(
+        df, col_ref(group_col), content_col, ngram_n, "__g", "__gram", "__gh"
+    ).persist()
     sizes = grams.groupBy("__g").agg(F.count(F.lit(1)).alias("__n"))
     inter = (
         grams.select(F.col("__g").alias("group_a"), "__gh")
@@ -1598,7 +1500,6 @@ def ngram_novelty(
     content_col: str = "text",
     key_col: str = "doc_id",
     ngram_n: int = 8,
-    hash_fn: str = "xxhash64",
     round_dp: int = 6,
 ) -> DataFrame:
     """Per-probe-document n-gram novelty: the fraction of each probe
@@ -1613,29 +1514,18 @@ def ngram_novelty(
     with fewer than ``ngram_n`` tokens emit nothing (no grams to
     judge).
 
-    Scale shape: both sides explode to distinct (key, hash(gram)) rows
+    Scale shape: both sides explode to distinct (key, md5(gram)) rows
     — the hash, never the gram text, rides the shuffle — known-gram
     detection is one equi-join against the corpus's distinct gram
     hashes, then one probe-keyed rollup.
     """
-    hasher = F.xxhash64 if hash_fn == "xxhash64" else F.md5
-
-    def grams(df: DataFrame, out: str) -> DataFrame:
-        return (
-            df.select(
-                F.col(key_col).alias(out),
-                F.explode(
-                    X.word_ngrams_from_tokens(
-                        X.lower_tokens(content_col), ngram_n
-                    )
-                ).alias("g"),
-            )
-            .select(out, hasher("g").alias("gh"))
-            .dropDuplicates()
-        )
-
-    corpus_hashes = grams(corpus, "ck").select("gh").dropDuplicates()
-    pg = grams(probe, key_col)
+    key = F.col(key_col)
+    corpus_hashes = (
+        _gram_hash_rows(corpus, key, content_col, ngram_n, "ck")
+        .select("gh")
+        .dropDuplicates()
+    )
+    pg = _gram_hash_rows(probe, key, content_col, ngram_n, key_col)
     return (
         pg.join(
             corpus_hashes.withColumn("__known", F.lit(1)), "gh", "left"

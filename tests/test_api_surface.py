@@ -13,7 +13,17 @@ import pkgutil
 
 import cloud_native_medical_data_etl_pipeline_spark as pkg
 
-_SWITCH_NAMES = {"engine", "impl", "shingle_mode"}
+_SWITCH_NAMES = {
+    "engine",
+    "impl",
+    "shingle_mode",
+    "verify",
+    "hash_fn",
+    "chunk_cap",
+    "allow_driver_gather",
+    "max_gather_rows",
+    "planes",
+}
 
 
 def _is_switch(name: str) -> bool:

@@ -157,24 +157,28 @@ def test_ngram_jaccard_pairs(spark):
 def test_banded_lsh_recall_vs_exact(spark):
     """OR-amplified banded sign-LSH must recover most true pairs: the
     r2 single-band blocking had ~19% recall at threshold 0.4; the
-    12-band default is measured >= 80% here against the exact gated
-    all-pairs path, with perfect precision (every emitted pair is
-    cosine-verified, so emitted ⊆ exact)."""
+    12-band default is measured >= 80% here against an exact NumPy
+    brute force over the same vectors, with perfect precision (every
+    emitted pair is cosine-verified, so emitted ⊆ exact)."""
+    import numpy as np
+
     import __spark_entry__ as entry_mod
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    exact = {
-        (r["key_a"], r["key_b"])
-        for r in dedup.embedding_near_dups(
-            emb, threshold=0.4, allow_driver_gather=True
-        ).collect()
-    }
+    rows = emb.select("vec_id", "embedding").collect()
+    keys = np.array([r["vec_id"] for r in rows])
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    sims = np.round((mat @ mat.T) / np.outer(norms, norms), 6)
+    ia, ib = np.nonzero((sims >= 0.4) & (keys[:, None] < keys[None, :]))
+    exact = set(zip(keys[ia].tolist(), keys[ib].tolist()))
     banded = {
         (r["key_a"], r["key_b"])
         for r in dedup.embedding_near_dups(
             emb, threshold=0.4, plane_bands=entry_mod._HP_BANDS
         ).collect()
     }
+    assert exact
     assert banded <= exact  # precision 1.0: only verified-true pairs
     assert len(banded) >= 0.8 * len(exact), (len(banded), len(exact))
 
@@ -505,28 +509,33 @@ def test_release_unpersists_operator_caches(spark):
         assert not (_cached_ids(spark) - base)
 
 
-def test_banded_chunk_split_and_pair_verify_equivalence(spark):
-    """Hot-bucket chunking and the pairs-verify mode are physical
-    re-shapes only: a tiny chunk_cap (forces K>1 in every bucket) and
-    verify='pairs' must both emit exactly the unsplit group-GEMM pair
-    set."""
+def test_banded_chunk_split_and_pair_verify_equivalence(spark, monkeypatch):
+    """Hot-bucket chunking and the pair-verify kernel are physical
+    re-shapes only: with the module constants moved so that the
+    occupancy pass runs, every bucket splits, or the r=4 bands take the
+    JVM per-pair kernel, the operator emits exactly the unsplit
+    group-GEMM pair set."""
     import __spark_entry__ as entry_mod
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    n = emb.count()
 
-    def run(**kw):
-        out = dedup.embedding_near_dups(
-            emb, threshold=0.4, plane_bands=entry_mod._HP_BANDS, **kw
-        )
-        rows = sorted(map(tuple, out.collect()))
+    def run(**consts):
+        with monkeypatch.context() as mp:
+            for name, value in consts.items():
+                mp.setattr(dedup, name, value)
+            out = dedup.embedding_near_dups(
+                emb, threshold=0.4, plane_bands=entry_mod._HP_BANDS
+            )
+            rows = sorted(map(tuple, out.collect()))
         dedup.release(out)
         return rows
 
-    baseline = run(chunk_cap=None)
+    baseline = run()                          # corpus under the cap
     assert len(baseline) > 0
-    assert run(chunk_cap=8) == baseline      # every bucket splits
-    assert run() == baseline                 # default cap, K=1 path
-    assert run(verify="pairs") == baseline   # JVM per-pair verification
+    assert run(CHUNK_CAP=n - 1) == baseline   # occupancy pass, K=1
+    assert run(CHUNK_CAP=8) == baseline       # every bucket splits
+    assert run(PAIR_VERIFY_MIN_PLANES=4) == baseline  # JVM per-pair
 
 
 # ---------------------------------------------------------------------------
@@ -603,16 +612,12 @@ def test_centroid_outlier_flags_planted_outlier(spark):
     assert out[5] == 1.0
 
 
-def test_embedding_near_dups_rejects_bad_verify(spark):
+def test_embedding_near_dups_requires_blocking(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<float>"
     )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="verify"):
-        dedup.embedding_near_dups(
-            df, threshold=0.5, plane_bands=[[[1.0, 0.0]]], verify="pair"
-        ).count()
+    with pytest.raises(ValueError, match="block_col or plane_bands"):
+        dedup.embedding_near_dups(df, threshold=0.5)
 
 
 def test_cosine_topk_batch_matches_single_query_loop(spark):
@@ -696,7 +701,7 @@ def test_source_similarity_matrix(spark):
         (3, "totally different words that never repeat anywhere else ok", "C"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = dedup.source_similarity_matrix(df, ngram_n=3, hash_fn="md5")
+    out = dedup.source_similarity_matrix(df, ngram_n=3)
     got = {
         (r["group_a"], r["group_b"]): (r["n_a"], r["n_b"], r["n_common"], r["jaccard"])
         for r in out.collect()
@@ -850,7 +855,7 @@ def test_ngram_novelty_graded(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in dedup.ngram_novelty(corpus, probe, ngram_n=4, hash_fn="md5").collect()
+        for r in dedup.ngram_novelty(corpus, probe, ngram_n=4).collect()
     }
     assert set(out) == {10, 11, 12}
     assert out[10]["novelty_rate"] == 0.0
@@ -1141,8 +1146,8 @@ def test_minhash_arrow_equals_sql_on_unicode_edge_whitespace(spark):
 
 
 def test_embedding_near_dups_string_keys_group_verify(spark):
-    """The banded group-verify path must accept non-integer keys (the
-    block_col and verify='pairs' paths always did)."""
+    """The banded group-verify kernel must accept non-integer keys (the
+    block_col path and the pair kernel always did)."""
     rows = [
         ("doc-a", [1.0, 0.0, 0.0, 0.0]),
         ("doc-b", [1.0, 0.001, 0.0, 0.0]),

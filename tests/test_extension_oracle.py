@@ -61,7 +61,7 @@ def test_contamination_md5_matches_oracle(spark, duck):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     probe = docs.where(F.col("doc_id") % 100 == 0)
     got = _rows(
-        dedup.ngram_contamination(docs, probe, ngram_n=8, hash_fn="md5")
+        dedup.ngram_contamination(docs, probe, ngram_n=8)
     )
     n = 8
     sql = f"""

@@ -595,6 +595,22 @@ def test_q20_banded_group_path_ships_stored_vector_type(spark):
     assert "as double" not in plan.split("ArrowEvalPython")[0].lower(), plan
 
 
+def test_q20b_wide_bands_verify_per_pair(spark):
+    """The verify kernel follows from the planes per band: q20b's r=12
+    bands reach dedup.PAIR_VERIFY_MIN_PLANES, so its candidates are
+    verified in a JVM join with no grouped Arrow stage (q20's r=4 bands
+    keep the per-bucket GEMM, pinned above)."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators.dedup import (
+        release,
+    )
+
+    df = entry_mod.queries()["q20b_embedding_near_dups_hi"](spark, SF_DIR)
+    plan = _executed_plan(df)
+    release(df)
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "zip_with(v_a" in plan, plan
+
+
 def test_q20_group_verify_pin_reads_min_partition_size(spark, scale_sf_dir):
     """The group-verify exchange is pinned to the slot count only while
     the banded frame's plan stats stay under slots x AQE's
@@ -712,4 +728,23 @@ def test_q15_rebalances_kernels_at_scale(spark, scale_sf_dir):
     assert "InMemoryRelation" in plan, plan
     # the single-tokenization invariant must survive the rebalance
     assert plan.count("split(") == 1, plan[:2000]
+    release(df)
+
+
+def test_q69_rebalances_winnowing_at_scale(spark, scale_sf_dir):
+    """At bench scale `documents` scans as fewer partitions than slots,
+    so winnow_fingerprints spreads the text over every slot before its
+    per-row kernel (round-robin exchange plus the cache barrier that
+    keeps the projections above it), and the cache rides the result
+    for release(). Plan-only: nothing is executed."""
+    from cloud_native_medical_data_etl_pipeline_spark.operators.dedup import (
+        release,
+    )
+
+    _skip_if_scan_fills_slots(spark, scale_sf_dir, "documents")
+    df = entry_mod.queries()["q69_winnow_fingerprints"](spark, scale_sf_dir)
+    plan = _executed_plan(df)
+    assert "RoundRobinPartitioning" in plan, plan
+    assert "InMemoryRelation" in plan, plan
+    assert df._cached_deps, "the rebalance cache is not recorded for release()"
     release(df)
