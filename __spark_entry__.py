@@ -5784,7 +5784,7 @@ FROM flat GROUP BY sponsor_name
 # surviving partial pages change the per-sponsor counts.  Window-
 # seated r8 (the r7 verdict's task 6 registration).
 # ---------------------------------------------------------------------------
-_FDA_RS_LIMIT = 350  # 4 page windows at BATCH_SIZE=99: pages 0 and 2 fault
+_FDA_RS_LIMIT = 350  # 4 page windows at FDA_BATCH_SIZE=99: pages 0 and 2 fault
 
 
 def q123b_fda_retry_scan(spark, sf_dir):

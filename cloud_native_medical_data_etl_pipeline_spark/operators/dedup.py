@@ -867,10 +867,11 @@ def _banded_embedding_near_dups(
     if pair_verify:
         from ..functions import vectors as V
 
-        # base feeds the (narrow) band explode AND the two vector-side
-        # verification joins — persist so the scan+cast runs once
-        base = base.persist()
-        narrow = base.select("k", F.explode(_buckets("v")).alias("bucket"))
+        # base feeds both sides of the (bucket) self-join AND the two
+        # vector-side verification joins — persist it with its bucket
+        # codes so the scan, the cast and the plane GEMM run once
+        base = base.select("k", "v", _buckets("v").alias("codes")).persist()
+        narrow = base.select("k", F.explode("codes").alias("bucket"))
         # same shared key_a exchange as _minhash_verify_pairs (r17):
         # the pair dedup and the key_a vector join ride one shuffle
         cand = (

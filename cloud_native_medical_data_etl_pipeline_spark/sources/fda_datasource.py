@@ -37,10 +37,7 @@ import time
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-BATCH_SIZE = 99       # API page ceiling (fda_extractor.py:64-65)
-RATE_LIMIT_S = 0.5    # inter-page sleep (fda_extractor.py:90)
-MAX_RETRIES = 3
-API_URL = "https://api.fda.gov/drug/drugsfda.json"
+from .rest import FDA_BATCH_SIZE, FDA_URL, MAX_RETRIES, RATE_LIMIT_S, TIMEOUT_S
 
 
 class _PageRange(InputPartition):
@@ -103,7 +100,7 @@ class _Reader(DataSourceReader):
         self.mock_fail_every = int(options.get("mock_fail_every", "0"))
 
     def partitions(self):
-        step = BATCH_SIZE * self.pages_per_partition
+        step = FDA_BATCH_SIZE * self.pages_per_partition
         return [
             _PageRange(skip, min(step, self.limit - skip))
             for skip in range(0, self.limit, step)
@@ -112,7 +109,7 @@ class _Reader(DataSourceReader):
     def read(self, partition: _PageRange):
         skip, remaining = partition.skip, partition.limit
         while remaining > 0:
-            page = min(BATCH_SIZE, remaining)
+            page = min(FDA_BATCH_SIZE, remaining)
             records = self._fetch_page(skip, page)
             for rec in records:
                 yield (json.dumps(rec, sort_keys=True),)
@@ -128,8 +125,9 @@ class _Reader(DataSourceReader):
         through the same loop, so fault-injected scans (mock_fail_every)
         exercise the production retry/backoff logic, not a test
         double.  Backoff sleeps are skipped in mock mode (determinism
-        and test speed; the backoff schedule itself is unit-covered in
-        sources/rest.py)."""
+        and test speed).  The schedule is rest.fetch_with_retry's, which
+        tests/test_ingest_sources.py checks; this loop raises on
+        exhaustion where that one returns None."""
         last_err: Exception | None = None
         for attempt in range(MAX_RETRIES):
             try:
@@ -144,7 +142,7 @@ class _Reader(DataSourceReader):
 
     def _do_fetch(self, skip: int, limit: int, attempt: int) -> list[dict]:
         if self.mock:
-            page_idx = skip // BATCH_SIZE
+            page_idx = skip // FDA_BATCH_SIZE
             if (
                 self.mock_fail_every
                 and page_idx % self.mock_fail_every == 0
@@ -167,7 +165,7 @@ class _Reader(DataSourceReader):
                 f"{self.end_date.replace('-', '')}]"
             )
         qs = urllib.parse.urlencode(params)
-        with urllib.request.urlopen(f"{API_URL}?{qs}", timeout=30) as r:
+        with urllib.request.urlopen(f"{FDA_URL}?{qs}", timeout=TIMEOUT_S) as r:
             return json.loads(r.read().decode("utf-8")).get("results", [])
 
 

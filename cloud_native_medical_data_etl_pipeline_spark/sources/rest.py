@@ -41,6 +41,7 @@ CT_PAGE_CEILING = 1000    # API hard limit (clinicaltrials_extractor.py:87)
 RATE_LIMIT_S = 0.5
 MAX_RETRIES = 3
 TIMEOUT_S = 30
+FDA_URL = "https://api.fda.gov/drug/drugsfda.json"
 
 
 def _default_http_get(url: str, params: dict[str, Any]) -> dict:
@@ -86,7 +87,7 @@ def fetch_fda_records(
     start_date: str,
     end_date: str,
     limit: int = 1000,
-    url: str = "https://api.fda.gov/drug/drugsfda.json",
+    url: str = FDA_URL,
     http_get: HttpGet = _default_http_get,
     sleep: Callable[[float], None] = time.sleep,
 ) -> list[dict]:

@@ -148,11 +148,15 @@ def test_fetch_fda_retry_then_fail():
         attempts.append(1)
         raise OSError("boom")
 
+    sleeps = []
     out = rest.fetch_fda_records(
-        "20240101", "20240131", limit=10, http_get=flaky, sleep=lambda s: None
+        "20240101", "20240131", limit=10, http_get=flaky, sleep=sleeps.append
     )
     assert out == []
     assert len(attempts) == 3  # reference retry count
+    # linear backoff 2*(attempt+1), none after the last attempt, and no
+    # rate-limit pause once the scan gives up (fda_extractor.py:102-123)
+    assert sleeps == [2, 4]
 
 
 def test_fetch_ct_cursor():

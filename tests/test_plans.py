@@ -599,7 +599,9 @@ def test_q20b_wide_bands_verify_per_pair(spark):
     """The verify kernel follows from the planes per band: q20b's r=12
     bands reach dedup.PAIR_VERIFY_MIN_PLANES, so its candidates are
     verified in a JVM join with no grouped Arrow stage (q20's r=4 bands
-    keep the per-bucket GEMM, pinned above)."""
+    keep the per-bucket GEMM, pinned above). The bucket-code GEMM runs
+    once, into the persisted frame both sides of the (bucket) self-join
+    read."""
     from cloud_native_medical_data_etl_pipeline_spark.operators.dedup import (
         release,
     )
@@ -609,6 +611,10 @@ def test_q20b_wide_bands_verify_per_pair(spark):
     release(df)
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "zip_with(v_a" in plan, plan
+    # a cached plan prints under every scan of it, repeating its lines
+    # verbatim; a second evaluation would carry its own expression ids
+    evals = {ln.strip(" :+-") for ln in plan.splitlines() if "ArrowEvalPython" in ln}
+    assert len(evals) == 1, plan
 
 
 def test_q20_group_verify_pin_reads_min_partition_size(spark, scale_sf_dir):
